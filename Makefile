@@ -3,6 +3,10 @@
 # full-registry DuckDB oracle mirror at the driver's sf0.01.
 #
 #   make test      - pytest suite (sf0.001 fixtures, tuned session)
+#   make test-split - the same suite, one pytest process (fresh JVM) per
+#                    tests/test_*.py file; fails if any file fails. Use it
+#                    where one process holding every file's state runs out
+#                    of memory.
 #   make oracle    - scripts/check_correctness.py, full registry, sf0.01
 #   make plans     - regenerate tests/plan_snapshots.json (review the diff!)
 #   make bench     - bench.py at $SPARK_GRAFT_SF_DIR (default sf0.1)
@@ -24,7 +28,7 @@
 
 PY ?= python
 
-.PHONY: check test oracle plans bench close
+.PHONY: check test test-split oracle plans bench close
 
 check: test oracle
 	@echo "CHECK GREEN: pytest + plan gate + full oracle mirror"
@@ -35,6 +39,15 @@ close: check
 
 test:
 	$(PY) -m pytest tests/ -q
+
+test-split:
+	@failed=""; \
+	for f in tests/test_*.py; do \
+		echo "== $$f"; \
+		$(PY) -m pytest "$$f" -q -p no:cacheprovider || failed="$$failed $$f"; \
+	done; \
+	if [ -n "$$failed" ]; then echo "TEST-SPLIT FAILED:$$failed"; exit 1; fi; \
+	echo "TEST-SPLIT GREEN"
 
 oracle:
 	$(PY) scripts/check_correctness.py /root/testdata/sf0.01

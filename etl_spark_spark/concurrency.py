@@ -24,18 +24,21 @@ def run_concurrently(*thunks):
     paths and history reads are fenced to strictly-earlier partitions).
     ``InheritableThread`` propagates and cleans up JVM thread-locals
     (job descriptions, scheduler pools) per the PySpark threading
-    contract. The first exception propagates after every thread has
-    joined, so no action is left silently running."""
+    contract. Every thread is joined before anything is raised, so
+    no action is left silently running. If thunks fail, the error of
+    the LOWEST-INDEX failing thunk propagates (deterministic, whatever
+    the completion order), with every other failure listed in its
+    notes (``add_note``), so no error is dropped."""
     from pyspark import InheritableThread
 
     results: list = [None] * len(thunks)
-    errors: list[BaseException] = []
+    errors: list[BaseException | None] = [None] * len(thunks)
 
     def _run(i: int, fn) -> None:
         try:
             results[i] = fn()
         except BaseException as ex:  # noqa: BLE001 — crosses threads
-            errors.append(ex)
+            errors[i] = ex
 
     threads = [
         InheritableThread(target=_run, args=(i, fn))
@@ -45,6 +48,10 @@ def run_concurrently(*thunks):
         t.start()
     for t in threads:
         t.join()
-    if errors:
-        raise errors[0]
+    failed = [(i, ex) for i, ex in enumerate(errors) if ex is not None]
+    if failed:
+        first = failed[0][1]
+        for j, later in failed[1:]:
+            first.add_note(f"run_concurrently: thunk {j} also failed: {later!r}")
+        raise first
     return results

@@ -14,10 +14,11 @@ These generalize the reference's ressarcimento semantics
 
 - ``reconcile_full_outer``: matched rows ∪ right-only ∪ left-only. The
   reference builds this from two left-anti joins + unionByName
-  (utils_ressarcimento.py:256-270); we offer that faithful 3-branch form
-  (``style='anti_union'``) and the idiomatic single full-outer join
-  (``style='full_outer'``) — one shuffle instead of three joins —
-  which is the right plan at scale.
+  (utils_ressarcimento.py:256-270); we offer that anti-join + union
+  form as two branches (``style='anti_union'``: left join ∪ right-only,
+  the reference's matched and left-only branches being one left join)
+  and the idiomatic single full-outer join (``style='full_outer'``) —
+  one shuffle instead of two joins — which is the right plan at scale.
 """
 
 from __future__ import annotations
@@ -57,16 +58,17 @@ def reconcile_full_outer(
 
     ``style='full_outer'``: single full-outer join with key columns
     coalesced — one shuffle, the scalable plan.
-    ``style='anti_union'``: inner ∪ (left anti right) ∪ (right anti left)
-    via unionByName null-widening — reference-faithful 3-branch form.
+    ``style='anti_union'``: (left ⟕ right) ∪ (right anti left) via
+    unionByName null-widening — the reference's inner ∪ left-only ∪
+    right-only with its first two branches as one left join, so each
+    input is planned twice, not three times.
     Both produce the same rows; column order may differ.
     """
     keys = list(keys)
     if style == "anti_union":
-        matched = left.join(right, keys, "inner")
-        left_only = left.join(right, keys, "left_anti")
+        matched_or_left = left.join(right, keys, "left")
         right_only = right.join(left, keys, "left_anti")
-        return union_by_name(matched, left_only, right_only)
+        return union_by_name(matched_or_left, right_only)
     if style == "full_outer":
         joined = left.alias("l").join(right.alias("r"), keys, "full_outer")
         # after a USING-style full outer join Spark already coalesces the

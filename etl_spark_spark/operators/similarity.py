@@ -67,17 +67,6 @@ def cosine_topk(
     )
 
 
-def unit_vector(vec_col: Column | str) -> Column:
-    """Pre-normalize to unit length (double components). Doing this
-    ONCE per vector turns each pair comparison into a single dot
-    product — at N vectors the norm fold runs N times instead of N²."""
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    from ..functions.vectors import norm
-
-    n = norm(v)
-    return F.transform(v, lambda x: x.cast("double") / n)
-
-
 def _unit_rows(mat):
     """Unit-normalize rows with DIMENSION-SEQUENTIAL accumulation —
     the same IEEE addition order as a SQL list_reduce / F.aggregate

@@ -21,8 +21,10 @@ Scale shape per daily run at 100 TB: the stats index is one
 file-count-sized aggregate (refreshed per ingestion batch, reusable
 across runs); the scan opens only window-overlapping files; the
 transform is one map-side-combinable agg + two broadcast joins; the
-MERGE is one anti-join + union shuffled on the merge key. Nothing
-driver-side grows with history except the file list.
+MERGE is one union of snapshot and batch, shuffled on the merge key
+into one window (``sinks.versioned.keyed_merge``), so the transform
+runs once per day. Nothing driver-side grows with history except the
+file list.
 """
 
 from __future__ import annotations

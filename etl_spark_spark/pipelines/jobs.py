@@ -39,8 +39,8 @@ def run_superdesconto_job(
     today = today or dt.date.today()
     start, end = date_window(today)
     view = best_sale_pipeline(spark, sf_dir, start=start, end=end)
-    # cache: the guard count plus upsert's anti-join and union branches
-    # would otherwise each re-execute the full pipeline (3 scans)
+    # cache: the guard count and upsert's one-pass merge would
+    # otherwise each re-execute the full pipeline (2 scans)
     view = view.persist()
     try:
         n = view.count()

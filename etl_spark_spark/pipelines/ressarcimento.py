@@ -3,9 +3,9 @@
 Reference pipeline (utils_ressarcimento.py:187-278): per-product losses,
 two grouped credit sources unioned and re-aggregated, a windowed group
 total as the allocation denominator, the coalesce-cascade allocation
-``coalesce(perdas/grupo_perda × credito, credito, 0)``, and a 3-branch
-full-outer reconciliation (matched ∪ credit-only ∪ loss-only) with final
-null-fill.
+``coalesce(perdas/grupo_perda × credito, credito, 0)``, and a
+full-outer reconciliation (matched ∪ credit-only ∪ loss-only, built as
+a left join ∪ one anti-join) with final null-fill.
 
 Fixture mapping: supplier-level "losses" = discounts given on lineitem;
 group hierarchy = supplier's nation; "credits" come from two sources

@@ -68,13 +68,15 @@ enough, and a real catalog covers row-level deletes.
 
 from __future__ import annotations
 
+import operator
 import os
 import shutil
 import uuid
 from collections.abc import Sequence
+from functools import reduce
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 _VDIR = "_v"
@@ -362,7 +364,9 @@ def merge_into_versioned(
       appended (with ``False``, an update/delete-only merge).
 
     First merge into an empty table bootstraps it from ``source_df``
-    (inserts only). Returns the committed version number.
+    (inserts only). Otherwise the snapshot is :func:`keyed_merge` of
+    the current version and ``source_df`` — one pass over each input.
+    Returns the committed version number.
 
     Concurrency: full optimistic loop — the merge is computed against
     the version observed at read time and committed with a CAS on that
@@ -383,26 +387,9 @@ def merge_into_versioned(
             merged = source_df
         else:
             target = read_versioned(spark, path, cur, fmt)
-            src_keys = source_df.select(*keys).distinct()
-            untouched = target.join(src_keys, keys, "left_anti")
-            if when_matched == "update":
-                replaced = source_df
-                if not insert_unmatched:
-                    replaced = source_df.join(
-                        target.select(*keys).distinct(), keys, "left_semi"
-                    )
-                merged = untouched.unionByName(
-                    replaced, allowMissingColumns=True
-                )
-            else:  # delete matched
-                merged = untouched
-                if insert_unmatched:
-                    inserts = source_df.join(
-                        target.select(*keys).distinct(), keys, "left_anti"
-                    )
-                    merged = merged.unionByName(
-                        inserts, allowMissingColumns=True
-                    )
+            merged = keyed_merge(
+                target, source_df, keys, when_matched, insert_unmatched
+            )
         try:
             return write_version(
                 spark, merged, path, fmt, expected_current=cur
@@ -412,6 +399,67 @@ def merge_into_versioned(
     raise ConcurrentWriteError(
         f"merge lost the commit race {max_retries} times"
     ) from last_err
+
+
+def keyed_merge(
+    target: DataFrame,
+    source: DataFrame,
+    keys: Sequence[str],
+    when_matched: str = "update",
+    insert_unmatched: bool = True,
+) -> DataFrame:
+    """The rows a MERGE of ``source`` into ``target`` on ``keys``
+    leaves behind, planned as ONE pass over each input: both sides are
+    tagged and unioned by name, one window partitioned on ``keys``
+    flags every row with whether its key has a source row and a target
+    row, and the clause table keeps
+
+    ============================  ===============  ====================
+    clauses                       target row kept  source row kept
+    ============================  ===============  ====================
+    update, insert_unmatched      unmatched        always
+    update                        unmatched        matched
+    delete, insert_unmatched      unmatched        unmatched
+    delete                        unmatched        never
+    ============================  ===============  ====================
+
+    This is the anti-join + union expansion (target ⟕anti source ∪
+    source, or its semi/anti variants) without planning ``source``
+    twice, so a costly source (scan + aggregate + broadcasts) runs
+    once and a nondeterministic one cannot disagree with itself.
+    Equi-join semantics are kept: a row with a NULL key column never
+    matches, duplicate keys on either side all follow their clause.
+    Columns are the target's, in order, then source-only columns;
+    a delete-only merge keeps exactly the target's columns and types.
+    """
+    keys = list(keys)
+    side, has_src, has_tgt = "__merge_side", "__merge_has_src", "__merge_has_tgt"
+    tagged = target.withColumn(side, F.lit(0)).unionByName(
+        source.withColumn(side, F.lit(1)), allowMissingColumns=True
+    )
+    # the window groups NULL keys together; an equi-join never matches them
+    keyed = reduce(operator.and_, [F.col(k).isNotNull() for k in keys])
+    w = Window.partitionBy(*keys)
+    flagged = tagged.select(
+        "*",
+        (keyed & (F.max(side).over(w) == 1)).alias(has_src),
+        (keyed & (F.min(side).over(w) == 0)).alias(has_tgt),
+    )
+    if when_matched == "update":
+        src_keep = F.lit(True) if insert_unmatched else F.col(has_tgt)
+    else:
+        src_keep = ~F.col(has_tgt) if insert_unmatched else F.lit(False)
+    kept = flagged.filter(
+        F.when(F.col(side) == 1, src_keep).otherwise(~F.col(has_src))
+    )
+    if when_matched == "delete" and not insert_unmatched:
+        return kept.select(
+            *[
+                F.col(f.name).cast(f.dataType).alias(f.name)
+                for f in target.schema.fields
+            ]
+        )
+    return kept.drop(side, has_src, has_tgt)
 
 
 def apply_snapshot_delta(

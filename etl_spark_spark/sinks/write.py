@@ -9,10 +9,12 @@ This engine writes with Spark executors:
   partitioning and bucketing (bucketing pre-shuffles recurring join keys
   so later joins are exchange-free).
 - ``upsert``  — keyed MERGE. On a Delta/Iceberg catalog this should be
-  ``MERGE INTO`` SQL; without one (this test harness) we emulate with the
-  standard anti-join + union + atomic directory swap, which preserves the
-  reference's MERGE-on-key semantics (etl_job.py:79-85: target rows whose
-  key appears in the source are replaced).
+  ``MERGE INTO`` SQL; without one (this test harness) we emulate it with
+  ``sinks.versioned.keyed_merge`` (target and source unioned, one window
+  on the key decides which rows survive, each input planned once) + an
+  atomic directory swap, which preserves the reference's MERGE-on-key
+  semantics (etl_job.py:79-85: target rows whose key appears in the
+  source are replaced).
 
 The empty-result guard uses ``df.isEmpty()`` — a cheap limit-1 job — not
 the reference's collect-then-``.empty`` check (etl_job.py:102).
@@ -23,6 +25,8 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .versioned import keyed_merge
 
 
 def write(
@@ -195,8 +199,10 @@ def upsert(
     """MERGE ``source_df`` into the table at ``target_path`` on ``keys``:
     matched target rows are replaced, unmatched source rows appended.
 
-    Emulation for plain-parquet targets: target ⟕anti source ∪ source,
-    written to a temp dir then swapped. With a Delta/Iceberg catalog,
+    Emulation for plain-parquet targets: the rows of target ⟕anti
+    source ∪ source, computed in one pass by
+    :func:`~etl_spark_spark.sinks.versioned.keyed_merge`, written to a
+    temp dir then swapped. With a Delta/Iceberg catalog,
     use ``MERGE INTO`` instead (same interface, engine-managed ACID).
 
     When the target is Hive-partitioned, pass ``partition_by`` and ONLY
@@ -231,8 +237,7 @@ def upsert(
         )
         return
     existing = spark.read.format(fmt).load(target_path)
-    kept = existing.join(source_df.select(*keys).distinct(), keys, "left_anti")
-    merged = kept.unionByName(source_df, allowMissingColumns=True)
+    merged = keyed_merge(existing, source_df, keys)
     tmp = tempfile.mkdtemp(prefix="upsert_", dir=str(target.parent))
     swap = str(target) + ".old"
     if Path(swap).exists():  # stale backup from an earlier crash —
@@ -286,8 +291,7 @@ def _upsert_partitions(
         ],
     )
     existing = spark.read.format(fmt).load(str(target)).filter(pred)
-    kept = existing.join(source_df.select(*keys).distinct(), keys, "left_anti")
-    merged = kept.unionByName(source_df, allowMissingColumns=True)
+    merged = keyed_merge(existing, source_df, keys)
     tmp = tempfile.mkdtemp(prefix="upsert_", dir=str(target.parent))
     try:
         write(merged, tmp, mode="overwrite", partition_by=pcols, fmt=fmt)

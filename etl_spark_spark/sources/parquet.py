@@ -110,21 +110,17 @@ def read_date_range_indexed(
     [start, end + 1 day] — a superset of the half-open window, so the
     residual filter restores exactness; NULL-stat files are kept.
     Returns a ``stats_index.PrunedScan`` (df, n_files_read,
-    n_files_total). Pass a persisted ``index`` to skip the stats scan.
+    n_files_total). Pass a persisted ``index`` to skip the stats scan:
+    the call then runs two jobs, the one-action prune
+    (``stats_index.prune``) and the parquet reader's schema inference.
     """
-    from .stats_index import PrunedScan, build_stats_index, prune_files
+    from .stats_index import PrunedScan, build_stats_index, prune
 
     idx = index if index is not None else build_stats_index(
         spark, path, [date_col]
     )
-    idx = idx.localCheckpoint()  # pin: prune + count read the same stats
-    total = idx.count()
-    files = prune_files(
-        idx,
-        date_col,
-        start.isoformat(),
-        (end + dt.timedelta(days=1)).isoformat(),
-    )
+    hi = (end + dt.timedelta(days=1)).isoformat()
+    files, total = prune(idx, {date_col: (start.isoformat(), hi)})
     if not files:
         return PrunedScan(spark.read.parquet(path).limit(0), 0, total)
     df = read_date_range(spark.read.parquet(*files), date_col, start, end)

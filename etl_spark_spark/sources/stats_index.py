@@ -9,10 +9,13 @@ directories. Two pieces:
   ``input_file_name()`` — the aggregate output is proportional to the
   file count, not the row count, so the index for a 100 TB table with
   100k files is 100k tiny rows.
-- :func:`pruned_parquet_read` consults the index and reads ONLY the
-  files whose [min, max] range overlaps the requested interval. The
-  surviving file list is collected to the driver — bounded by file
-  count (the same list Spark's own FileIndex holds), never by data.
+- :func:`prune` consults the index and returns ONLY the files whose
+  [min, max] range overlaps the requested intervals, plus the total
+  file count, from one driver action; :func:`pruned_parquet_read`,
+  :func:`indexed_read` and ``sources.parquet.read_date_range_indexed``
+  all read through it. The surviving file list is collected to the
+  driver — bounded by file count (the same list Spark's own FileIndex
+  holds), never by data.
 
 Works best on range-sorted / Hive-partitioned layouts (see
 ``sinks.write.write_range_sorted``): sorted layout → disjoint per-file
@@ -27,7 +30,9 @@ file), exactly like parquet row-group stats one level up.
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Sequence
+from functools import reduce
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,14 +51,29 @@ def build_stats_index(
     )
 
 
+def prune(index: DataFrame, ranges: dict[str, tuple]) -> tuple[list[str], int]:
+    """(kept file paths, total file count) from ONE driver action. A
+    file is kept when its [min, max] overlaps EVERY closed ``ranges``
+    interval (NULL stats count as overlapping). Every index row comes
+    back as (file, keep flag), so the kept list and the total are read
+    from the same evaluation of ``index`` without pinning it. Bounded
+    by the file count, like Spark's own FileIndex."""
+    keep = reduce(
+        operator.and_,
+        [
+            (F.col(f"max_{c}").isNull() | (F.col(f"max_{c}") >= lo))
+            & (F.col(f"min_{c}").isNull() | (F.col(f"min_{c}") <= hi))
+            for c, (lo, hi) in ranges.items()
+        ],
+    )
+    rows = index.select("file", keep.alias("keep")).collect()
+    return [r["file"] for r in rows if r["keep"]], len(rows)
+
+
 def prune_files(index: DataFrame, column: str, lo, hi) -> list[str]:
     """File paths whose [min, max] overlaps [lo, hi] (NULL-stat files
     are conservatively kept)."""
-    keep = index.filter(
-        (F.col(f"max_{column}").isNull() | (F.col(f"max_{column}") >= lo))
-        & (F.col(f"min_{column}").isNull() | (F.col(f"min_{column}") <= hi))
-    )
-    return [r["file"] for r in keep.select("file").collect()]
+    return prune(index, {column: (lo, hi)})[0]
 
 
 def pruned_parquet_read(
@@ -73,9 +93,7 @@ def pruned_parquet_read(
     index serves many point/range reads.
     """
     idx = index if index is not None else build_stats_index(spark, path, [column])
-    idx = idx.localCheckpoint()  # pin: prune + count read the same stats
-    total = idx.count()
-    files = prune_files(idx, column, lo, hi)
+    files, total = prune(idx, {column: (lo, hi)})
     if not files:
         empty = spark.read.parquet(path).limit(0)
         return empty, 0, total
@@ -121,17 +139,10 @@ def indexed_read(
     """
     if not ranges:
         raise ValueError("at least one column range required")
-    cols = list(ranges)
-    idx = index if index is not None else build_stats_index(spark, path, cols)
-    idx = idx.localCheckpoint()  # pin: prune + count read the same stats
-    total = idx.count()
-    keep = idx
-    for c, (lo, hi) in ranges.items():
-        keep = keep.filter(
-            (F.col(f"max_{c}").isNull() | (F.col(f"max_{c}") >= lo))
-            & (F.col(f"min_{c}").isNull() | (F.col(f"min_{c}") <= hi))
-        )
-    files = [r["file"] for r in keep.select("file").collect()]
+    idx = index if index is not None else build_stats_index(
+        spark, path, list(ranges)
+    )
+    files, total = prune(idx, ranges)
     if not files:
         df = spark.read.parquet(path).limit(0)
     else:

@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+from pyspark.sql import functions as F
+
 from etl_spark_spark.pipelines.incremental import (
     backfill_years,
     date_window,
@@ -837,3 +840,151 @@ def test_compact_table_clustered_layout_discriminates(spark, sf_dir, tmp_path):
     ranges.sort()
     for (a_lo, a_hi), (b_lo, b_hi) in zip(ranges, ranges[1:]):
         assert a_hi < b_lo  # disjoint = stats actually discriminate
+
+
+def _anti_join_union_merge(target, source, keys, when_matched, insert_unmatched):
+    """The reference MERGE expansion: target ⟕anti source keys ∪ the
+    source rows each clause admits (semi/anti-joined on target keys)."""
+    untouched = target.join(source.select(*keys).distinct(), keys, "left_anti")
+    tgt_keys = target.select(*keys).distinct()
+    if when_matched == "update":
+        admitted = source
+        if not insert_unmatched:
+            admitted = source.join(tgt_keys, keys, "left_semi")
+    elif insert_unmatched:
+        admitted = source.join(tgt_keys, keys, "left_anti")
+    else:
+        return untouched
+    return untouched.unionByName(admitted, allowMissingColumns=True)
+
+
+@pytest.mark.parametrize("insert_unmatched", [True, False])
+@pytest.mark.parametrize("when_matched", ["update", "delete"])
+def test_versioned_merge_equals_anti_join_union(
+    spark, tmp_path, when_matched, insert_unmatched
+):
+    """merge_into_versioned's one-pass merge leaves exactly the rows and
+    columns of the anti-join + union expansion, for every clause pair:
+    NULL key parts never match (on either side), duplicate keys on
+    either side all follow their clause, and a source-only column is
+    appended after the target's columns."""
+    from etl_spark_spark.sinks.versioned import (
+        merge_into_versioned,
+        read_versioned,
+        write_version,
+    )
+
+    target = spark.createDataFrame(
+        [
+            (1, "a", "t1"),
+            (2, "a", "t2"),
+            (2, "a", "t2-dup"),  # duplicate target key, matched
+            (3, "a", "t3"),
+            (4, "a", "t4"),  # duplicate target key, unmatched
+            (4, "a", "t4-dup"),
+            (None, "a", "t-null1"),
+            (5, None, "t-null2"),
+            (None, None, "t-null3"),
+        ],
+        "k1 int, k2 string, v string",
+    )
+    source = spark.createDataFrame(
+        [
+            (2, "a", "s2", 20),
+            (3, "a", "s3", 30),
+            (3, "a", "s3-dup", 31),  # duplicate source key, matched
+            (7, "a", "s7", 70),
+            (7, "a", "s7-dup", 71),  # duplicate source key, unmatched
+            (None, "a", "s-null1", 80),  # same NULL-bearing keys as target
+            (5, None, "s-null2", 90),
+            (None, None, "s-null3", 99),
+        ],
+        "k1 int, k2 string, v string, extra int",
+    )
+    keys = ["k1", "k2"]
+    t = tmp_path / "tbl"
+    write_version(spark, target, t)
+    merge_into_versioned(
+        spark, source, t, keys,
+        when_matched=when_matched, insert_unmatched=insert_unmatched,
+    )
+    got = read_versioned(spark, t)
+    want = _anti_join_union_merge(
+        target, source, keys, when_matched, insert_unmatched
+    )
+    assert got.columns == want.columns
+    assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
+
+
+def test_upsert_matches_versioned_merge(spark, tmp_path):
+    """Both upsert paths (whole-table and partition-scoped) and the
+    versioned MERGE share one keyed merge: same rows for the same
+    inputs, duplicate source keys included."""
+    from etl_spark_spark.sinks.versioned import (
+        merge_into_versioned,
+        read_versioned,
+    )
+
+    base = spark.createDataFrame(
+        [(1, "p", "old1"), (2, "p", "old2"), (3, "q", "old3")],
+        "k int, p string, v string",
+    )
+    src = spark.createDataFrame(
+        [(2, "p", "new2"), (2, "p", "new2b"), (9, "q", "new9")],
+        "k int, p string, v string",
+    )
+    whole, parted, ver = (str(tmp_path / n) for n in ("w", "p", "v"))
+    write(base, whole)
+    write(base, parted, partition_by=["p"])
+    merge_into_versioned(spark, base, ver, ["k"])
+    upsert(spark, src, whole, keys=["k"])
+    upsert(spark, src, parted, keys=["k"], partition_by=["p"])
+    merge_into_versioned(spark, src, ver, ["k"])
+
+    def rows(df):
+        return sorted((r.k, r.p, r.v) for r in df.collect())
+
+    want = rows(read_versioned(spark, ver))
+    assert want == [
+        (1, "p", "old1"), (2, "p", "new2"), (2, "p", "new2b"),
+        (3, "q", "old3"), (9, "q", "new9"),
+    ]
+    assert rows(spark.read.parquet(whole)) == want
+    assert rows(spark.read.parquet(parted)) == want
+
+
+def test_versioned_merge_scans_source_once(spark, tmp_path, monkeypatch):
+    """The snapshot merge_into_versioned writes plans its source ONCE:
+    a costly source (scan + aggregate) must not be re-executed for a
+    key list and again for the rows."""
+    from etl_spark_spark.plans import explain_str
+    from etl_spark_spark.sinks import versioned
+
+    src_path = tmp_path / "feed_src"
+    spark.createDataFrame(
+        [(i % 5, i) for i in range(50)], "k int, x int"
+    ).write.parquet(str(src_path))
+    t = tmp_path / "tbl"
+    versioned.merge_into_versioned(
+        spark, spark.createDataFrame([(0, 0), (9, 9)], "k int, x int"), t, ["k"]
+    )
+    source = (
+        spark.read.parquet(str(src_path)).groupBy("k").agg(F.max("x").alias("x"))
+    )
+    plans = []
+    real_write = versioned.write_version
+
+    def spy(spark_, df, *args, **kwargs):
+        plans.append(explain_str(df))
+        return real_write(spark_, df, *args, **kwargs)
+
+    monkeypatch.setattr(versioned, "write_version", spy)
+    versioned.merge_into_versioned(spark, source, t, ["k"])
+    (plan,) = plans
+    scans = [
+        line for line in plan.splitlines()
+        if line.lstrip().startswith("Location:") and src_path.name in line
+    ]
+    assert len(scans) == 1, plan
+    got = {(r.k, r.x) for r in versioned.read_versioned(spark, t).collect()}
+    assert got == {(k, 45 + k) for k in range(5)} | {(9, 9)}

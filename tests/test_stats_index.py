@@ -214,3 +214,38 @@ def test_indexed_read_empty_and_validation(spark, tmp_path):
     assert [f.name for f in scan.df.schema.fields] == ["id", "v"]
     with raises(ValueError, match="range"):
         indexed_read(spark, path, {})
+
+
+def test_read_date_range_indexed_on_pinned_index_runs_two_jobs(spark, tmp_path):
+    """With a pinned index, the indexed read costs one prune action (the
+    kept files and the total from one collect) plus the parquet reader's
+    schema inference — no re-pin, count or second collect of the index."""
+    import datetime as dt
+    import time
+    import uuid
+
+    from etl_spark_spark.sources.parquet import read_date_range_indexed
+
+    path = str(tmp_path / "feed")
+    days = spark.range(2_000).select(
+        F.col("id"),
+        F.date_add(F.lit("2024-01-01").cast("date"), (F.col("id") % 120).cast("int"))
+        .cast("timestamp")
+        .alias("d"),
+    )
+    write_range_sorted(days, path, ["d"], num_files=8)
+    idx = build_stats_index(spark, path, ["d"]).localCheckpoint()
+
+    sc = spark.sparkContext
+    group = f"indexed-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read_date_range_indexed job count")
+    try:
+        scan = read_date_range_indexed(
+            spark, path, "d", dt.date(2024, 2, 1), dt.date(2024, 2, 10), index=idx
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    assert scan.n_files_total == 8 and 1 <= scan.n_files_read < 8
+    time.sleep(1.0)  # job-start events reach the status store asynchronously
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 2, jobs

@@ -1077,3 +1077,25 @@ def test_run_concurrently_orders_results_and_propagates_errors(spark):
     df = spark.range(1000)
     a, b = run_concurrently(df.count, lambda: df.count() + 1)
     assert (a, b) == (1000, 1001)
+
+
+def test_run_concurrently_raises_lowest_index_error():
+    """With several failing thunks, run_concurrently raises the error of
+    the lowest-index one whatever the completion order (thunk 1 fails
+    first here), and the other failure rides along in its notes instead
+    of being dropped."""
+    import time
+
+    from etl_spark_spark.concurrency import run_concurrently
+
+    def late_boom():
+        time.sleep(0.3)
+        raise ValueError("thunk zero")
+
+    def early_boom():
+        raise KeyError("thunk one")
+
+    with pytest.raises(ValueError, match="thunk zero") as info:
+        run_concurrently(late_boom, early_boom, lambda: "fine")
+    notes = getattr(info.value, "__notes__", [])
+    assert any("thunk 1" in n and "thunk one" in n for n in notes), notes

@@ -619,10 +619,12 @@ def q_price_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     with cum >= ceil(q*n)), same as q_exact_price_quartiles. Scale
     escape for groups with cluster-scale distinct-value counts:
     q_price_outliers_scalable runs both medians through the
-    decomposed path and shares this query's oracle verbatim."""
-    from etl_spark_spark.operators.stats import exact_group_quantiles
+    decomposed path and shares this query's oracle verbatim.
 
-    import os
+    Eager at construction: building the DataFrame pins the per-group
+    median and MAD tables (``localCheckpoint``), so it runs Spark jobs
+    over the full median/MAD lineage even for explain-only callers."""
+    from etl_spark_spark.operators.stats import exact_group_quantiles
 
     li = table(spark, sf_dir, "lineitem", columns=["l_returnflag", "l_extendedprice"])
     med = exact_group_quantiles(
@@ -637,18 +639,16 @@ def q_price_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a materialization each reference re-executes the whole
     # distribution+window quantile lineage from the fact scan (round-13
     # plan audit: 34 scans / 0 ReusedExchange in the scalable twin; the
-    # same §5 move as the round-12 curation pin, same SPARK_GRAFT_PIN
-    # A/B gate). Values unchanged — this truncates lineage only.
-    if os.environ.get("SPARK_GRAFT_PIN", "on") != "off":
-        med = med.localCheckpoint()
+    # same §5 move as the round-12 curation pin). Values unchanged —
+    # this truncates lineage only.
+    med = med.localCheckpoint()
     with_dev = li.join(F.broadcast(med), "l_returnflag").withColumn(
         "__dev", F.abs(F.col("l_extendedprice") - F.col("median_price"))
     )
     mad = exact_group_quantiles(
         with_dev, ["l_returnflag"], "__dev", qs=(0.5,)
     ).select("l_returnflag", F.col("q50").alias("mad"))
-    if os.environ.get("SPARK_GRAFT_PIN", "on") != "off":
-        mad = mad.localCheckpoint()  # same pin: feeds flagged + final
+    mad = mad.localCheckpoint()  # same pin: feeds flagged + final
     flagged = (
         with_dev.join(F.broadcast(mad), "l_returnflag")
         .filter(F.col("__dev") > 10 * F.col("mad"))
@@ -681,9 +681,11 @@ def q_price_outliers_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     end. Value buckets: floor(price/100); deviation buckets:
     floor(dev/100) (both monotone by construction, guards enforced).
     Bit-identical to the plain composite — this query's oracle IS
-    q_price_outliers' oracle, verbatim."""
-    import os
+    q_price_outliers' oracle, verbatim.
 
+    Eager at construction, like q_price_outliers: building the
+    DataFrame pins the median and MAD tables (``localCheckpoint``), so
+    it runs Spark jobs even for explain-only callers."""
     from etl_spark_spark.operators.stats import scalable_group_quantiles
 
     li = table(
@@ -703,8 +705,7 @@ def q_price_outliers_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 34.2 task-seconds for a 10.2 task-second computation; 34 fact
     # scans, 0 ReusedExchange). Lineage truncation only; values
     # unchanged (shares q_price_outliers' oracle verbatim).
-    if os.environ.get("SPARK_GRAFT_PIN", "on") != "off":
-        med = med.localCheckpoint()
+    med = med.localCheckpoint()
     with_dev = li.join(F.broadcast(med), "l_returnflag").withColumn(
         "__dev", F.abs(F.col("l_extendedprice") - F.col("median_price"))
     )
@@ -712,8 +713,7 @@ def q_price_outliers_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_dev, ["l_returnflag"], "__dev",
         bucket_of=F.floor(F.col("__dev") / 100), qs=(0.5,),
     ).select("l_returnflag", F.col("q50").alias("mad"))
-    if os.environ.get("SPARK_GRAFT_PIN", "on") != "off":
-        mad = mad.localCheckpoint()
+    mad = mad.localCheckpoint()
     flagged = (
         with_dev.join(F.broadcast(mad), "l_returnflag")
         .filter(F.col("__dev") > 10 * F.col("mad"))

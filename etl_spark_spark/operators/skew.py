@@ -104,12 +104,6 @@ def fan_out(df: DataFrame, parts: int | None = None) -> DataFrame:
     (integer-exact sums, per-group windows). The repartition is Spark's
     deterministic round-robin (sort-before-repartition stays on), so
     retries cannot duplicate or lose rows."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_FANOUT", "on") == "off":
-        # kill switch: lets a deploy (or an A/B harness) run the exact
-        # pre-fan-out plans without code changes
-        return df
     sc = df.sparkSession.sparkContext
     target = parts or sc.defaultParallelism
     # The partition-count probe (df.rdd.getNumPartitions()) runs the

@@ -100,8 +100,6 @@ def curate_documents(
     # corpus between stages anyway (round-12, guide §5 "caching is
     # worth it when a DataFrame is reused and recomputing is more
     # expensive than the memory pressure").
-    import os
-
     canon = (
         fp.join(
             fp.groupBy("__fp").agg(F.min(id_col).alias("__keep")),
@@ -110,8 +108,7 @@ def curate_documents(
         .filter(F.col(id_col) == F.col("__keep"))
         .drop("__fp", "__keep")
     )
-    if os.environ.get("SPARK_GRAFT_PIN", "on") != "off":
-        canon = canon.localCheckpoint()
+    canon = canon.localCheckpoint()
     # near-dup removal among survivors: drop the higher id of each pair
     toks = canon.select(F.col(id_col), tokens(text_col).alias("__t"))
     if pair_stage == "exact":
@@ -185,8 +182,6 @@ def curate_for_training(
     overlap alone can exceed any sane threshold and silently empty the
     training set.)
     """
-    import os
-
     curated = curate_documents(
         docs, id_col=id_col, text_col=text_col,
         pair_stage=pair_stage, bucket_cap=bucket_cap,
@@ -218,8 +213,7 @@ def curate_for_training(
             bpe_token_count(text_col).cast("long").alias("n_tokens"),
         )
     )
-    if os.environ.get("SPARK_GRAFT_PIN", "on") != "off":
-        feats = feats.localCheckpoint()
+    feats = feats.localCheckpoint()
     pairs = shingle_set(
         feats.select(F.col(id_col), "__t"),
         id_col,

@@ -31,6 +31,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .join_mv import _read_history
+from .stream import drain_available_now
+
 
 def dedup_batch_once(
     batch_df: DataFrame,
@@ -54,18 +57,12 @@ def dedup_batch_once(
     if batch_df.isEmpty():
         return
     spark = batch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        index = (
-            spark.read.parquet(index_path)
-            # strictly-earlier batches only: a replayed batch must NOT
-            # see its own crashed-attempt signatures (ADVICE r2 high)
-            .filter(F.col("__batch_id") < F.lit(batch_id))
-            .drop("__batch_id")
-        )
-        if index.isEmpty():
-            index = None
-    except Exception:
+    # strictly-earlier batches only: a replayed batch must NOT see its
+    # own crashed-attempt signatures (ADVICE r2 high). A missing index
+    # is no history; an unreadable partition raises instead of silently
+    # keeping every duplicate.
+    index = _read_history(spark, index_path, batch_id)
+    if index is not None and index.isEmpty():
         index = None
     kept, new_index = incremental_near_dup(
         batch_df,
@@ -84,6 +81,7 @@ def dedup_batch_once(
     (
         batch_sig.withColumn("__batch_id", F.lit(batch_id).cast("long"))
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("__batch_id")
         .parquet(index_path)
     )
@@ -125,17 +123,10 @@ def run_stream_near_dup(
             min_est=min_est,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(dedup_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream_df.writeStream.foreachBatch(dedup_batch).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        query_name,
+        timeout_sec,
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError(
-                f"stream '{query_name}' did not drain within {timeout_sec}s"
-            )
-    finally:
-        q.stop()

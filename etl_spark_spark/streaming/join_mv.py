@@ -24,6 +24,20 @@ idempotent partition writes = effectively-once view contents, equal
 to a batch join over everything delivered (pinned by test and by the
 registry oracle).
 
+One fold body, three forms: the path-based forms — insert-only
+:func:`apply_join_batch`, banded :func:`apply_join_batch_temporal`
+and Z-set :func:`apply_join_batch_z` — all run ``_fold_join_batch``
+(pin both inputs, read each side's history through the one
+compaction-aware reader ``_read_history``, apply the delta rule
+``_delta_view``, append the three partitions). A form supplies only
+what differs: its input ``pin`` (plain ``localCheckpoint``, the
+Z-set ``_signed`` multiplicity, or the temporal ``_pin_and_stats``
+NULL guard + max event time) and its ``join`` term (equi, banded,
+or multiplicity product); the temporal form records its
+``_ts_stats`` manifest after the fold's appends. The bucketed
+:func:`apply_join_batch_bucketed` keeps its catalog-table storage
+but builds ΔV with the same ``_delta_view``.
+
 At 100 TB: the Δ⋈history joins shuffle the HISTORY side each batch
 unless the layout co-locates the key — write the accumulated sides
 bucketed on the join key (``sinks.write`` bucketed tables) and the
@@ -33,10 +47,13 @@ the view itself is only ever appended one ΔV partition at a time.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..concurrency import run_concurrently
+from .stream import drain_available_now
 
 
 def _path_exists(spark: SparkSession, path: str) -> bool:
@@ -104,10 +121,25 @@ def _compact_info(path: str) -> dict | None:
         return json.load(f)
 
 
-def _read_prior(
-    spark: SparkSession, path: str, batch_id: int
+def _write_json(path: str, obj: dict) -> None:
+    """Publish a driver-side JSON manifest atomically: write a sibling
+    tmp file, then ``os.replace`` it over ``path``, so readers see the
+    old or the new manifest, never a torn one."""
+    import json
+    import os
+
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=1)
+    os.replace(tmp, path)
+
+
+def _read_history(
+    spark: SparkSession, path: str, before: int | None = None
 ) -> DataFrame | None:
-    """History strictly BEFORE ``batch_id`` (replay-safe), or None ONLY
+    """Rows of a ``__batch_id``-partitioned state table (without the
+    ``__batch_id`` column), limited to batches strictly BEFORE
+    ``before`` when given — the replay-safe pre-batch state. None ONLY
     if the table does not exist yet / holds no batch partitions (all
     evicted). A read failure on an EXISTING partition (torn footer
     from a crashed attempt, transient FS error) must propagate:
@@ -131,27 +163,23 @@ def _read_prior(
         parts = spark.read.parquet(path).withColumn(
             "__batch_id", F.col("__batch_id").cast("long")
         )
+        if before is not None:
+            parts = parts.filter(F.col("__batch_id") < F.lit(before))
     if info is None:
-        if parts is None:
-            return None
-        return parts.filter(
-            F.col("__batch_id") < F.lit(batch_id)
-        ).drop("__batch_id")
-    if batch_id < info["min_batch"]:
+        return None if parts is None else parts.drop("__batch_id")
+    if before is not None and before < info["min_batch"]:
         raise ValueError(
-            f"batch {batch_id} replays below the compaction fence "
+            f"batch {before} replays below the compaction fence "
             f"{info['min_batch']} — compact only batches the stream "
             "checkpoint has committed"
         )
+    # staged rows all carry __batch_id = min_batch - 1, below any
+    # ``before`` that passed the fence check
     comp = spark.read.parquet(f"{path}/{info['staging']}")
     if parts is not None:
-        live = parts.filter(
-            (F.col("__batch_id") >= F.lit(info["min_batch"]))
-            & (F.col("__batch_id") < F.lit(batch_id))
+        comp = comp.unionByName(
+            parts.filter(F.col("__batch_id") >= F.lit(info["min_batch"]))
         )
-        comp = comp.filter(
-            F.col("__batch_id") < F.lit(batch_id)
-        ).unionByName(live)
     return comp.drop("__batch_id")
 
 
@@ -183,14 +211,14 @@ def compact_join_mv_history(
     READER CONTRACT: after a compaction, the pre-fence history lives
     ONLY in the hidden staging dir + manifest — consumers MUST read
     through :func:`read_join_view` / :func:`read_join_view_z` /
-    ``_read_prior`` (all manifest-aware); a raw
+    ``_read_history`` (all manifest-aware); a raw
     ``spark.read.parquet(path)`` silently loses the compacted history
     because Spark readers skip dot-directories.
 
     FENCE CONTRACT (same as temporal eviction): pass an
     ``upto_batch_id`` no greater than the stream checkpoint's lowest
     possibly-replayable batch; replaying below the fence raises in
-    ``_read_prior`` instead of silently recomputing against
+    ``_read_history`` instead of silently recomputing against
     post-compaction state. Rows are preserved verbatim (concat, no
     dedup), so the op is correct for the insert-only, Z-set, and
     temporal layouts alike — EXCEPT that for a TEMPORAL layout
@@ -202,7 +230,6 @@ def compact_join_mv_history(
     side on a temporal layout raises instead of silently no-oping.
     Local-filesystem op: raises on an object-store ``state_path``.
     Returns {table: rows_consolidated}."""
-    import json
     import os
     import shutil
     import uuid as _uuid
@@ -239,7 +266,7 @@ def compact_join_mv_history(
         path = f"{state_path}/{side}"
         if not os.path.isdir(path):
             continue
-        prior = _read_prior(spark, path, upto_batch_id)
+        prior = _read_history(spark, path, upto_batch_id)
         if prior is None:
             continue
         staged = prior.withColumn(
@@ -247,11 +274,10 @@ def compact_join_mv_history(
         )
         name = f".compact-{_uuid.uuid4().hex}"
         staged.write.mode("errorifexists").parquet(f"{path}/{name}")
-        old = _compact_info(path)
-        tmp = f"{path}/{_COMPACT_MANIFEST}.tmp"
-        with open(tmp, "w") as f:
-            json.dump({"staging": name, "min_batch": upto_batch_id}, f)
-        os.replace(tmp, f"{path}/{_COMPACT_MANIFEST}")
+        _write_json(
+            f"{path}/{_COMPACT_MANIFEST}",
+            {"staging": name, "min_batch": upto_batch_id},
+        )
         # lazy cleanup — readers already ignore everything below the
         # fence, so deletion order cannot be observed
         for entry in os.listdir(path):
@@ -267,31 +293,84 @@ def compact_join_mv_history(
 
 
 def _append_partition(df: DataFrame, batch_id: int, path: str) -> None:
+    # dynamic overwrite as a writer option, not a session conf: the
+    # batch rewrites only its own partition and the caller's session
+    # keeps its partitionOverwriteMode
     (
         df.withColumn("__batch_id", F.lit(batch_id).cast("long"))
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("__batch_id")
         .parquet(path)
     )
 
 
-def _concurrently(*thunks):
-    """Overlap this fold's independent actions (round-13, guide §2.6;
-    canonical helper: ``etl_spark_spark.concurrency.run_concurrently``).
-    Each per-batch state write is its own scheduler job whose FIXED
-    cost (~100-200 ms of AQE/stage bookkeeping at fixture scale;
-    round-13 profile: join_mv_temporal ran 53 jobs carrying 1.0 s of
-    task work under a 3.6 s wall) is paid serially when the driver
-    calls actions one after another. The per-fold writes (left / right
-    / view) and the two batch-input pins are mutually independent: the
-    view delta reads only the CHECKPOINTED batch inputs plus history
-    partitions STRICTLY BELOW this batch id — listed before any write
-    starts, and excluded by the ``__batch_id < batch_id`` filter even
-    if re-listed — so overlapping them costs max() instead of sum()
-    and cannot change any row written."""
-    from ..concurrency import run_concurrently
+_Join = Callable[[DataFrame, DataFrame], DataFrame]
 
-    return run_concurrently(*thunks)
+
+def _delta_view(
+    bl: DataFrame,
+    br: DataFrame,
+    l_prev: DataFrame | None,
+    r_prev: DataFrame | None,
+    join: _Join,
+) -> DataFrame:
+    """The bilinear delta rule ΔV = ΔL⋈ΔR ∪ ΔL⋈R_prev ∪ L_prev⋈ΔR for
+    one form's join term; a history side that does not exist yet
+    contributes no term."""
+    dv = join(bl, br)
+    if r_prev is not None:
+        dv = dv.unionByName(join(bl, r_prev))
+    if l_prev is not None:
+        dv = dv.unionByName(join(l_prev, br))
+    return dv
+
+
+def _fold_join_batch(
+    batch_left: DataFrame,
+    batch_right: DataFrame,
+    batch_id: int,
+    state_path: str,
+    pin: Callable[[DataFrame, str], DataFrame],
+    join: _Join,
+) -> None:
+    """The fold body shared by the three path-based forms: pin both
+    batch inputs with the form's ``pin(df, side)``, read each side's
+    history strictly before ``batch_id``, build ΔV with the form's
+    ``join`` term, and append the batch's left / right / view
+    partitions."""
+    spark = batch_left.sparkSession
+    l_path = f"{state_path}/left"
+    r_path = f"{state_path}/right"
+    v_path = f"{state_path}/view"
+    # Each pinned side is referenced by two delta terms and then
+    # appended — one materialization keeps them consistent. The two
+    # pins run concurrently, and so do the three appends (round-13,
+    # guide §2.6): each is its own scheduler job whose FIXED cost
+    # (~100-200 ms of AQE/stage bookkeeping at fixture scale; round-13
+    # profile: join_mv_temporal ran 53 jobs carrying 1.0 s of task
+    # work under a 3.6 s wall) is paid serially when the driver calls
+    # actions one after another. They are mutually independent: the
+    # view delta reads only the PINNED batch inputs plus history
+    # partitions STRICTLY BELOW this batch id — listed before any
+    # write starts, and excluded by the ``__batch_id < batch_id``
+    # filter even if re-listed — so overlapping them costs max()
+    # instead of sum() and cannot change any row written.
+    bl, br = run_concurrently(
+        lambda: pin(batch_left, "left"), lambda: pin(batch_right, "right")
+    )
+    dv = _delta_view(
+        bl,
+        br,
+        _read_history(spark, l_path, batch_id),
+        _read_history(spark, r_path, batch_id),
+        join,
+    )
+    run_concurrently(
+        lambda: _append_partition(bl, batch_id, l_path),
+        lambda: _append_partition(br, batch_id, r_path),
+        lambda: _append_partition(dv, batch_id, v_path),
+    )
 
 
 def apply_join_batch(
@@ -306,63 +385,24 @@ def apply_join_batch(
     columns appear once in the view). Replay-idempotent: re-running a
     (batch_left, batch_right, batch_id) triple rewrites the same three
     partitions with the same content."""
-    spark = batch_left.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     on = list(on)
-    l_path = f"{state_path}/left"
-    r_path = f"{state_path}/right"
-    v_path = f"{state_path}/view"
-
-    # pin the batch inputs: each side is referenced by two delta terms
-    # and then appended — one materialization keeps them consistent
-    # (the two pins and the three state writes below each run as
-    # overlapped driver threads — see _concurrently)
-    bl, br = _concurrently(
-        batch_left.localCheckpoint, batch_right.localCheckpoint
-    )
-
-    l_prev = _read_prior(spark, l_path, batch_id)
-    r_prev = _read_prior(spark, r_path, batch_id)
-
-    dv = bl.join(br, on)
-    if r_prev is not None:
-        dv = dv.unionByName(bl.join(r_prev, on))
-    if l_prev is not None:
-        dv = dv.unionByName(l_prev.join(br, on))
-
-    _concurrently(
-        lambda: _append_partition(bl, batch_id, l_path),
-        lambda: _append_partition(br, batch_id, r_path),
-        lambda: _append_partition(dv, batch_id, v_path),
-    )
-
-
-def _read_all(spark: SparkSession, path: str) -> DataFrame:
-    """Every row of a batch-partitioned state table, compaction-aware:
-    manifest staging (pre-fence history) ∪ partitions at/after the
-    fence."""
-    info = _compact_info(path)
-    parts = None
-    if _has_batch_partitions(spark, path):
-        parts = spark.read.parquet(path).withColumn(
-            "__batch_id", F.col("__batch_id").cast("long")
-        )
-    if info is None:
-        if parts is None:
-            return spark.read.parquet(path)  # surface the real error
-        return parts
-    comp = spark.read.parquet(f"{path}/{info['staging']}")
-    if parts is None:
-        return comp
-    return comp.unionByName(
-        parts.filter(F.col("__batch_id") >= F.lit(info["min_batch"]))
+    _fold_join_batch(
+        batch_left,
+        batch_right,
+        batch_id,
+        state_path,
+        lambda df, side: df.localCheckpoint(),
+        lambda a, b: a.join(b, on),
     )
 
 
 def read_join_view(spark: SparkSession, state_path: str) -> DataFrame:
     """The maintained view: every committed ΔV partition (plus the
     consolidated pre-fence history after a compaction)."""
-    return _read_all(spark, f"{state_path}/view").drop("__batch_id")
+    path = f"{state_path}/view"
+    view = _read_history(spark, path)
+    # no view yet: let the plain reader surface the real error
+    return spark.read.parquet(path) if view is None else view
 
 
 def _bucket_manifest(location_root: str) -> str:
@@ -441,9 +481,8 @@ def apply_join_batch_bucketed(
     history plan. Without it, bucket metadata lives only in this
     session's catalog (the round-6 limitation this closes)."""
     spark = batch_left.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     on = list(on)
-    bl, br = _concurrently(
+    bl, br = run_concurrently(
         batch_left.localCheckpoint, batch_right.localCheckpoint
     )
     # NOTE: unlike the path-based forms, the three writes below stay
@@ -455,7 +494,7 @@ def apply_join_batch_bucketed(
     def _record_manifest(batch: DataFrame, tbl: str) -> None:
         """Append this table to the location_root manifest so a fresh
         session can re-register the bucketed side (tiny driver-side
-        JSON, rewritten atomically via os.replace)."""
+        JSON, rewritten atomically)."""
         import json
         import os as _os
 
@@ -473,10 +512,7 @@ def apply_join_batch_bucketed(
             "num_buckets": num_buckets,
             "schema_ddl": ddl,
         }
-        tmp = f"{manifest}.tmp{batch_id}"
-        with open(tmp, "w") as f:
-            json.dump(meta, f, indent=1)
-        _os.replace(tmp, manifest)
+        _write_json(manifest, meta)
 
     def _accumulate(batch: DataFrame, tbl: str) -> None:
         tagged = batch.withColumn(
@@ -508,16 +544,21 @@ def apply_join_batch_bucketed(
         )
 
     l_tbl, r_tbl = f"{table_prefix}_left", f"{table_prefix}_right"
-    l_prev, r_prev = _prior(l_tbl), _prior(r_tbl)
+    dv = _delta_view(
+        bl, br, _prior(l_tbl), _prior(r_tbl), lambda a, b: a.join(b, on)
+    )
 
-    dv = bl.join(br, on)
-    if r_prev is not None:
-        dv = dv.unionByName(bl.join(r_prev, on))
-    if l_prev is not None:
-        dv = dv.unionByName(l_prev.join(br, on))
-
-    _accumulate(bl, l_tbl)
-    _accumulate(br, r_tbl)
+    # insertInto ignores the partitionOverwriteMode writer option, so
+    # the side-table writes need the session conf — set for them only
+    # and restored, so the caller's later overwrites keep their mode
+    conf_key = "spark.sql.sources.partitionOverwriteMode"
+    prev_mode = spark.conf.get(conf_key)
+    spark.conf.set(conf_key, "dynamic")
+    try:
+        _accumulate(bl, l_tbl)
+        _accumulate(br, r_tbl)
+    finally:
+        spark.conf.set(conf_key, prev_mode)
     _append_partition(dv, batch_id, view_path)
 
 
@@ -574,14 +615,14 @@ def apply_join_batch_temporal(
 
     Rows on either side with NULL event time are rejected (they could
     never be evicted and the band is undefined on them)."""
-    spark = batch_left.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     on = list(on)
     if band_seconds < 0 or delay_seconds < 0:
         raise ValueError("band_seconds/delay_seconds must be >= 0")
     _require_local_state(state_path, "apply_join_batch_temporal")
+    ts = {"left": ts_left, "right": ts_right}
+    maxima: dict[str, int | None] = {"left": None, "right": None}
 
-    def _pin_and_stats(df: DataFrame, ts: str) -> tuple[DataFrame, int | None]:
+    def _pin_and_stats(df: DataFrame, side: str) -> DataFrame:
         """Pin the batch and compute BOTH per-batch stats the fold
         needs — the NULL-event-time guard and the eviction manifest's
         max event time — in ONE aggregate over the pinned rows
@@ -590,49 +631,30 @@ def apply_join_batch_temporal(
         scheduler-job fixed cost, so every merged job counts)."""
         pinned = df.localCheckpoint()
         row = pinned.agg(
-            F.max(F.col(ts).cast("long")).alias("m"),
-            F.count(F.when(F.col(ts).isNull(), 1)).alias("n_null"),
+            F.max(F.col(ts[side]).cast("long")).alias("m"),
+            F.count(F.when(F.col(ts[side]).isNull(), 1)).alias("n_null"),
         ).collect()[0]
         if row["n_null"]:
             raise ValueError(
-                f"temporal join-MV rows must carry a non-null {ts!r} "
-                "event time (NULL rows are never evictable)"
+                "temporal join-MV rows must carry a non-null "
+                f"{ts[side]!r} event time (NULL rows are never evictable)"
             )
-        return pinned, (None if row["m"] is None else int(row["m"]))
-
-    (bl, max_l), (br, max_r) = _concurrently(
-        lambda: _pin_and_stats(batch_left, ts_left),
-        lambda: _pin_and_stats(batch_right, ts_right),
-    )
-    l_path = f"{state_path}/left"
-    r_path = f"{state_path}/right"
-    v_path = f"{state_path}/view"
-    l_prev = _read_prior(spark, l_path, batch_id)
-    r_prev = _read_prior(spark, r_path, batch_id)
+        maxima[side] = None if row["m"] is None else int(row["m"])
+        return pinned
 
     band = F.abs(
         F.col(ts_left).cast("long") - F.col(ts_right).cast("long")
     ) <= F.lit(band_seconds)
-
-    def _bjoin(a: DataFrame, b: DataFrame) -> DataFrame:
-        return a.join(b, on).filter(band)
-
-    dv = _bjoin(bl, br)
-    if r_prev is not None:
-        dv = dv.unionByName(_bjoin(bl, r_prev))
-    if l_prev is not None:
-        dv = dv.unionByName(_bjoin(l_prev, br))
-
-    _concurrently(
-        lambda: _append_partition(bl, batch_id, l_path),
-        lambda: _append_partition(br, batch_id, r_path),
-        lambda: _append_partition(dv, batch_id, v_path),
-    )
-    _record_ts_stats(
-        state_path,
+    _fold_join_batch(
+        batch_left,
+        batch_right,
         batch_id,
-        {"left": max_l, "right": max_r},
+        state_path,
+        _pin_and_stats,
+        lambda a, b: a.join(b, on).filter(band),
     )
+    # recorded only once every partition of the batch is written
+    _record_ts_stats(state_path, batch_id, maxima)
 
 
 def _ts_stats_path(state_path: str) -> str:
@@ -662,10 +684,7 @@ def _record_ts_stats(
             # eviction tombstones (a watermark must never regress)
             if m > stats.get("max_ts", m - 1):
                 stats["max_ts"] = m
-    tmp = f"{p}.tmp{batch_id}"
-    with open(tmp, "w") as f:
-        json.dump(stats, f, indent=1)
-    os.replace(tmp, p)
+    _write_json(p, stats)
 
 
 def stream_watermark(state_path: str, delay_seconds: int = 0) -> int | None:
@@ -702,7 +721,7 @@ def evict_join_mv_state(
     this are considered AND — critically — the eviction watermark is
     computed from COMMITTED batches only (stats entries with
     ``batch_id < committed_below``). An uncommitted batch could still
-    replay, and the replay's ``_read_prior`` must see the exact
+    replay, and the replay's ``_read_history`` must see the exact
     pre-state the first attempt saw; letting the uncommitted batch's
     own max event time advance the horizon would evict pre-state the
     first attempt joined against, silently shrinking the replayed view
@@ -777,11 +796,24 @@ def evict_join_mv_state(
                 shutil.rmtree(part)
                 evicted.append((side, bid))
             entry[side] = None  # tombstone: stat consumed
-    tmp = f"{p}.tmp-evict"
-    with open(tmp, "w") as f:
-        json.dump(stats, f, indent=1)
-    os.replace(tmp, p)
+    _write_json(p, stats)
     return evicted
+
+
+def _split_sides(
+    batch_df: DataFrame,
+    side_col: str,
+    on: Sequence[str],
+    left_cols: Sequence,
+    right_cols: Sequence,
+) -> tuple[DataFrame, DataFrame]:
+    """Demultiplex one micro-batch of a left/right feed: the rows
+    tagged ``side_col == 'left'`` projected to ``on`` + ``left_cols``,
+    and likewise for 'right'."""
+    return tuple(
+        batch_df.filter(F.col(side_col) == side).select(*on, *cols)
+        for side, cols in (("left", left_cols), ("right", right_cols))
+    )
 
 
 def run_stream_join_mv(
@@ -827,12 +859,7 @@ def run_stream_join_mv(
         stream_df = stream_df.withWatermark(*watermark)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        bl = batch_df.filter(F.col(side_col) == "left").select(
-            *on, *left_cols
-        )
-        br = batch_df.filter(F.col(side_col) == "right").select(
-            *on, *right_cols
-        )
+        bl, br = _split_sides(batch_df, side_col, on, left_cols, right_cols)
         apply_join_batch_bucketed(
             bl,
             br,
@@ -844,20 +871,13 @@ def run_stream_join_mv(
             location_root=location_root,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream_df.writeStream.foreachBatch(_apply).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        query_name,
+        timeout_sec,
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError(
-                f"stream '{query_name}' did not drain within {timeout_sec}s"
-            )
-    finally:
-        q.stop()
 
 
 def run_stream_join_mv_temporal(
@@ -915,11 +935,12 @@ def run_stream_join_mv_temporal(
             delay_seconds=delay_seconds,
             committed_below=batch_id,
         )
-        bl = batch_df.filter(F.col(side_col) == "left").select(
-            *on, F.col(ts_col).alias("__ts_l"), *left_cols
-        )
-        br = batch_df.filter(F.col(side_col) == "right").select(
-            *on, F.col(ts_col).alias("__ts_r"), *right_cols
+        bl, br = _split_sides(
+            batch_df,
+            side_col,
+            on,
+            [F.col(ts_col).alias("__ts_l"), *left_cols],
+            [F.col(ts_col).alias("__ts_r"), *right_cols],
         )
         apply_join_batch_temporal(
             bl,
@@ -933,20 +954,13 @@ def run_stream_join_mv_temporal(
             delay_seconds=delay_seconds,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream_df.writeStream.foreachBatch(_apply).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        query_name,
+        timeout_sec,
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError(
-                f"stream '{query_name}' did not drain within {timeout_sec}s"
-            )
-    finally:
-        q.stop()
     # the drain committed every batch (availableNow terminated cleanly),
     # so the final batch's event times are now safely part of the
     # committed watermark — one closing eviction trims state all the way
@@ -992,24 +1006,14 @@ def apply_join_batch_z(
     heavily-churned views, periodically rewrite the consolidated
     result as a compacted baseline partition (same maintenance loop as
     ``sinks.versioned.compact_table``)."""
-    spark = batch_left.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     on = list(on)
 
-    def _signed(df: DataFrame) -> DataFrame:
+    def _signed(df: DataFrame, side: str) -> DataFrame:
         if MULT_COL not in df.columns:
             df = df.withColumn(MULT_COL, F.lit(1).cast("long"))
-        return df.withColumn(MULT_COL, F.col(MULT_COL).cast("long"))
-
-    bl, br = _concurrently(
-        lambda: _signed(batch_left).localCheckpoint(),
-        lambda: _signed(batch_right).localCheckpoint(),
-    )
-    l_path = f"{state_path}/left"
-    r_path = f"{state_path}/right"
-    v_path = f"{state_path}/view"
-    l_prev = _read_prior(spark, l_path, batch_id)
-    r_prev = _read_prior(spark, r_path, batch_id)
+        return df.withColumn(
+            MULT_COL, F.col(MULT_COL).cast("long")
+        ).localCheckpoint()
 
     def _zjoin(a: DataFrame, b: DataFrame) -> DataFrame:
         al = a.withColumnRenamed(MULT_COL, "__ml")
@@ -1020,23 +1024,15 @@ def apply_join_batch_z(
             .drop("__ml", "__mr")
         )
 
-    dv = _zjoin(bl, br)
-    if r_prev is not None:
-        dv = dv.unionByName(_zjoin(bl, r_prev))
-    if l_prev is not None:
-        dv = dv.unionByName(_zjoin(l_prev, br))
-
-    _concurrently(
-        lambda: _append_partition(bl, batch_id, l_path),
-        lambda: _append_partition(br, batch_id, r_path),
-        lambda: _append_partition(dv, batch_id, v_path),
+    _fold_join_batch(
+        batch_left, batch_right, batch_id, state_path, _signed, _zjoin
     )
 
 
 def read_join_view_z(spark: SparkSession, state_path: str) -> DataFrame:
     """Consolidated Z-set view: rows with their net positive
     multiplicity as ``mult`` (retracted rows net to 0 and vanish)."""
-    raw = _read_all(spark, f"{state_path}/view").drop("__batch_id")
+    raw = read_join_view(spark, state_path)
     cols = [c for c in raw.columns if c != MULT_COL]
     return (
         raw.groupBy(*cols)

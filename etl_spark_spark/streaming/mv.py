@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.rollup import agg_snapshot, apply_agg_delta
+from .stream import drain_available_now
 
 _PREFIX = "agg_v"
 
@@ -121,17 +122,10 @@ def run_stream_rollup(
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         apply_stream_batch(batch_df, batch_id, keys, measures, state_path)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream_df.writeStream.foreachBatch(_apply).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        query_name,
+        timeout_sec,
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError(
-                f"stream '{query_name}' did not drain within {timeout_sec}s"
-            )
-    finally:
-        q.stop()

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.quality import expectation_metrics, quarantine
+from .stream import drain_available_now
 
 __all__ = ["run_stream_quality_gate"]
 
@@ -59,17 +60,10 @@ def run_stream_quality_gate(
         finally:
             batch_df.unpersist()
 
-    q = (
-        stream_df.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream_df.writeStream.foreachBatch(gate).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        query_name,
+        timeout_sec,
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError(
-                f"stream '{query_name}' did not drain within {timeout_sec}s"
-            )
-    finally:
-        q.stop()

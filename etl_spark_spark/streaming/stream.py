@@ -13,6 +13,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
+
+
+def drain_available_now(
+    writer: DataStreamWriter, query_name: str, timeout_sec: int = 120
+) -> None:
+    """Start ``writer`` as ``query_name`` with an availableNow trigger
+    and block until it has drained everything currently available.
+    Raises TimeoutError if the drain takes longer than ``timeout_sec``;
+    the query is stopped on every exit path, so no stream outlives the
+    call. Every availableNow runner in this package goes through here."""
+    q = writer.queryName(query_name).trigger(availableNow=True).start()
+    try:
+        if not q.awaitTermination(timeout_sec):
+            raise TimeoutError(
+                f"stream '{query_name}' did not drain within {timeout_sec}s"
+            )
+    finally:
+        q.stop()
+
 
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     """Events file-stream schema. ``ts``'s physical type depends on how
@@ -170,20 +190,13 @@ def run_foreach_batch_upsert(
             partition_by=partition_by,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(do_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream_df.writeStream.foreachBatch(do_merge).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        query_name,
+        timeout_sec,
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError(
-                f"stream '{query_name}' did not drain within {timeout_sec}s"
-            )
-    finally:
-        q.stop()
 
 
 def write_stream_files(
@@ -218,19 +231,10 @@ def write_stream_files(
         .option("path", path)
         .option("checkpointLocation", checkpoint_dir or f"{path}/_checkpoint")
         .outputMode("append")
-        .queryName(query_name)
-        .trigger(availableNow=True)
     )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    q = writer.start()
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError(
-                f"stream '{query_name}' did not drain within {timeout_sec}s"
-            )
-    finally:
-        q.stop()
+    drain_available_now(writer, query_name, timeout_sec)
 
 
 def run_available_now(
@@ -242,21 +246,10 @@ def run_available_now(
     table and return the rows — the batch-parity runner used by tests.
     ``output_mode``: complete for full aggregations, update for
     stateful operators, append for watermarked emissions."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    # a timeout raises before the read, so a partial snapshot is never
+    # returned; the memory-sink table stays readable after stop()
+    drain_available_now(
+        stream_df.writeStream.format("memory").outputMode(output_mode),
+        query_name,
     )
-    try:
-        finished = q.awaitTermination(120)
-        if not finished:
-            raise TimeoutError(
-                f"stream '{query_name}' did not drain within 120s — "
-                "refusing to return a partial snapshot"
-            )
-        spark = stream_df.sparkSession
-        return spark.table(query_name).collect()
-    finally:
-        q.stop()
+    return stream_df.sparkSession.table(query_name).collect()

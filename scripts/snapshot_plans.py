@@ -41,9 +41,9 @@ def tracked_counts(plan: str) -> dict[str, int]:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
     # generate under the SAME pinned environment the test fixture uses
-    # (tests/conftest.py _PLAN_SHAPING_ENV): kill-switch env vars change
-    # plan shapes (fan_out repartitions, the curation pin) and would
-    # bake a host's shell state into the committed snapshot (ADVICE r12)
+    # (tests/conftest.py _PLAN_SHAPING_ENV): session-config env vars
+    # change plan shapes and would bake a host's shell state into the
+    # committed snapshot (ADVICE r12)
     sys.path.insert(
         0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests")
     )

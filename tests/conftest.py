@@ -9,16 +9,13 @@ from etl_spark_spark.session import get_spark
 TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
-# Env knobs that change SESSION CONFIG or PLAN SHAPE (fan_out's
-# runtime repartition decision, the curation localCheckpoint pin, AQE
-# coalescing). The plan-snapshot gate pins exact operator counts, so
-# tests must run under the DEFAULT knob settings whatever the invoking
-# shell exports — otherwise a snapshot generated on one host fails on
-# any host with a kill-switch set (ADVICE r12). cpus=8 below already
+# Env knobs that change SESSION CONFIG or PLAN SHAPE (AQE coalescing,
+# shuffle partitions, parallelism). The plan-snapshot gate pins exact
+# operator counts, so tests must run under the DEFAULT knob settings
+# whatever the invoking shell exports — otherwise a snapshot generated
+# on one host fails on any host with a knob set (ADVICE r12). cpus=8 below already
 # pins spark.default.parallelism against host core counts.
 _PLAN_SHAPING_ENV = (
-    "SPARK_GRAFT_FANOUT",
-    "SPARK_GRAFT_PIN",
     "SPARK_GRAFT_MIN_COALESCED_PARTITION",
     "SPARK_GRAFT_INITIAL_PARTITIONS",
     "SPARK_GRAFT_SHUFFLE",

@@ -1,6 +1,6 @@
 """Regression pins for the round-6 ADVICE findings.
 
-1. join_mv._read_prior distinguishes 'table absent' (None) from
+1. join_mv._read_history distinguishes 'table absent' (None) from
    'table unreadable' (raise) — a torn footer must NOT be treated as
    empty history (would silently drop delta terms).
 2. ks_drift_by_group drops groups where either variant is empty
@@ -19,17 +19,17 @@ from pyspark.sql import functions as F
 
 
 def test_read_prior_none_on_missing_raises_on_corrupt(spark, tmp_path):
-    from etl_spark_spark.streaming.join_mv import _read_prior
+    from etl_spark_spark.streaming.join_mv import _read_history
 
     missing = str(tmp_path / "nope")
-    assert _read_prior(spark, missing, 5) is None
+    assert _read_history(spark, missing, 5) is None
 
     corrupt = tmp_path / "corrupt"
     corrupt.mkdir()
     # a torn file: parquet magic prefix but truncated footer
     (corrupt / "part-00000.parquet").write_bytes(b"PAR1\x00\x01broken")
     with pytest.raises(Exception):
-        df = _read_prior(spark, str(corrupt), 5)
+        df = _read_history(spark, str(corrupt), 5)
         # some codepaths defer the failure to the first action
         if df is not None:
             df.count()

@@ -1099,3 +1099,97 @@ def test_run_concurrently_raises_lowest_index_error():
         run_concurrently(late_boom, early_boom, lambda: "fine")
     notes = getattr(info.value, "__notes__", [])
     assert any("thunk 1" in n and "thunk one" in n for n in notes), notes
+
+
+def test_join_folds_leave_session_partition_overwrite_mode(spark, tmp_path):
+    """The join-MV folds overwrite only their own batch partitions
+    without switching the caller's session to dynamic partition
+    overwrite: after path-based and bucketed folds the session conf is
+    unchanged, and a partitioned overwrite through ``sinks.write.write``
+    still replaces the whole table (the stale partition is dropped)."""
+    import uuid
+
+    from etl_spark_spark.sinks.write import write
+    from etl_spark_spark.streaming.join_mv import (
+        apply_join_batch,
+        apply_join_batch_bucketed,
+        apply_join_batch_temporal,
+        apply_join_batch_z,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    left = spark.createDataFrame([(1, "a", 10)], "k long, l string, lt long")
+    right = spark.createDataFrame([(1, "x", 12)], "k long, r string, rt long")
+    pfx = f"jv_conf_{uuid.uuid4().hex[:8]}"
+    try:
+        for b in range(2):
+            apply_join_batch(left, right, b, ["k"], str(tmp_path / "eq"))
+            apply_join_batch_z(left, right, b, ["k"], str(tmp_path / "z"))
+            apply_join_batch_temporal(
+                left, right, b, ["k"], "lt", "rt", 5, str(tmp_path / "tmp")
+            )
+            # batch 0 creates the side tables, batch 1 uses insertInto
+            apply_join_batch_bucketed(
+                left, right, b, ["k"], pfx, str(tmp_path / "bview")
+            )
+    finally:
+        for t in (f"{pfx}_left", f"{pfx}_right"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    assert spark.conf.get(key) == before
+
+    out = str(tmp_path / "out")
+    schema = "p string, v long"
+    write(spark.createDataFrame([("a", 1), ("b", 2)], schema), out,
+          mode="overwrite", partition_by=["p"])
+    write(spark.createDataFrame([("a", 3)], schema), out,
+          mode="overwrite", partition_by=["p"])
+    got = [(r["p"], r["v"]) for r in spark.read.parquet(out).collect()]
+    assert got == [("a", 3)]
+
+
+def test_dedup_batch_raises_on_corrupt_index_partition(spark, tmp_path):
+    """A torn signature-index partition must fail the dedup batch, not
+    read as 'no history' (which would keep every duplicate)."""
+    from etl_spark_spark.functions.text import tokens, word_shingles
+    from etl_spark_spark.streaming.dedup import dedup_batch_once
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over"), (2, "the quick brown fox jumps over")],
+        "doc_id long, text string",
+    ).withColumn("t", tokens("text"))
+    part = tmp_path / "index" / "__batch_id=0"
+    part.mkdir(parents=True)
+    # parquet magic prefix but a truncated footer
+    (part / "part-00000.parquet").write_bytes(b"PAR1\x00\x01broken")
+    with pytest.raises(Exception):
+        dedup_batch_once(
+            docs, 1, "doc_id", word_shingles("t", 3),
+            str(tmp_path / "kept"), str(tmp_path / "index"),
+        )
+
+
+def test_drain_timeout_raises_and_stops_query(spark, tmp_path, monkeypatch):
+    """A runner whose micro-batch outlasts ``timeout_sec`` raises
+    TimeoutError, and the query is stopped — no stream stays active."""
+    import time
+
+    from etl_spark_spark.streaming import mv
+
+    src = tmp_path / "src"
+    spark.createDataFrame(
+        [("view", 1.0)], "event_type string, value double"
+    ).write.parquet(str(src))
+    monkeypatch.setattr(
+        mv, "apply_stream_batch", lambda *args, **kwargs: time.sleep(4)
+    )
+    stream = spark.readStream.schema("event_type string, value double").parquet(
+        str(src)
+    )
+    with pytest.raises(TimeoutError, match="t_drain_timeout"):
+        run_stream_rollup(
+            stream, KEYS, MEASURES, str(tmp_path / "state"),
+            str(tmp_path / "ckpt"), query_name="t_drain_timeout",
+            timeout_sec=1,
+        )
+    assert spark.streams.active == []

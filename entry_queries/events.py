@@ -538,7 +538,7 @@ def q_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-bucket offset), NOT a single-task global window; then max per
     hour. delta DESC at ties counts endpoint-touching sessions as
     concurrent, identically in the oracle."""
-    from etl_spark_spark.operators.windows import scalable_running_sum
+    from etl_spark_spark.operators.windows import bucketed_scan
     from etl_spark_spark.streaming.windows import sessionize_batch
 
     ev = read_events(spark, sf_dir).select("user_id", "ts")
@@ -555,15 +555,14 @@ def q_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(-1).alias("delta"),
         )
     )
-    curve = scalable_running_sum(
+    curve = bucketed_scan(
         bounds,
         F.date_trunc("hour", "ts"),
         # -delta ascending == delta DESC (+1 before -1 at tied ts),
         # expressed as a plain expression for the monotone-bucket
         # guard (round-12)
         [F.col("ts"), (-F.col("delta")), F.col("user_id"), F.col("session_id")],
-        "delta",
-        out_col="concurrency",
+        [("concurrency", "delta", "sum")],
     )
     return (
         curve.groupBy(
@@ -866,7 +865,7 @@ def q_purchase_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate over distinct day values + the distributed prefix sum
     (at-risk counts) + a log-space cumulative product, micro-scaled
     because exp/ln are 1-ulp engine-divergent (ORACLE_NOTES.md)."""
-    from etl_spark_spark.operators.windows import scalable_running_sum
+    from etl_spark_spark.operators.windows import bucketed_scan
 
     ev = read_events(spark, sf_dir)
     per_user = ev.groupBy("user_id").agg(
@@ -889,12 +888,11 @@ def q_purchase_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("event").alias("d"),
         F.sum(1 - F.col("event")).alias("c"),
     )
-    cum = scalable_running_sum(
+    cum = bucketed_scan(
         dist.withColumn("__rm", F.col("d") + F.col("c")),
         F.col("t"),
         ["t"],
-        "__rm",
-        out_col="__cumrm",
+        [("__cumrm", "__rm", "sum")],
     )
     totals = dist.agg(F.sum(F.col("d") + F.col("c")).alias("__n"))
     cum = cum.crossJoin(F.broadcast(totals)).withColumn(
@@ -910,13 +908,11 @@ def q_purchase_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).otherwise(F.lit(0.0))
     zero = (F.col("d") == F.col("n_risk")).cast("long")
-    cum = scalable_running_sum(
+    cum = bucketed_scan(
         cum.withColumn("__lnf", lnf).withColumn("__z", zero),
-        F.col("t"), ["t"], "__lnf", out_col="__cumln",
+        F.col("t"), ["t"], [("__cumln", "__lnf", "sum")],
     )
-    cum = scalable_running_sum(
-        cum, F.col("t"), ["t"], "__z", out_col="__cumz"
-    )
+    cum = bucketed_scan(cum, F.col("t"), ["t"], [("__cumz", "__z", "sum")])
     surv = F.when(
         F.col("__cumz") > 0, F.lit(0).cast("long")
     ).otherwise(F.round(F.exp("__cumln") * 1e6).cast("long"))

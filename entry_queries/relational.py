@@ -1778,21 +1778,20 @@ def q_global_spend_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotone in the ordering. Every customer gets its exact global
     rank in parallel; ties break on custkey identically in the
     oracle."""
-    from etl_spark_spark.operators.windows import scalable_running_sum
+    from etl_spark_spark.operators.windows import bucketed_scan
 
     orders = table(spark, sf_dir, "orders", columns=["o_custkey", "o_totalprice"])
     spend = orders.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("__cents")
     )
-    ranked = scalable_running_sum(
+    ranked = bucketed_scan(
         spend.withColumn("__one", F.lit(1)),
         -F.expr("__cents div 100000"),
         # negated-cents ascending == cents descending, expressed as a
         # plain expression so the monotone-bucket guard can compare
         # order keys across buckets (round-12)
         [(-F.col("__cents")), F.col("o_custkey")],
-        "__one",
-        out_col="global_rank",
+        [("global_rank", "__one", "sum")],
     )
     return ranked.select(
         "o_custkey",
@@ -2797,8 +2796,8 @@ def q_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum over the revenue-descending global order runs through the
     distributed prefix-sum decomposition bucketed by revenue band —
     the one serial window sees only band totals
-    (operators/windows.py:scalable_running_sum)."""
-    from etl_spark_spark.operators.windows import scalable_running_sum
+    (operators/windows.py:bucketed_scan)."""
+    from etl_spark_spark.operators.windows import bucketed_scan
 
     li = table(
         spark, sf_dir, "lineitem", columns=["l_partkey", "l_extendedprice"]
@@ -2811,14 +2810,13 @@ def q_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_partkey")
         .agg(F.sum("cents").alias("revenue_cents"))
     )
-    cum = scalable_running_sum(
+    cum = bucketed_scan(
         rev,
         -F.expr("revenue_cents div 100000000"),
         # negated-cents ascending == cents descending (plain
         # expression for the monotone-bucket guard, round-12)
         [(-F.col("revenue_cents")), F.col("l_partkey")],
-        "revenue_cents",
-        out_col="cum_cents",
+        [("cum_cents", "revenue_cents", "sum")],
     )
     total = rev.agg(F.sum("revenue_cents").alias("__total"))
     share = F.col("cum_cents").cast("double") / F.col("__total").cast("double")
@@ -2991,7 +2989,7 @@ def q_customer_spend_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the distributed prefix-sum (never a single-task window), the
     rank-weighted sum is exact decimal, and only the final division is
     float — one deterministic row."""
-    from etl_spark_spark.operators.windows import scalable_running_sum
+    from etl_spark_spark.operators.windows import bucketed_scan
 
     orders = table(
         spark, sf_dir, "orders", columns=["o_custkey", "o_totalprice"]
@@ -3001,12 +2999,11 @@ def q_customer_spend_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cents"
         )
     )
-    ranked = scalable_running_sum(
+    ranked = bucketed_scan(
         spend.withColumn("__one", F.lit(1)),
         F.expr("cents div 100000"),
         [F.col("cents"), F.col("o_custkey")],
-        "__one",
-        out_col="rk",
+        [("rk", "__one", "sum")],
     )
     dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731
     s = ranked.agg(
@@ -3230,7 +3227,7 @@ def q_cumulative_new_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     via one hash aggregate; the running total uses the distributed
     prefix-sum decomposition (year bucket), not a single-task global
     window."""
-    from etl_spark_spark.operators.windows import scalable_running_sum
+    from etl_spark_spark.operators.windows import bucketed_scan
 
     orders = table(
         spark, sf_dir, "orders", columns=["o_custkey", "o_orderdate"]
@@ -3239,12 +3236,11 @@ def q_cumulative_new_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.date_format("o_orderdate", "yyyy-MM")).alias("month")
     )
     monthly = first.groupBy("month").agg(F.count("*").alias("n_new"))
-    out = scalable_running_sum(
+    out = bucketed_scan(
         monthly,
         F.substring("month", 1, 4),
         ["month"],
-        "n_new",
-        out_col="cum_customers",
+        [("cum_customers", "n_new", "sum")],
     )
     return out.select("month", "n_new", "cum_customers")
 
@@ -3368,8 +3364,10 @@ def q_revenue_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents + the distributed prefix sum give exact cumulative sums;
     G is pure rational arithmetic on them (no transcendentals), so the
     doubles are bit-identical in any engine and the argmax is pinned
-    with a day tie-break. TakeOrdered top-1, no global sort."""
-    from etl_spark_spark.operators.windows import scalable_running_sum
+    with a day tie-break. TakeOrdered top-1, no global sort. Both
+    cumulative sums and both totals come from one two-measure
+    bucketed scan (operators/windows.py:bucketed_scan)."""
+    from etl_spark_spark.operators.windows import bucketed_scan
 
     orders = table(
         spark, sf_dir, "orders", columns=["o_orderdate", "o_totalprice"]
@@ -3379,20 +3377,13 @@ def q_revenue_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cents"
         )
     )
-    cum = scalable_running_sum(
-        daily, F.year("day"), ["day"], "cents", out_col="__scum"
-    )
-    cnt = scalable_running_sum(
-        cum.withColumn("__one", F.lit(1).cast("long")),
+    cum = bucketed_scan(
+        daily.withColumn("__one", F.lit(1).cast("long")),
         F.year("day"),
         ["day"],
-        "__one",
-        out_col="__t",
+        [("__scum", "cents", "sum", "__s"), ("__t", "__one", "sum", "__n")],
     )
-    totals = daily.agg(
-        F.sum("cents").alias("__s"), F.count("*").alias("__n")
-    )
-    x = cnt.crossJoin(F.broadcast(totals)).filter(F.col("__t") < F.col("__n"))
+    x = cum.filter(F.col("__t") < F.col("__n"))
     t = F.col("__t").cast("double")
     n = F.col("__n").cast("double")
     ml = F.col("__scum").cast("double") / t
@@ -3509,7 +3500,7 @@ def q_ab_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix sums; the statistic folds hypergeometric expectations and
     variances — micro-scaled because the final sums are short
     order-dependent float folds."""
-    from etl_spark_spark.operators.windows import scalable_running_sum
+    from etl_spark_spark.operators.windows import bucketed_scan
 
     ev = read_events(spark, sf_dir)
     per_user = ev.groupBy("user_id").agg(
@@ -3540,8 +3531,8 @@ def q_ab_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("is_a").alias("rm_a"),
         F.count("*").alias("rm"),
     )
-    cum = scalable_running_sum(dist, F.col("t"), ["t"], "rm_a", out_col="__ca")
-    cum = scalable_running_sum(cum, F.col("t"), ["t"], "rm", out_col="__c")
+    cum = bucketed_scan(dist, F.col("t"), ["t"], [("__ca", "rm_a", "sum")])
+    cum = bucketed_scan(cum, F.col("t"), ["t"], [("__c", "rm", "sum")])
     totals = dist.agg(
         F.sum("rm_a").alias("__na"), F.sum("rm").alias("__n")
     )
@@ -3602,14 +3593,14 @@ def q_trimmed_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-distinct-value distribution (clamped tie-aware effective
     counts over the distributed prefix sum), so every intermediate is
     an exact integer and the final mean one exact division."""
-    from etl_spark_spark.operators.windows import scalable_running_sum
+    from etl_spark_spark.operators.windows import bucketed_scan
 
     orders = table(spark, sf_dir, "orders", columns=["o_totalprice"])
     vals = orders.select(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("v")
     )
     dist = vals.groupBy("v").agg(F.count("*").alias("c"))
-    cum = scalable_running_sum(dist, F.col("v"), ["v"], "c", out_col="cumc")
+    cum = bucketed_scan(dist, F.col("v"), ["v"], [("cumc", "c", "sum")])
     totals = dist.agg(
         F.sum("c").alias("n"), F.sum(F.col("c") * F.col("v")).alias("s")
     )

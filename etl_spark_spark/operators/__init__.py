@@ -64,11 +64,10 @@ from .rollup import agg_snapshot, apply_agg_delta
 from .scd import scd2_apply, scd2_as_of
 from .skew import salted_join, salted_sum, with_salt
 from .windows import (
+    bucketed_scan,
     pareto_frontier_2d,
     partial_topk,
     partitioned_sum,
-    scalable_running_max,
-    scalable_running_sum,
     top_k_per_group,
     top_one_per_group_agg,
 )
@@ -87,14 +86,13 @@ from .asof import position_attribution
 __all__ = [
     "activity_streaks",
     "agg_snapshot",
+    "bucketed_scan",
     "exact_group_quantiles",
     "scalable_group_quantiles",
     "ks_two_sample",
     "pagerank_exact",
     "pareto_frontier_2d",
     "position_attribution",
-    "scalable_running_max",
-    "scalable_running_sum",
     "transition_counts",
     "triangle_counts",
     "welch_t_test",

@@ -22,10 +22,13 @@ Per-group cost is O(n^2) in series length (each element folds its
 prefix) — deliberate: at the documented calendar-bounded grain
 (n <= ~5000) that is ~12M fused double ops per group, microseconds,
 and it buys an oracle-replayable, state-free plan. For unbounded
-series use :func:`ewma_scalable` (round 11): the scalable_running_sum
-bucket decomposition with the affine-composition carry
-(A, B)∘(A', B') = (A·A', A·B' + B), per-bucket bounded folds, one
-bucket-count-sized serial step per group.
+series use :func:`ewma_scalable` (round 11): the same bucket
+decomposition as :func:`windows.bucketed_scan` with the
+affine-composition carry (A, B)∘(A', B') = (A·A', A·B' + B),
+per-bucket bounded folds, one bucket-count-sized serial step per
+group. It does not run through ``bucketed_scan``: its carry is a
+per-group array fold of (A, B) pairs, not a sum/max window, and its
+numerics are pinned (tests/test_retrieval_stats.py).
 
 Reference scope: no recurrences in the etl-spark reference; SURVEY §7
 time-series extension (trend/seasonality screens for training-data
@@ -164,11 +167,11 @@ def ewma_scalable(
     (A2, B2)∘(A1, B1) = (A2·A1, A2·B1 + B2), so any contiguous run of
     observations collapses to ONE (A, B) pair computable by a local
     fold. That turns the sequential recurrence into the
-    scalable_running_sum decomposition:
+    bucketed prefix-scan decomposition (``windows.bucketed_scan``):
 
     1. rows bucket by ``bucket_col`` (must be MONOTONE in the global
        per-group order — a month bucket when ordering by day, the same
-       contract as scalable_running_sum; ENFORCED since round-12: each
+       contract as bucketed_scan; ENFORCED since round-12: each
        bucket's min/max order key rides the ends aggregate and
        overlapping adjacent buckets raise loudly instead of silently
        composing carries out of order); each (group, bucket) packs

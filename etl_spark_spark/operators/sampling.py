@@ -292,26 +292,26 @@ def epoch_shuffle(
     retries. A new ``seed`` is a fresh epoch permutation.
 
     Scale shape: NO single-task global window — position comes from
-    the distributed prefix-sum decomposition (``windows.
-    scalable_running_sum``) bucketed by the first 2 hex chars of the
+    the distributed prefix-scan decomposition (``windows.
+    bucketed_scan``) bucketed by the first 2 hex chars of the
     key (256 parallel buckets, monotone in the key order); the only
     serial step is a 256-row bucket-offset window. Hash uniformity
     also makes the buckets even — no skew by construction. Sources
     interleave for free: a uniform hash order mixes strata without a
     dedicated pass.
     """
-    from .windows import scalable_running_sum
+    from .windows import bucketed_scan
 
     key = F.md5(
         F.concat_ws("#", F.lit(str(seed)), F.col(id_col).cast("string"))
     )
     keyed = df.withColumn("__k", key).withColumn("__one", F.lit(1))
-    ranked = scalable_running_sum(
+    ranked = bucketed_scan(
         keyed,
         F.substring(F.col("__k"), 1, 2),
         [F.col("__k"), F.col(id_col)],
-        "__one",
-        out_col="position",
+        [("position", "__one", "sum")],
+        op="epoch_shuffle",
     )
     return ranked.select(
         F.col("position").cast("long").alias("position"),

@@ -145,25 +145,23 @@ def scalable_group_quantiles(
     one task materializes a group's entire distinct-value distribution
     (millions of distinct prices under 3 return flags at the 100 TB
     design point — the same single-task class as theil_sen's pair
-    generation). This form applies the prefix-sum decomposition of
-    ``scalable_running_sum`` PER GROUP:
-
-    1. hash-aggregate to the per-(group, value) distribution (same
-       decisive shrink as the plain form);
-    2. within-(group, bucket) cumulative counts — parallel windows;
-    3. per-(group, bucket) totals, offset by an exclusive prefix over
-       the bucket-totals table (the only serial-per-group window,
-       sized by the BUCKET count, not the distinct-value count);
-    4. global cum = within + offset, then the identical
-       smallest-v-with-cum>=ceil(q*n) selection.
+    generation). This form hash-aggregates to the per-(group, value)
+    distribution (same decisive shrink as the plain form), then runs
+    the cumulative count through :func:`windows.bucketed_scan`
+    partitioned by group: within-(group, bucket) windows in parallel,
+    the only serial-per-group window sized by the BUCKET count, and
+    the group total ``n`` read off the same offsets table. The
+    identical smallest-v-with-cum>=ceil(q*n) selection follows.
 
     ``bucket_of`` is an expression over ``value_col`` that must be a
     monotone NONDECREASING, non-NULL coarsening of the value (e.g.
-    ``F.floor(F.col("price") / 100)``) — monotonicity is ENFORCED
-    (adjacent buckets whose value ranges overlap raise loudly, the
-    scalable_running_sum guard) and NULL buckets raise before the
-    decomposition. Values are guarded non-NULL exactly like the plain
-    form, and NULL group keys remain a real group (null-safe join).
+    ``F.floor(F.col("price") / 100)``) — both ENFORCED by the scan's
+    guards (overlapping adjacent buckets raise "not monotone", NULL
+    buckets raise "bucket_of produced NULL"). Values are guarded
+    non-NULL exactly like the plain form, and NULL group keys remain a
+    real group (null-safe join). The offsets table grows with group
+    cardinality, so its join back is unhinted: AQE decides whether to
+    broadcast it.
 
     The oracle story is the point: results are bit-identical to
     exact_group_quantiles for ANY valid bucketing, so the same
@@ -176,7 +174,7 @@ def scalable_group_quantiles(
     compatibility) — the weighted form has the identical per-group
     single-task window ceiling, decomposed the identical way.
     """
-    from .windows import _checked_offset
+    from .windows import bucketed_scan
 
     keys = list(group_cols)
     op = "scalable_group_quantiles"
@@ -200,71 +198,13 @@ def scalable_group_quantiles(
         ).groupBy(*keys, value_col).agg(
             F.sum(F.col(weight_col).cast("long")).alias("__c")
         )
-    bkt = F.when(bucket_of.isNotNull(), bucket_of).otherwise(
-        F.raise_error(
-            F.lit(
-                f"{op}: bucket_of produced NULL for a non-NULL value — "
-                "the bucket expression must be a total, non-NULL "
-                "coarsening of the value"
-            )
-        )
-    )
-    tagged = dist.withColumn("__bkt", bkt)
-    w_in = (
-        Window.partitionBy(*keys, "__bkt")
-        .orderBy(value_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    within = tagged.withColumn("__within", F.sum("__c").over(w_in))
-    # totals stays a plain hash aggregate over `tagged` — round-13
-    # MEASURED the tempting "share the window's exchange" rewrite
-    # (totals = within.groupBy(...).agg(max(__within), ...)) and it is
-    # a trap: exchange REUSE only dedups the shuffle, not the Sort +
-    # Window above it, so the totals branch re-ran the full
-    # sort-and-scan of the distribution — ruinous when the
-    # distribution is large (nation_theil_sen_blocked, whose dist is
-    # the O(n²) slope table, went 2.2 s -> 5.0 s). The partial
-    # aggregate below shuffles only per-(group, bucket)-per-map rows,
-    # so its "extra" exchange is near-free at any scale.
-    totals = tagged.groupBy(*keys, "__bkt").agg(
-        F.sum("__c").alias("__t"),
-        F.min(value_col).alias("__om"),
-        F.max(value_col).alias("__ox"),
-    )
-    w_b = (
-        Window.partitionBy(*keys)
-        .orderBy("__bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_lag = Window.partitionBy(*keys).orderBy("__bkt")
-    wg = Window.partitionBy(*keys)
-    offsets = totals.select(
-        *keys,
-        "__bkt",
-        F.coalesce(F.sum("__t").over(w_b), F.lit(0)).alias("__off"),
-        F.lag("__ox").over(w_lag).alias("__pox"),
-        "__om",
-        F.sum("__t").over(wg).alias("__n"),
-    ).select(
-        *keys,
-        "__bkt",
-        _checked_offset(F.col("__off"), op).alias("__off"),
-        "__n",
-    )
-    # broadcast the offsets spine: it is the per-(group, bucket) table
-    # — the same bounded-cardinality table scalable_running_sum already
-    # broadcasts (windows.py) — so the distribution-sized `within` side
-    # joins WITHOUT leaving its window partitioning (no exchange of the
-    # big side; round-13, guide §3.1)
-    lhs, rhs = within.alias("__sgl"), F.broadcast(offsets.alias("__sgr"))
-    cond = F.col("__sgl.__bkt").eqNullSafe(F.col("__sgr.__bkt"))
-    for k in keys:
-        cond = cond & F.col(f"__sgl.{k}").eqNullSafe(F.col(f"__sgr.{k}"))
-    cum = lhs.join(rhs, cond).select(
-        *[F.col(f"__sgl.{k}") for k in keys],
-        F.col(f"__sgl.{value_col}").alias(value_col),
-        (F.col("__sgl.__within") + F.col("__sgr.__off")).alias("__cum"),
-        F.col("__sgr.__n").alias("__n"),
+    cum = bucketed_scan(
+        dist,
+        bucket_of,
+        [value_col],
+        [("__cum", "__c", "sum", "__n")],
+        partition_by=keys,
+        op=op,
     )
     aggs = []
     prefix = "q" if weight_col is None else "wq"
@@ -292,13 +232,14 @@ def ks_two_sample(
     the textbook definition — ties handled exactly).
 
     Scale path: per-distinct-value counts for each sample, then the
-    cumulative counts via the distributed prefix-sum decomposition
-    (``bucket`` must be monotone in the value order; defaults to the
-    value itself, right for discrete/fixed-point measures) — never a
-    single-task global window. A NULL value raises LOUDLY in both
-    engines (:func:`_checked_measure`). Returns one row:
-    (n_a, n_b, d_stat)."""
-    from .windows import scalable_running_sum
+    cumulative counts of both samples from ONE two-measure
+    :func:`windows.bucketed_scan` (``bucket`` must be monotone in the
+    value order; defaults to the value itself, right for
+    discrete/fixed-point measures), which also yields n_a/n_b off its
+    offsets table — never a single-task global window. A NULL value
+    raises LOUDLY in both engines (:func:`_checked_measure`). Returns
+    one row: (n_a, n_b, d_stat)."""
+    from .windows import bucketed_scan
 
     is_a = F.col(variant_col) == F.lit(variant_a)
     dist = (
@@ -314,23 +255,19 @@ def ks_two_sample(
             F.count(F.when(~is_a, 1)).alias("__cb"),
         )
     )
-    b = bucket if bucket is not None else F.col(value_col)
-    cum_a = scalable_running_sum(
-        dist, b, [value_col], "__ca", out_col="__cuma"
-    )
-    cum = scalable_running_sum(
-        cum_a, b, [value_col], "__cb", out_col="__cumb"
-    )
-    totals = dist.agg(
-        F.sum("__ca").alias("n_a"), F.sum("__cb").alias("n_b")
+    cum = bucketed_scan(
+        dist,
+        bucket if bucket is not None else F.col(value_col),
+        [value_col],
+        [("__cuma", "__ca", "sum", "n_a"), ("__cumb", "__cb", "sum", "n_b")],
+        op="ks_two_sample",
     )
     d = F.abs(
         F.col("__cuma").cast("double") / F.col("n_a").cast("double")
         - F.col("__cumb").cast("double") / F.col("n_b").cast("double")
     )
     return (
-        cum.crossJoin(F.broadcast(totals))
-        .select("n_a", "n_b", d.alias("__d"))
+        cum.select("n_a", "n_b", d.alias("__d"))
         .groupBy("n_a", "n_b")
         .agg(F.max("__d").alias("d_stat"))
     )
@@ -385,11 +322,15 @@ def mann_whitney_u(
         F.count(F.when(is_a, 1)).alias("__ca"),
         F.count(F.when(~is_a, 1)).alias("__cb"),
     )
-    from .windows import scalable_running_sum
+    from .windows import bucketed_scan
 
     dist = dist.withColumn("__nv", F.col("__ca") + F.col("__cb"))
-    cum = scalable_running_sum(
-        dist, F.col(value_col), [value_col], "__nv", out_col="__cum"
+    cum = bucketed_scan(
+        dist,
+        F.col(value_col),
+        [value_col],
+        [("__cum", "__nv", "sum")],
+        op="mann_whitney_u",
     )
     # doubled average rank of the tie group at v: 2*cum_before + nv + 1
     rank2 = 2 * (F.col("__cum") - F.col("__nv")) + F.col("__nv") + 1
@@ -880,9 +821,11 @@ def ks_drift_by_group(
     distinct cents under a handful of event types at 100 TB), pass
     ``bucket_of`` — a monotone, non-NULL coarsening of the value
     (e.g. ``F.expr("cents div 1000")``) — and both cumulative counts
-    decompose exactly like :func:`scalable_group_quantiles`
-    (within-bucket windows in parallel; the serial-per-group window
-    sees bucket totals only; monotonicity ENFORCED). Results are
+    and the per-group n_a/n_b come from one two-measure
+    :func:`windows.bucketed_scan` partitioned by group, like
+    :func:`scalable_group_quantiles` (within-bucket windows in
+    parallel; the serial-per-group window sees bucket totals only;
+    monotone and non-NULL buckets ENFORCED). Results are
     bit-identical for any valid bucketing, so the same oracle pins
     both paths (q:ks_drift_by_type_scalable shares
     q:ks_drift_by_type's oracle verbatim).
@@ -924,69 +867,18 @@ def ks_drift_by_group(
             .withColumn("__nb", F.sum("__cb").over(wg))
         )
     else:
-        from .windows import _checked_offset
+        from .windows import bucketed_scan
 
-        op = "ks_drift_by_group"
-        bkt = F.when(bucket_of.isNotNull(), bucket_of).otherwise(
-            F.raise_error(
-                F.lit(
-                    f"{op}: bucket_of produced NULL for a non-NULL "
-                    "value — the bucket expression must be a total, "
-                    "non-NULL coarsening of the value"
-                )
-            )
-        )
-        tagged = dist.withColumn("__bkt", bkt)
-        w_in = (
-            Window.partitionBy(*keys, "__bkt")
-            .orderBy(value_col)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        within = tagged.withColumn(
-            "__wa", F.sum("__ca").over(w_in)
-        ).withColumn("__wb", F.sum("__cb").over(w_in))
-        totals = tagged.groupBy(*keys, "__bkt").agg(
-            F.sum("__ca").alias("__ta"),
-            F.sum("__cb").alias("__tb"),
-            F.min(value_col).alias("__om"),
-            F.max(value_col).alias("__ox"),
-        )
-        w_b = (
-            Window.partitionBy(*keys)
-            .orderBy("__bkt")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        w_lag = Window.partitionBy(*keys).orderBy("__bkt")
-        wg = Window.partitionBy(*keys)
-        offsets = totals.select(
-            *keys,
-            "__bkt",
-            F.coalesce(F.sum("__ta").over(w_b), F.lit(0)).alias("__offa"),
-            F.coalesce(F.sum("__tb").over(w_b), F.lit(0)).alias("__offb"),
-            F.lag("__ox").over(w_lag).alias("__pox"),
-            "__om",
-            F.sum("__ta").over(wg).alias("__na"),
-            F.sum("__tb").over(wg).alias("__nb"),
-        ).select(
-            *keys,
-            "__bkt",
-            _checked_offset(F.col("__offa"), op).alias("__offa"),
-            "__offb",
-            "__na",
-            "__nb",
-        )
-        lhs, rhs = within.alias("__ksl"), offsets.alias("__ksr")
-        cond = F.col("__ksl.__bkt").eqNullSafe(F.col("__ksr.__bkt"))
-        for k in keys:
-            cond = cond & F.col(f"__ksl.{k}").eqNullSafe(
-                F.col(f"__ksr.{k}")
-            )
-        cum = lhs.join(rhs, cond).select(
-            *[F.col(f"__ksl.{k}") for k in keys],
-            (F.col("__ksl.__wa") + F.col("__ksr.__offa")).alias("__cuma"),
-            (F.col("__ksl.__wb") + F.col("__ksr.__offb")).alias("__cumb"),
-            F.col("__ksr.__na").alias("__na"),
-            F.col("__ksr.__nb").alias("__nb"),
+        cum = bucketed_scan(
+            dist,
+            bucket_of,
+            [value_col],
+            [
+                ("__cuma", "__ca", "sum", "__na"),
+                ("__cumb", "__cb", "sum", "__nb"),
+            ],
+            partition_by=keys,
+            op="ks_drift_by_group",
         )
     d = F.abs(
         F.col("__cuma").cast("double") / F.col("__na").cast("double")

@@ -7,6 +7,11 @@
   ``sum(x) over (partition by g)`` denominator at
   utils_ressarcimento.py:229), accepted as API columns or a SQL string
   via ``F.expr`` (the reference uses both styles).
+- ``bucketed_scan`` — running sums/maxima in a global or per-group
+  order without a single-task window (within-bucket scans, an
+  exclusive scan over the bucket totals, offsets joined back); the
+  running-rank, cumulative-share, quantile, KS and skyline operators
+  all run through it.
 
 Scale note: an unbounded window over a hot key concentrates that key's
 rows on one task. For top-k with few columns and heavy skew, prefer
@@ -214,150 +219,158 @@ def _monotone_lead_key(
     return cols[0]
 
 
-def _checked_offset(off: Column, op_name: str) -> Column:
-    """Wrap a bucket-offset expression so it raises LOUDLY when the
-    previous bucket's last order key (``__pox``, lagged per-bucket max
-    of the order struct) reaches into this bucket's first (``__om``,
-    per-bucket min) — i.e. the bucket expression is NOT monotone in
-    the global order and the prefix decomposition would silently
-    interleave buckets (round-12: the same loud-guard discipline as
-    max_points/max_series; previously a docstring-only contract)."""
-    return F.when(
-        F.col("__pox").isNotNull() & (F.col("__pox") >= F.col("__om")),
+_SCAN_AGG = {"sum": F.sum, "max": F.max}
+
+
+def bucketed_scan(
+    df: DataFrame,
+    bucket: Column | str,
+    order_by: Sequence[Column | str],
+    measures: Sequence[tuple],
+    partition_by: Sequence[str] = (),
+    op: str = "bucketed_scan",
+) -> DataFrame:
+    """Running sums and maxima in a global (or per-partition) order
+    WITHOUT a single-task window — the distributed prefix-scan
+    decomposition every scale-safe running window in the engine uses:
+
+    1. within-bucket inclusive scans (windows partitioned by
+       ``partition_by`` + bucket — fully parallel);
+    2. per-bucket totals as a plain hash aggregate over the tagged
+       rows, turned into offsets by an exclusive scan over that small
+       table (the only serial window per partition, sized by the
+       bucket count, not the row count);
+    3. the offsets joined back: result = within ⊕ offset.
+
+    ``measures`` are ``(out_col, value, kind)`` items, ``kind`` one of
+    ``"sum"``/``"max"``; one call scans them all over one sort. An
+    optional fourth item names a column that receives the measure's
+    per-partition total, read off the offsets table (no second
+    aggregate over the rows).
+
+    Guards, all loud and prefixed with ``op``: ``order_by`` items must
+    be plain ascending expressions (negate numerics for descending)
+    forming a total order within buckets; a NULL bucket raises
+    ("bucket_of produced NULL"); adjacent buckets whose leading
+    order-key ranges overlap raise ("not monotone") — ``bucket`` must
+    coarsen the leading order expression (hour-of-ts when ordering by
+    ts).
+
+    Broadcast rule: without ``partition_by`` the offsets table is
+    sized by the bucket count and is broadcast, so the row side never
+    leaves its window partitioning. With ``partition_by`` (column
+    NAMES) it is sized by (partition, bucket), which grows with group
+    cardinality, so the join back is null-safe on the keys (a NULL key
+    is a real group) and unhinted — AQE decides.
+
+    Output: the input columns, then each ``out_col``, then each total
+    column.
+    """
+    keys = list(partition_by)
+    okey = _monotone_lead_key(order_by, op)
+    tagged = df.withColumns(
+        {
+            "__bkt": F.col(bucket) if isinstance(bucket, str) else bucket,
+            **{
+                f"__v{i}": F.col(m[1]) if isinstance(m[1], str) else m[1]
+                for i, m in enumerate(measures)
+            },
+        }
+    )
+    kinds = [_SCAN_AGG[m[2]] for m in measures]
+    w_in = (
+        Window.partitionBy(*keys, "__bkt")
+        .orderBy(*order_by)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    within = tagged.withColumns(
+        {f"__w{i}": agg(f"__v{i}").over(w_in) for i, agg in enumerate(kinds)}
+    )
+    # totals stay a plain hash aggregate over `tagged`: deriving them
+    # from the window output to share its exchange was measured and
+    # rejected — exchange reuse dedups the shuffle, not the Sort +
+    # Window above it (nation_theil_sen_blocked 2.2 -> 5.0 s); the
+    # partial aggregate ships only per-(partition, bucket)-per-map rows
+    totals = tagged.groupBy(*keys, "__bkt").agg(
+        *[agg(f"__v{i}").alias(f"__t{i}") for i, agg in enumerate(kinds)],
+        F.min(okey).alias("__om"),
+        F.max(okey).alias("__ox"),
+    )
+    w_p = Window.partitionBy(*keys)
+    w_lag = w_p.orderBy("__bkt")
+    w_b = w_lag.rowsBetween(Window.unboundedPreceding, -1)
+    excl = [agg(f"__t{i}").over(w_b) for i, agg in enumerate(kinds)]
+    excl = [
+        F.coalesce(e, F.lit(0)) if m[2] == "sum" else e
+        for e, m in zip(excl, measures)
+    ]
+    tot = {i: m[3] for i, m in enumerate(measures) if len(m) > 3}
+    # the guard rides every offset: a NULL bucket (its rows would miss
+    # the join while its total still fed the other offsets; it sorts
+    # first, so it raises first) or a bucket whose first order key is
+    # reached by the previous bucket's last (the bucket is not monotone
+    # and the buckets would silently interleave) raises. It sits on the
+    # offsets table, not on the rows, so ``__bkt`` stays a plain alias
+    # of the caller's expression and keeps any partitioning on it.
+    guard = F.when(
+        F.col("__bkt").isNull(),
+        F.raise_error(
+            F.lit(
+                f"{op}: bucket_of produced NULL for a non-NULL value — "
+                "the bucket expression must be a total, non-NULL "
+                "coarsening of the order key"
+            )
+        ),
+    ).when(
+        F.col("__pox") >= F.col("__om"),
         F.raise_error(
             F.concat(
                 F.lit(
-                    f"{op_name}: bucket_col is not monotone in "
-                    "order_by — bucket "
+                    f"{op}: bucket_col is not monotone in order_by — "
+                    "bucket "
                 ),
                 F.col("__bkt").cast("string"),
                 F.lit(
                     " starts at or before the previous bucket's last "
-                    "order key; derive the bucket from the leading "
-                    "order expression (e.g. hour-of-ts when ordering "
-                    "by ts)"
+                    "order key; derive the bucket from the leading order "
+                    "expression (e.g. hour-of-ts when ordering by ts)"
                 ),
             )
         ),
-    ).otherwise(off)
-
-
-def scalable_running_sum(
-    df: DataFrame,
-    bucket_col: Column | str,
-    order_by: Sequence[Column | str],
-    value_col: Column | str,
-    out_col: str = "running_sum",
-) -> DataFrame:
-    """Global running sum WITHOUT a single-partition window — the
-    distributed prefix-sum decomposition:
-
-    1. within-bucket prefix sums (windows partitioned by ``bucket_col``
-       — fully parallel);
-    2. per-bucket totals, offset by an exclusive running sum over the
-       TINY bucket-totals table (the only serial window, sized by the
-       bucket count, not the row count);
-    3. offsets broadcast back: global prefix = within + offset.
-
-    Requirements: ``bucket_col`` must be monotone in the global
-    ordering (e.g. an hour bucket when ordering by timestamp) — this
-    is ENFORCED (round-12): per-bucket min/max of the order tuple ride
-    the totals aggregate and adjacent buckets that overlap raise
-    loudly instead of silently interleaving the prefix. ``order_by``
-    must be a total order within buckets (plain ascending expressions;
-    negate numerics for descending) or the prefix is
-    partition-dependent. A naive ``Window.orderBy(ts)`` with no
-    partitionBy computes the same thing on ONE task — the classic
-    sweep-line scale bug this operator exists to avoid.
-    """
-    b = F.col(bucket_col) if isinstance(bucket_col, str) else bucket_col
-    v = F.col(value_col) if isinstance(value_col, str) else value_col
-    okey = _monotone_lead_key(order_by, "scalable_running_sum")
-    tagged = df.withColumn("__bkt", b).withColumn("__val", v)
-    w_in = (
-        Window.partitionBy("__bkt")
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    within = tagged.withColumn("__within", F.sum("__val").over(w_in))
-    totals = tagged.groupBy("__bkt").agg(
-        F.sum("__val").alias("__t"),
-        F.min(okey).alias("__om"),
-        F.max(okey).alias("__ox"),
-    )
-    w_b = (
-        Window.orderBy("__bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_lag = Window.orderBy("__bkt")
     offsets = totals.select(
+        *keys,
         "__bkt",
-        F.coalesce(F.sum("__t").over(w_b), F.lit(0)).alias("__off"),
+        *[e.alias(f"__o{i}") for i, e in enumerate(excl)],
+        *[kinds[i](f"__t{i}").over(w_p).alias(f"__n{i}") for i in tot],
         F.lag("__ox").over(w_lag).alias("__pox"),
         "__om",
     ).select(
-        "__bkt",
-        _checked_offset(F.col("__off"), "scalable_running_sum").alias(
-            "__off"
-        ),
+        *[F.col(k).alias(f"__p{j}") for j, k in enumerate(keys)],
+        F.col("__bkt").alias("__ob"),
+        *[
+            guard.otherwise(F.col(f"__o{i}")).alias(f"__o{i}")
+            for i in range(len(measures))
+        ],
+        *[f"__n{i}" for i in tot],
     )
+    # null-safe on the bucket too: an equi-join would infer a NOT NULL
+    # filter and drop a NULL bucket's offsets row before its guard runs
+    cond = F.col("__bkt").eqNullSafe(F.col("__ob"))
+    for j, k in enumerate(keys):
+        cond = cond & F.col(k).eqNullSafe(F.col(f"__p{j}"))
+    out = {}
+    for i, m in enumerate(measures):
+        w, o = F.col(f"__w{i}"), F.col(f"__o{i}")
+        # greatest() skips NULLs: the first bucket's max offset is NULL
+        out[m[0]] = w + o if m[2] == "sum" else F.greatest(w, o)
+    out.update({name: F.col(f"__n{i}") for i, name in tot.items()})
+    helpers = ["__bkt", "__ob", *[f"__p{j}" for j in range(len(keys))]]
+    helpers += [f"__{p}{i}" for i in range(len(measures)) for p in "vwon"]
     return (
-        within.join(F.broadcast(offsets), "__bkt")
-        .withColumn(out_col, F.col("__within") + F.col("__off"))
-        .drop("__bkt", "__val", "__within", "__off")
-    )
-
-
-def scalable_running_max(
-    df: DataFrame,
-    bucket_col: Column | str,
-    order_by: Sequence[Column | str],
-    value_col: Column | str,
-    out_col: str = "running_max",
-) -> DataFrame:
-    """Global running max without a single-partition window — the same
-    prefix decomposition as ``scalable_running_sum`` (max is equally
-    associative): within-bucket prefix maxima in parallel, an exclusive
-    running max over the tiny bucket-maxima table, then
-    ``greatest(within, offset)``. Same monotone-bucket requirement,
-    same loud guard (round-12)."""
-    b = F.col(bucket_col) if isinstance(bucket_col, str) else bucket_col
-    v = F.col(value_col) if isinstance(value_col, str) else value_col
-    okey = _monotone_lead_key(order_by, "scalable_running_max")
-    tagged = df.withColumn("__bkt", b).withColumn("__val", v)
-    w_in = (
-        Window.partitionBy("__bkt")
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    within = tagged.withColumn("__within", F.max("__val").over(w_in))
-    totals = tagged.groupBy("__bkt").agg(
-        F.max("__val").alias("__t"),
-        F.min(okey).alias("__om"),
-        F.max(okey).alias("__ox"),
-    )
-    w_b = Window.orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
-    w_lag = Window.orderBy("__bkt")
-    offsets = totals.select(
-        "__bkt",
-        F.max("__t").over(w_b).alias("__off"),
-        F.lag("__ox").over(w_lag).alias("__pox"),
-        "__om",
-    ).select(
-        "__bkt",
-        _checked_offset(F.col("__off"), "scalable_running_max").alias(
-            "__off"
-        ),
-    )
-    return (
-        within.join(F.broadcast(offsets), "__bkt")
-        .withColumn(
-            out_col,
-            F.when(
-                F.col("__off").isNull(), F.col("__within")
-            ).otherwise(F.greatest("__within", "__off")),
-        )
-        .drop("__bkt", "__val", "__within", "__off")
+        within.join(offsets if keys else F.broadcast(offsets), cond)
+        .withColumns(out)
+        .drop(*helpers)
     )
 
 
@@ -372,77 +385,44 @@ def pareto_frontier_2d(
     Equal (x, y) duplicates dominate nothing and are all kept.
 
     Distributed sweep: per distinct x, the max y (hash aggregate);
-    then the exclusive running max of those maxima over x DESC —
-    computed as within-bucket windows plus an exclusive max over the
-    tiny bucket-maxima table, never a single-task global window. A row
-    is on the frontier iff its y equals its x-group max AND strictly
-    exceeds the best y at any strictly larger x.
+    then a running max over x DESC of the struct (max y, x) through
+    :func:`bucketed_scan`, expressed as ascending order on -x with the
+    bucket negated. The running max at x is the best y at any x' >= x,
+    ties broken to the largest x', so a row is on the frontier iff its
+    y equals its x-group max AND that running max's x is its own x (no
+    strictly larger x reaches its y).
 
-    ``bucket_col`` (default: x itself) must be monotone in x — ENFORCED
-    (round-12, same loud guard as scalable_running_sum: per-bucket
-    min/max of x ride the bucket-maxima aggregate and overlapping
-    adjacent buckets raise); pass a coarse bucket (e.g.
+    ``x_col`` must be numeric (it is negated). Rows with a NULL x
+    dominate nothing and are never on the frontier. ``bucket_col``
+    (default: x itself) must be monotone in x and non-NULL — both
+    ENFORCED by the scan's guards; pass a coarse bucket (e.g.
     ``F.floor(F.col(x)/1000)``) when x is near-continuous so the
     serial window stays tiny.
     """
+    x = F.col(x_col)
     b = (
         F.col(bucket_col) if isinstance(bucket_col, str) else bucket_col
-    ) if bucket_col is not None else F.col(x_col)
+    ) if bucket_col is not None else x
+    # one row per distinct x, so the within-bucket windows and the
+    # bucket-offsets table are sized by distinct-x counts, not rows
     groups = (
-        df.withColumn("__bkt", b)
-        .groupBy("__bkt", x_col)
+        df.filter(x.isNotNull())
+        .withColumn("__pb", -b)
+        .groupBy("__pb", x_col)
         .agg(F.max(y_col).alias("__xmax"))
     )
-    # exclusive prefix max over x DESC: one row per distinct x, so the
-    # within-bucket window and the bucket-offsets table are both sized
-    # by distinct-x counts, not row counts
-    w_in = (
-        Window.partitionBy("__bkt")
-        .orderBy(F.col(x_col).desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    within = groups.withColumn("__excl", F.max("__xmax").over(w_in))
-    btot = groups.groupBy("__bkt").agg(
-        F.max("__xmax").alias("__t"),
-        F.min(x_col).alias("__om"),
-        F.max(x_col).alias("__ox"),
-    )
-    w_b = (
-        Window.orderBy(F.col("__bkt").desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_lag = Window.orderBy("__bkt")
-    boff = btot.select(
-        "__bkt",
-        F.max("__t").over(w_b).alias("__off"),
-        F.lag("__ox").over(w_lag).alias("__pox"),
-        "__om",
-    ).select(
-        "__bkt",
-        _checked_offset(F.col("__off"), "pareto_frontier_2d").alias(
-            "__off"
-        ),
-    )
-    marks = (
-        within.join(F.broadcast(boff), "__bkt")
-        .select(
-            x_col,
-            "__xmax",
-            # greatest() skips NULLs: null only when both are null
-            F.greatest("__excl", "__off").alias("__better"),
-        )
-    )
+    marks = bucketed_scan(
+        groups,
+        "__pb",
+        [-x],
+        [("__best", F.struct("__xmax", x_col), "max")],
+        op="pareto_frontier_2d",
+    ).select(x_col, "__xmax", F.col("__best").getField(x_col).alias("__bx"))
     return (
         # no broadcast hint: marks is sized by distinct-x — small for
         # discrete x, so AQE picks broadcast; a hint would be wrong for
         # near-continuous x
         df.join(marks, x_col)
-        .filter(
-            (F.col(y_col) == F.col("__xmax"))
-            & (
-                F.col("__better").isNull()
-                | (F.col(y_col) > F.col("__better"))
-            )
-        )
-        .drop("__xmax", "__better")
+        .filter((F.col(y_col) == F.col("__xmax")) & (F.col("__bx") == x))
+        .drop("__xmax", "__bx")
     )

@@ -1,13 +1,22 @@
 """Regenerate tests/plan_snapshots.json — the pinned scale-critical
-plan shape of every registered query at the test fixture scale.
+plan shape of every registered query at the test fixture scale — or
+dump full formatted plans for review.
 
-Usage: python scripts/snapshot_plans.py
-Run after any deliberate plan change; the diff of the JSON is the
-review artifact (a lost broadcast or a new shuffle shows up as a
-counter bump)."""
+Usage:
+  python scripts/snapshot_plans.py
+      Rewrite tests/plan_snapshots.json at $SPARK_GRAFT_TEST_SF
+      (default sf0.001). Run after any deliberate plan change; the diff
+      of the JSON is the review artifact (a lost broadcast or a new
+      shuffle shows up as a counter bump).
+  python scripts/snapshot_plans.py --dump OUTDIR [query ...]
+      Write explain("formatted") of each named query (default: all)
+      at $SPARK_GRAFT_SF_DIR (default sf0.1) to OUTDIR/<query>.txt.
+      Run once before and once after a change and diff the two
+      directories."""
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -38,7 +47,7 @@ def tracked_counts(plan: str) -> dict[str, int]:
     return {t: ops.count(t) for t in TRACKED if ops.count(t)}
 
 
-def main() -> None:
+def snapshot() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
     # generate under the SAME pinned environment the test fixture uses
     # (tests/conftest.py _PLAN_SHAPING_ENV): session-config env vars
@@ -60,6 +69,35 @@ def main() -> None:
     out = Path(__file__).parent.parent / "tests" / "plan_snapshots.json"
     out.write_text(json.dumps(snap, indent=1, sort_keys=True) + "\n")
     print(f"wrote {out} ({len(snap)} queries)")
+
+
+def dump(outdir: str, only: list[str]) -> None:
+    os.makedirs(outdir, exist_ok=True)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark(app_name="dump-plans")
+    spark.sparkContext.setLogLevel("ERROR")
+    qs = entrymod.queries()
+    for name in only or sorted(qs):
+        try:
+            plan = explain_str(qs[name](spark, sf_dir), mode="formatted")
+        except Exception as ex:  # noqa: BLE001
+            plan = f"ERROR: {ex}"
+        with open(os.path.join(outdir, f"{name}.txt"), "w") as f:
+            f.write(plan)
+        print(name, flush=True)
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--dump", metavar="OUTDIR")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    if args.dump:
+        dump(args.dump, args.queries)
+    elif args.queries:
+        ap.error("query names need --dump OUTDIR")
+    else:
+        snapshot()
 
 
 if __name__ == "__main__":

@@ -351,7 +351,6 @@ def test_pareto_frontier_equals_brute_force(spark):
         (i, rng.randint(0, 12), float(rng.randint(0, 12)))
         for i in range(400)
     ]
-    df = spark.createDataFrame(rows, "id long, x int, y double")
     brute = {
         (i, x, y)
         for (i, x, y) in rows
@@ -360,6 +359,10 @@ def test_pareto_frontier_equals_brute_force(spark):
             for (_, qx, qy) in rows
         )
     }
+    # rows with a NULL coordinate dominate nothing and are never on
+    # the frontier (a NULL x never reaches the scan's bucket guard)
+    rows += [(400, None, 99.0), (401, 13, None), (402, None, None)]
+    df = spark.createDataFrame(rows, "id long, x int, y double")
     got = {
         (r.id, r.x, r.y) for r in pareto_frontier_2d(df, "x", "y").collect()
     }
@@ -375,13 +378,17 @@ def test_pareto_frontier_equals_brute_force(spark):
     }
     assert got_b == brute
     # round-12: a bucket NOT monotone in x raises loudly (the same
-    # guard as scalable_running_sum) instead of silently skipping
+    # guard as every bucketed_scan) instead of silently skipping
     # cross-bucket dominance
     import pytest
 
     with pytest.raises(Exception, match="not monotone"):
         pareto_frontier_2d(
             df, "x", "y", bucket_col=F.col("x") % 3
+        ).collect()
+    with pytest.raises(Exception, match="bucket_of produced NULL"):
+        pareto_frontier_2d(
+            df, "x", "y", bucket_col=F.when(F.col("x") > 2, F.col("x"))
         ).collect()
 
 

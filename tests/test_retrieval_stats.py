@@ -1343,13 +1343,17 @@ def test_scalable_group_quantiles_equals_plain_form(spark):
     bit-identical to exact_group_quantiles for any valid bucketing —
     including NULL group keys (a real group), single-bucket
     degenerate bucketing, ties, and finer-than-needed buckets. The
-    monotone-bucket and NULL-bucket guards raise loudly."""
+    monotone-bucket and NULL-bucket guards raise loudly. The grouped
+    KS drift monitor's bucket_of path runs through the same scan and
+    must equal its plain per-group-window path under the same
+    bucketings and guards."""
     import random
 
     import pytest as _pytest
 
     from etl_spark_spark.operators.stats import (
         exact_group_quantiles,
+        ks_drift_by_group,
         scalable_group_quantiles,
     )
 
@@ -1401,6 +1405,80 @@ def test_scalable_group_quantiles_equals_plain_form(spark):
         scalable_group_quantiles(
             gv, ["k"], "v", bucket_of=F.lit(0)
         ).collect()
+
+    kdf = spark.createDataFrame(
+        [(k, rng.choice("AB"), v) for k, v in rows], "k string, g string, v int"
+    )
+    ks_plain = {
+        tuple(r) for r in ks_drift_by_group(kdf, ["k"], "v", "g").collect()
+    }
+    assert len(ks_plain) == 3
+    for bucket in (
+        F.floor(F.col("v") / 50),
+        F.floor(F.col("v") / 7),
+        F.lit(0),
+        F.col("v"),
+    ):
+        got = {
+            tuple(r)
+            for r in ks_drift_by_group(
+                kdf, ["k"], "v", "g", bucket_of=bucket
+            ).collect()
+        }
+        assert got == ks_plain
+    with _pytest.raises(
+        Exception, match="ks_drift_by_group: bucket_col is not monotone"
+    ):
+        ks_drift_by_group(
+            kdf, ["k"], "v", "g", bucket_of=F.col("v") % 2
+        ).collect()
+    with _pytest.raises(
+        Exception, match="ks_drift_by_group: bucket_of produced NULL"
+    ):
+        ks_drift_by_group(
+            kdf,
+            ["k"],
+            "v",
+            "g",
+            bucket_of=F.when(F.col("v") < 400, F.col("v")),
+        ).collect()
+
+
+def test_scalable_group_quantiles_no_forced_broadcast(spark):
+    """The quantile offsets table is per-(group, bucket), so it grows
+    with group cardinality: with broadcasts disabled by threshold, a
+    10k-group quantile plans no BroadcastExchange (a hint would force
+    one) and still equals the plain form. An unpartitioned
+    bucketed_scan's offsets table is sized by the bucket count and
+    keeps its broadcast under the same setting."""
+    from etl_spark_spark.operators.stats import (
+        exact_group_quantiles,
+        scalable_group_quantiles,
+    )
+    from etl_spark_spark.operators.windows import bucketed_scan
+    from etl_spark_spark.plans import explain_str
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df = spark.range(0, 30000).select(
+            (F.col("id") % 10007).alias("g"),
+            ((F.col("id") * 7919) % 1000).alias("v"),
+        )
+        q = scalable_group_quantiles(
+            df, ["g"], "v", bucket_of=F.floor(F.col("v") / 100)
+        )
+        assert "BroadcastExchange" not in explain_str(q)
+        want = exact_group_quantiles(df, ["g"], "v")
+        assert q.exceptAll(want).isEmpty() and want.exceptAll(q).isEmpty()
+
+        scan = bucketed_scan(
+            df, F.floor(F.col("v") / 100), ["v", "g"], [("r", "v", "sum")]
+        )
+        assert "BroadcastExchange" in explain_str(scan)
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_theil_sen_blocked_pair_path_identical(spark):

@@ -317,13 +317,15 @@ def test_pagerank_exact_empty_graph(spark):
 
 
 def test_scalable_running_sum_equals_global_window(spark):
-    """Distributed prefix-sum decomposition == the naive single-task
+    """Distributed prefix-scan decomposition == the naive single-task
     global window, on data that crosses many buckets with duplicate
-    order keys."""
+    order keys — a running sum and a running max carried by one
+    two-measure bucketed_scan, with per-scan totals off the offsets
+    table."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from etl_spark_spark.operators.windows import scalable_running_sum
+    from etl_spark_spark.operators.windows import bucketed_scan
 
     df = (
         spark.range(0, 5000)
@@ -333,13 +335,24 @@ def test_scalable_running_sum_equals_global_window(spark):
             F.col("id").alias("tie"),
         )
     )
-    got = scalable_running_sum(
-        df, (F.col("t") / 10).cast("long"), [F.col("t"), F.col("tie")], "v"
+    got = bucketed_scan(
+        df,
+        (F.col("t") / 10).cast("long"),
+        [F.col("t"), F.col("tie")],
+        [
+            ("running_sum", "v", "sum", "total"),
+            ("running_max", F.col("v") * F.col("t"), "max"),
+        ],
     )
     w = Window.orderBy("t", "tie").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    want = df.withColumn("running_sum", F.sum("v").over(w))
+    want = (
+        df.withColumn("running_sum", F.sum("v").over(w))
+        .withColumn("running_max", F.max(F.col("v") * F.col("t")).over(w))
+        .withColumn("total", F.sum("v").over(Window.partitionBy()))
+    )
+    assert got.columns == want.columns
     assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
 
 
@@ -350,33 +363,46 @@ def test_scalable_running_monotone_bucket_guard(spark):
     ranges now ride the totals aggregate and overlap raises loudly;
     SortOrder items are rejected up front (the guard needs comparable
     plain expressions — negate numerics for descending), and the
-    negated-ascending form still matches the naive global window."""
+    negated-ascending form still matches the naive global window.
+    A NULL bucket raises too: the offset join used to drop its rows
+    while their total still fed the other buckets' offsets (7 rows
+    with sums 4..10 instead of 10 rows with 1..10), or, with the NULL
+    rows last, to raise a misleading "not monotone"."""
     import pytest
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from etl_spark_spark.operators.windows import (
-        scalable_running_max,
-        scalable_running_sum,
-    )
+    from etl_spark_spark.operators.windows import bucketed_scan
 
     df = spark.range(0, 100).select(
         F.col("id").alias("t"), F.lit(1).cast("long").alias("v")
     )
-    with pytest.raises(Exception, match="not monotone"):
-        scalable_running_sum(df, F.col("t") % 7, ["t"], "v").collect()
-    with pytest.raises(Exception, match="not monotone"):
-        scalable_running_max(df, F.col("t") % 7, ["t"], "v").collect()
+    for kind in ("sum", "max"):
+        with pytest.raises(Exception, match="not monotone"):
+            bucketed_scan(
+                df, F.col("t") % 7, ["t"], [("r", "v", kind)]
+            ).collect()
     with pytest.raises(ValueError, match="plain ascending"):
-        scalable_running_sum(
-            df, (F.col("t") / 10).cast("long"), [F.col("t").desc()], "v"
+        bucketed_scan(
+            df,
+            (F.col("t") / 10).cast("long"),
+            [F.col("t").desc()],
+            [("r", "v", "sum")],
         )
-    got = scalable_running_sum(
+    small = df.filter(F.col("t") < 10)
+    for null_side in (F.col("t") >= 3, F.col("t") < 7):
+        with pytest.raises(Exception, match="bucket_of produced NULL"):
+            bucketed_scan(
+                small,
+                F.when(null_side, (F.col("t") / 3).cast("long")),
+                ["t"],
+                [("r", "v", "sum")],
+            ).collect()
+    got = bucketed_scan(
         df,
         -((F.col("t") / 10).cast("long")),
         [(-F.col("t"))],
-        "v",
-        out_col="rs",
+        [("rs", "v", "sum")],
     )
     w = Window.orderBy(F.col("t").desc()).rowsBetween(
         Window.unboundedPreceding, Window.currentRow

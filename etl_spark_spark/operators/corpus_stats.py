@@ -108,7 +108,8 @@ def source_shingle_overlap(
     in N. Both join sides are corpus-vocabulary-sized and merge-hinted:
     distinct shingle tables compress misleadingly well, and AQE's
     dynamic broadcast must never build them driver-side (same failure
-    class as the 100x jaccard_for_pairs OOM, neardup.py:104).
+    class as the 100x driver OOM documented in
+    ``neardup.pair_overlap_counts``).
     """
     sh = (
         docs.select(

@@ -176,79 +176,6 @@ def lsh_candidate_pairs(
     )
 
 
-def jaccard_for_pairs(
-    pairs: DataFrame, shingles: DataFrame, id_col: str
-) -> DataFrame:
-    """Exact Jaccard for candidate pairs. Returns (id_a, id_b,
-    jaccard). Pairs with ZERO shingle intersection are emitted with
-    jaccard 0.0 (the whole-set join keeps every candidate row) — a
-    deliberate contract change from the pre-round-4 shared-shingle
-    inner join, which dropped disjoint pairs; filter ``jaccard > 0``
-    for the old behavior.
-
-    Scale shape (round-4, replacing the pair-x-shingle join): collapse
-    each doc's shingles to ONE row carrying the set as a sorted array,
-    then attach both sets to each candidate pair and intersect with
-    ``array_intersect`` map-side. Cost is linear in |pairs| + |docs|.
-    The previous formulation exploded every pair by its shingles
-    before re-aggregating — |pairs| x |shingles/doc| rows (1.3B on the
-    100x verbatim-twin replica, where 32.8M candidate pairs x ~40
-    shingles each) — and AQE's dynamic broadcast walked the
-    well-compressed pair table (two near-sequential long columns)
-    under the 64 MB threshold, OOM-ing the driver on the in-memory
-    build. The pairs side is hinted ``merge`` so the unbounded table
-    is never broadcast regardless of how well it compresses; per-doc
-    set arrays are bounded by doc length, so the row width is bounded.
-    """
-    return pair_set_stats(pairs, shingles, id_col).select(
-        "id_a",
-        "id_b",
-        (
-            F.col("__i") / (F.col("__na") + F.col("__nb") - F.col("__i"))
-        ).alias("jaccard"),
-    )
-
-
-def pair_set_stats(
-    pairs: DataFrame, shingles: DataFrame, id_col: str
-) -> DataFrame:
-    """Exact per-pair set statistics (id_a, id_b, __i intersection,
-    __na, __nb side sizes) for candidate pairs — the shared scale-safe
-    core of ``jaccard_for_pairs`` and ``containment_pairs``: collapse
-    each doc's shingles to ONE sorted-array row, attach both arrays to
-    each pair, intersect map-side with ``array_intersect``. Linear in
-    |pairs| + |docs|; all three join sides merge-hinted (candidate and
-    set tables compress misleadingly well on duplicate-heavy corpora,
-    and AQE's dynamic broadcast must never build either driver-side —
-    the 100x-replica OOM documented in ``jaccard_for_pairs``)."""
-    sets = shingles.groupBy(id_col).agg(
-        F.sort_array(F.collect_set("shingle")).alias("__ss")
-    )
-    a = sets.select(
-        F.col(id_col).alias("id_a"),
-        F.col("__ss").alias("__sa"),
-        F.size("__ss").alias("__na"),
-    )
-    b = sets.select(
-        F.col(id_col).alias("id_b"),
-        F.col("__ss").alias("__sb"),
-        F.size("__ss").alias("__nb"),
-    )
-    inter = F.size(F.array_intersect("__sa", "__sb"))
-    return (
-        pairs.hint("merge")
-        .join(a.hint("merge"), "id_a")
-        .join(b.hint("merge"), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            inter.alias("__i"),
-            "__na",
-            "__nb",
-        )
-    )
-
-
 def pair_overlap_counts(
     pairs: DataFrame,
     shingles: DataFrame,
@@ -262,10 +189,12 @@ def pair_overlap_counts(
 
     Scale shape: the only pair-proportional intermediate is
     |pairs| x |a-side set| NARROW rows (two ids + a 128-bit shingle
-    fingerprint ≈ 32 bytes) — vs :func:`pair_set_stats`, which attaches
-    two KB-scale sorted arrays to EVERY pair and whose sort spill
-    DNF'd the 100x verbatim-twin replica on this box's 73 GB scratch
-    (BASELINE.md round-4). Shingles are matched on two independent
+    fingerprint ≈ 32 bytes). Two earlier verifiers failed on the 100x
+    verbatim-twin replica (BASELINE.md rounds 4-5): exploding every
+    pair by its shingles made |pairs| x |shingles/doc| rows (1.3B from
+    32.8M candidate pairs), and attaching both docs' KB-scale sorted
+    shingle arrays to every pair ran the sort spill out of 73 GB of
+    scratch. Shingles are matched on two independent
     xxhash64 fingerprints (128 bits total, computed map-side, never
     leaving the query): a spurious count needs two DISTINCT shingles
     within one pair's sets to collide on BOTH halves —
@@ -275,9 +204,10 @@ def pair_overlap_counts(
     it bit-for-bit where it is feasible to check.
 
     All sides merge-hinted: candidate and posting tables compress
-    misleadingly well on duplicate-heavy corpora, and AQE's dynamic
-    broadcast must never build either driver-side (the measured 100x
-    OOM documented in ``jaccard_for_pairs``).
+    misleadingly well on duplicate-heavy corpora (two near-sequential
+    long columns), and AQE's dynamic broadcast must never build either
+    driver-side — on the 100x replica it walked the pair table under
+    the 64 MB threshold and OOM-ed the driver on the in-memory build.
 
     Inner semantics: pairs with EMPTY intersection do not appear —
     callers thresholding at a similarity > 0 lose nothing.
@@ -391,7 +321,7 @@ def expand_collapsed_pairs(
     value_cols = [c for c in rep_pairs.columns if c not in ("id_a", "id_b")]
     # merge hints: members is corpus-sized with near-sequential long
     # columns — the lying-compression shape AQE's dynamic broadcast
-    # must never build driver-side (same rule as pair_set_stats)
+    # must never build driver-side (same rule as pair_overlap_counts)
     cross = (
         rep_pairs.hint("merge")
         .join(
@@ -898,9 +828,10 @@ def est_jaccard_for_pairs(
 ) -> DataFrame:
     """MinHash-ESTIMATED Jaccard for candidate pairs: the fraction of
     agreeing signature components (the standard unbiased estimator).
-    Unlike ``jaccard_for_pairs`` this needs only the k-component
-    signatures, not the shingle sets — which is what makes a compact
-    persistent dedup index possible. Returns (id_a, id_b, est_jaccard)."""
+    Unlike the exact verifier (:func:`pair_overlap_counts`) this needs
+    only the k-component signatures, not the shingle sets — which is
+    what makes a compact persistent dedup index possible. Returns
+    (id_a, id_b, est_jaccard)."""
     sig_a = signatures.select(
         F.col(id_col).alias("id_a"),
         *[F.col(f"mh{p}").alias(f"a{p}") for p in range(num_perms)],
@@ -913,7 +844,7 @@ def est_jaccard_for_pairs(
         F.when(F.col(f"a{p}") == F.col(f"b{p}"), 1).otherwise(0)
         for p in range(num_perms)
     )
-    # same never-broadcast rule as jaccard_for_pairs, on ALL THREE
+    # same never-broadcast rule as pair_overlap_counts, on ALL THREE
     # unbounded sides: the pair table AND both corpus-sized signature
     # tables (verbatim-duplicate replicas repeat each md5 component
     # ~N_twin times, so the sig shuffle compresses far below its
@@ -1119,9 +1050,9 @@ def ngram_jaccard_pairs(
     once at call time — callers composing this over an expensive
     upstream pipeline on a corpus they already bound can pass
     ``max_docs=None`` to skip the probe (an auditable opt-out). For
-    big corpora use ``near_dup_minhash`` / ``lsh_candidate_pairs`` +
-    ``jaccard_for_pairs``, which compute the same exact Jaccard but
-    only for banded candidate pairs.
+    big corpora use ``near_dup_minhash`` (``lsh_candidate_pairs`` +
+    :func:`pair_overlap_counts`), which computes the same exact Jaccard
+    but only for banded candidate pairs.
 
     ``collapse_identical=True`` (default) runs the quadratic shingle
     join over DISTINCT shingle sets only and expands pairs back
@@ -1615,7 +1546,7 @@ def _simhash_near_dup_probe(
     :func:`simhash_near_dup`. Both join sides merge-hinted: the posting
     tables are corpus-sized near-sequential longs that compress
     misleadingly well (the AQE dynamic-broadcast hazard documented in
-    ``jaccard_for_pairs``)."""
+    :func:`pair_overlap_counts`)."""
     from itertools import combinations
 
     num_bands, band_bits, flips = plan_simhash_probe(threshold)

@@ -1,16 +1,17 @@
-"""End-to-end jobs: the reference's two scheduled pipelines, composed
-from this engine's operators with Spark-native sinks.
+"""End-to-end jobs: the reference's monthly ressarcimento backfill,
+composed from this engine's operators with a Spark-native sink.
 
-Reference parity (etl_job.py:28-114 in /root/reference):
-- superdesconto job: build the best-sale view, MERGE into the target
-  keyed on etiqueta (reference: collect to pandas -> Athena MERGE,
-  etl_job.py:68-85; here: executor-side keyed upsert).
-- ressarcimento backfill: gated to month-start days, one run per year
-  since ``start_year``; first year replaces the target, later years
-  append (reference etl_job.py:91-110), each run guarded on
-  non-emptiness via isEmpty() rather than a driver collect.
+Reference parity (etl_job.py:91-110): gated to month-start days, one
+run per year since ``start_year``; first year replaces the target,
+later years append, each run guarded on non-emptiness via isEmpty()
+rather than a driver collect.
 
-Both jobs take the date/gate context as plain arguments so they are
+The reference's other scheduled job — the daily superdesconto MERGE
+on ``etiqueta`` (etl_job.py:28-85) — is ``pipelines.daily_loop.
+run_daily_loop``: an index-pruned window read, the best-sale
+transform, and a versioned MERGE commit.
+
+The job takes the date/gate context as plain arguments so it is
 trivially schedulable (cron/Airflow/Workflows) and testable.
 """
 
@@ -21,34 +22,9 @@ import datetime as dt
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..sinks import upsert, write
-from .incremental import backfill_years, date_window, run_guarded, should_run_monthly
+from ..sinks import write
+from .incremental import backfill_years, run_guarded, should_run_monthly
 from .ressarcimento import allocation_pipeline
-from .superdesconto import best_sale_pipeline
-
-
-def run_superdesconto_job(
-    spark: SparkSession,
-    sf_dir: str,
-    target_path: str,
-    today: dt.date | None = None,
-) -> int:
-    """Daily best-sale MERGE: compute the window for ``today`` (with
-    month-rollback), restrict the feed to it, upsert on etiqueta.
-    Returns the number of rows merged."""
-    today = today or dt.date.today()
-    start, end = date_window(today)
-    view = best_sale_pipeline(spark, sf_dir, start=start, end=end)
-    # cache: the guard count and upsert's one-pass merge would
-    # otherwise each re-execute the full pipeline (2 scans)
-    view = view.persist()
-    try:
-        n = view.count()
-        if n:
-            upsert(spark, view, target_path, keys=["etiqueta"])
-    finally:
-        view.unpersist()
-    return n
 
 
 def run_ressarcimento_backfill(

@@ -5,8 +5,8 @@ from .write import (
     write_bucketed,
     write_range_sorted,
     write_sized,
-    write_zordered,
 )
+from .zorder import write_zordered
 
 from .catalog import (
     build_merge_sql,

@@ -54,11 +54,14 @@ expressed with filesystem primitives —
   object store the same property falls out of delete-after-read
   visibility; set ``keep`` to cover the longest-running reader.
 
-Concurrent writers: ``merge_into_versioned`` is a full optimistic-
-concurrency loop — read current version, compute the merge, commit
-with ``expected_current`` CAS; on conflict it re-reads and re-merges,
-so two interleaved merges both land and neither update is lost (pinned
-by test). Cross-table transactions still need a real catalog.
+Concurrent writers: ``merge_into_versioned`` and
+``apply_snapshot_delta`` commit through one optimistic-concurrency
+loop (:func:`_commit_optimistic`) — read current version, build the
+snapshot, commit with ``expected_current`` CAS; on conflict it
+re-reads and rebuilds, so two interleaved merges both land and neither
+update is lost (pinned by test). ``compact_table`` makes a single CAS
+attempt and does not retry. Cross-table transactions still need a
+real catalog.
 
 At 100 TB: copy-on-write rewrites the whole table per merge. That is
 the honest cost of plain-parquet MERGE; the partition-scoped
@@ -72,7 +75,7 @@ import operator
 import os
 import shutil
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from functools import reduce
 from pathlib import Path
 
@@ -376,28 +379,46 @@ def merge_into_versioned(
     if when_matched not in ("update", "delete"):
         raise ValueError(f"when_matched must be update|delete, got {when_matched!r}")
     keys = list(keys)
+
+    def merge_onto(target: DataFrame | None) -> DataFrame:
+        if target is not None:
+            return keyed_merge(
+                target, source_df, keys, when_matched, insert_unmatched
+            )
+        if not insert_unmatched:
+            raise ValueError(
+                "nothing to merge: empty table and insert_unmatched=False"
+            )
+        return source_df
+
+    return _commit_optimistic(spark, path, fmt, merge_onto, max_retries, "merge")
+
+
+def _commit_optimistic(
+    spark: SparkSession,
+    path: str | Path,
+    fmt: str,
+    build: Callable[[DataFrame | None], DataFrame],
+    max_retries: int,
+    what: str,
+) -> int:
+    """The optimistic-concurrency commit loop: read the current version,
+    build the next snapshot from it (``build(None)`` on an empty table),
+    and commit with a CAS on the version read. When another writer
+    committed in between, re-read and rebuild on top of its commit, up
+    to ``max_retries`` times. Returns the committed version."""
     last_err: ConcurrentWriteError | None = None
     for _ in range(max_retries):
         cur = current_version(path)
-        if cur is None:
-            if not insert_unmatched:
-                raise ValueError(
-                    "nothing to merge: empty table and insert_unmatched=False"
-                )
-            merged = source_df
-        else:
-            target = read_versioned(spark, path, cur, fmt)
-            merged = keyed_merge(
-                target, source_df, keys, when_matched, insert_unmatched
-            )
+        target = None if cur is None else read_versioned(spark, path, cur, fmt)
         try:
             return write_version(
-                spark, merged, path, fmt, expected_current=cur
+                spark, build(target), path, fmt, expected_current=cur
             )
         except ConcurrentWriteError as e:
-            last_err = e  # someone committed under us: re-read, re-merge
+            last_err = e  # someone committed under us: re-read, rebuild
     raise ConcurrentWriteError(
-        f"merge lost the commit race {max_retries} times"
+        f"{what} lost the commit race {max_retries} times"
     ) from last_err
 
 
@@ -481,31 +502,22 @@ def apply_snapshot_delta(
     version."""
     keys = list(keys)
     upserts = delta.filter(F.col("change_type") != "delete").drop("change_type")
-    touched = delta.select(*keys).distinct()
-    last_err: ConcurrentWriteError | None = None
-    for _ in range(max_retries):
-        cur = current_version(path)
-        if cur is None:
-            merged = upserts
-        else:
-            target = read_versioned(spark, path, cur, fmt)
-            # NULL-safe anti join: the diff matches NULL keys with
-            # eqNullSafe, so the apply must too — a plain anti join
-            # would leave a NULL-keyed target row behind its update
-            t = target.alias("t")
-            d = touched.alias("d")
-            cond = [
-                F.col(f"t.{k}").eqNullSafe(F.col(f"d.{k}")) for k in keys
-            ]
-            untouched = t.join(d, cond, "left_anti").select("t.*")
-            merged = untouched.unionByName(upserts, allowMissingColumns=True)
-        try:
-            return write_version(spark, merged, path, fmt, expected_current=cur)
-        except ConcurrentWriteError as e:
-            last_err = e
-    raise ConcurrentWriteError(
-        f"delta apply lost the commit race {max_retries} times"
-    ) from last_err
+    d = delta.select(*keys).distinct().alias("d")
+
+    def apply_onto(target: DataFrame | None) -> DataFrame:
+        if target is None:
+            return upserts
+        # NULL-safe anti join: the diff matches NULL keys with
+        # eqNullSafe, so the apply must too — a plain anti join would
+        # leave a NULL-keyed target row behind its update
+        t = target.alias("t")
+        cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"d.{k}")) for k in keys]
+        untouched = t.join(d, cond, "left_anti").select("t.*")
+        return untouched.unionByName(upserts, allowMissingColumns=True)
+
+    return _commit_optimistic(
+        spark, path, fmt, apply_onto, max_retries, "delta apply"
+    )
 
 
 def compact_table(

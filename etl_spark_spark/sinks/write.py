@@ -8,13 +8,19 @@ This engine writes with Spark executors:
 - ``write``   — replace/append parquet (or saveAsTable), optional
   partitioning and bucketing (bucketing pre-shuffles recurring join keys
   so later joins are exchange-free).
+- ``write_range_sorted`` / ``write_sized`` — single-column clustered and
+  size-calibrated layouts. The multi-column z-order layout is
+  ``sinks.zorder.write_zordered`` (re-exported as ``sinks.write_zordered``).
 - ``upsert``  — keyed MERGE. On a Delta/Iceberg catalog this should be
   ``MERGE INTO`` SQL; without one (this test harness) we emulate it with
   ``sinks.versioned.keyed_merge`` (target and source unioned, one window
   on the key decides which rows survive, each input planned once) + an
   atomic directory swap, which preserves the reference's MERGE-on-key
   semantics (etl_job.py:79-85: target rows whose key appears in the
-  source are replaced).
+  source are replaced). :func:`_swap_dir` is the one swap with
+  backup-and-restore, used for the whole table and for each touched
+  partition. The snapshot-versioned MERGE the daily loop commits
+  through is ``sinks.versioned.merge_into_versioned``.
 
 The empty-result guard uses ``df.isEmpty()`` — a cheap limit-1 job — not
 the reference's collect-then-``.empty`` check (etl_job.py:102).
@@ -22,9 +28,15 @@ the reference's collect-then-``.empty`` check (etl_job.py:102).
 
 from __future__ import annotations
 
+import operator
+import shutil
+import tempfile
 from collections.abc import Sequence
+from functools import reduce
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .versioned import keyed_merge
 
@@ -94,9 +106,10 @@ def write_range_sorted(
     filter can skip anything; after this write a time- or key-range
     query touches only the files that cover it. This is the
     single-column z-order degenerate case — for one predicate column,
-    plain range clustering IS the optimal layout (true multi-column
-    z-order needs bit-interleaving; compose ``order_by`` with the
-    leading column first for the common prefix-filter case).
+    plain range clustering IS the optimal layout (multi-column
+    predicates need the bit-interleaved ``sinks.zorder.write_zordered``;
+    compose ``order_by`` with the leading column first for the common
+    prefix-filter case).
 
     One shuffle (the range exchange, driven by a sample pass), then a
     partition-local sort that spills gracefully — no global sort, no
@@ -109,83 +122,6 @@ def write_range_sorted(
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     writer.save(path)
-
-
-def zorder_key(
-    normalized: Sequence["object"], bits: int = 16
-):
-    """Interleave the bits of pre-normalized integer columns (each in
-    [0, 2**bits)) into one long z-value: bit b of column j lands at
-    position ``b * n_cols + j``. 2 cols x 16 bits = a 32-bit z in a
-    long — a pure expression, no UDF."""
-    from pyspark.sql import functions as F
-
-    n = len(normalized)
-    z = F.lit(0).cast("long")
-    for b in range(bits):
-        for j, c in enumerate(normalized):
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(c, b).bitwiseAND(F.lit(1)), b * n + j)
-            )
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    num_files: int = 32,
-    bits: int = 16,
-    mode: str = "overwrite",
-    fmt: str = "parquet",
-) -> None:
-    """Write with a MULTI-column z-order clustered layout (the Delta
-    ``OPTIMIZE ZORDER BY`` capability, built from expressions): each
-    column is min/max-normalized to ``bits`` bits, the bits are
-    interleaved into one z-value, and files are range-partitioned +
-    sorted on it. Each output file then covers a small HYPER-RECTANGLE
-    of the key space, so footer min/max stats discriminate on EVERY
-    ``cols`` member — range clustering on one column can't do that for
-    predicates on the others.
-
-    Cost at 100 TB: one tiny min/max aggregate (broadcast back), one
-    range exchange, one local sort — same shape as
-    ``write_range_sorted``, plus ~``bits * len(cols)`` bitwise ops per
-    row (codegen-side). Normalization is value-linear; heavily skewed
-    columns cluster better with a rank/quantile transform first
-    (compose with ``F.ntile`` or a precomputed CDF if needed).
-    """
-    from pyspark.sql import functions as F
-
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}")]
-    stats = df.agg(*aggs)
-    joined = df.crossJoin(F.broadcast(stats))
-    top = (1 << bits) - 1
-    normalized = []
-    for c in cols:
-        mn = F.col(f"__mn_{c}").cast("double")
-        mx = F.col(f"__mx_{c}").cast("double")
-        span = mx - mn
-        scaled = F.when(
-            span > 0,
-            F.least(
-                F.lit(top).cast("long"),
-                F.floor(
-                    (F.col(c).cast("double") - mn) / span * F.lit(float(1 << bits))
-                ).cast("long"),
-            ),
-        ).otherwise(F.lit(0).cast("long"))
-        normalized.append(scaled)
-    z = zorder_key(normalized, bits)
-    clustered = (
-        joined.withColumn("__z", z)
-        .repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z", *[f"__mn_{c}" for c in cols], *[f"__mx_{c}" for c in cols])
-    )
-    clustered.write.format(fmt).mode(mode).save(path)
 
 
 def upsert(
@@ -202,122 +138,82 @@ def upsert(
     Emulation for plain-parquet targets: the rows of target ⟕anti
     source ∪ source, computed in one pass by
     :func:`~etl_spark_spark.sinks.versioned.keyed_merge`, written to a
-    temp dir then swapped. With a Delta/Iceberg catalog,
-    use ``MERGE INTO`` instead (same interface, engine-managed ACID).
+    temp dir then swapped in by :func:`_swap_dir`. With a Delta/Iceberg
+    catalog, use ``MERGE INTO`` instead (same interface, engine-managed
+    ACID).
 
     When the target is Hive-partitioned, pass ``partition_by`` and ONLY
-    the partitions the source touches are read, merged, and swapped —
-    the dynamic-partition-overwrite shape. At 100 TB this is the
-    difference between rewriting a day and rewriting a decade: cost is
-    O(touched partitions), and untouched partition directories are
-    never opened (their files keep their exact bytes and mtimes).
-    Requirement: rows must not MOVE partitions between upserts (the
-    partition columns are effectively part of the key, the same
-    contract as Hive/Glue dynamic overwrite); partition/key columns
-    must be non-null.
+    the partitions the source touches are read (literal predicates ->
+    partition pruning at the scan), merged, and swapped leaf directory
+    by leaf directory — the dynamic-partition-overwrite shape. At
+    100 TB this is the difference between rewriting a day and
+    rewriting a decade: cost is O(touched partitions), and untouched
+    partition directories are never opened (their files keep their
+    exact bytes and mtimes). Requirement: rows must not MOVE partitions
+    between upserts (the partition columns are effectively part of the
+    key, the same contract as Hive/Glue dynamic overwrite);
+    partition/key columns must be non-null.
     """
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     keys = list(keys)
+    pcols = list(partition_by or [])
     target = Path(target_path)
     if not target.exists():
-        write(
-            source_df,
-            target_path,
-            mode="overwrite",
-            partition_by=partition_by,
-            fmt=fmt,
-        )
-        return
-    if partition_by:
-        _upsert_partitions(
-            spark, source_df, target, keys, list(partition_by), fmt
-        )
+        write(source_df, target_path, partition_by=pcols, fmt=fmt)
         return
     existing = spark.read.format(fmt).load(target_path)
+    if pcols:
+        # one row per touched partition — bounded by the partition count
+        # of the source batch (days/regions, not data volume)
+        touched = source_df.select(*pcols).distinct().collect()
+        if not touched:
+            return
+        existing = existing.filter(
+            reduce(
+                operator.or_,
+                [
+                    reduce(operator.and_, [F.col(c) == r[c] for c in pcols])
+                    for r in touched
+                ],
+            )
+        )
     merged = keyed_merge(existing, source_df, keys)
-    tmp = tempfile.mkdtemp(prefix="upsert_", dir=str(target.parent))
-    swap = str(target) + ".old"
-    if Path(swap).exists():  # stale backup from an earlier crash —
-        shutil.rmtree(swap)  # remove it or move() would nest into it
-    moved = False
+    tmp = Path(tempfile.mkdtemp(prefix="upsert_", dir=str(target.parent)))
     try:
-        write(merged, tmp, mode="overwrite", fmt=fmt)
-        shutil.move(str(target), swap)
-        moved = True
-        shutil.move(tmp, str(target))
-        shutil.rmtree(swap)
-    except BaseException:
-        if moved and not target.exists():
-            shutil.move(swap, str(target))  # restore the backup
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-
-
-def _upsert_partitions(
-    spark: SparkSession,
-    source_df: DataFrame,
-    target,
-    keys: Sequence[str],
-    pcols: Sequence[str],
-    fmt: str,
-) -> None:
-    """Partition-scoped MERGE: read only the Hive partitions the source
-    touches (literal predicates -> partition pruning at the scan), merge
-    those rows, write them to a temp dir with the same layout, then swap
-    the touched LEAF partition directories one by one with the same
-    crash-restore discipline as the whole-table path. Untouched
-    partitions are never read or replaced."""
-    import operator
-    import shutil
-    import tempfile
-    from functools import reduce
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
-
-    # one row per touched partition — bounded by the partition count of
-    # the source batch (days/regions, not data volume), safe to collect
-    touched = source_df.select(*pcols).distinct().collect()
-    if not touched:
-        return
-    pred = reduce(
-        operator.or_,
-        [
-            reduce(operator.and_, [F.col(c) == r[c] for c in pcols])
-            for r in touched
-        ],
-    )
-    existing = spark.read.format(fmt).load(str(target)).filter(pred)
-    merged = keyed_merge(existing, source_df, keys)
-    tmp = tempfile.mkdtemp(prefix="upsert_", dir=str(target.parent))
-    try:
-        write(merged, tmp, mode="overwrite", partition_by=pcols, fmt=fmt)
-        leaf_glob = "/".join("*=*" for _ in pcols)
-        for leaf in sorted(Path(tmp).glob(leaf_glob)):
-            if not leaf.is_dir():
-                continue
-            dest = target / leaf.relative_to(tmp)
-            dest.parent.mkdir(parents=True, exist_ok=True)
-            swap = str(dest) + ".old"
-            if Path(swap).exists():  # stale backup from an earlier crash
-                shutil.rmtree(swap)
-            moved = False
-            try:
-                if dest.exists():
-                    shutil.move(str(dest), swap)
-                    moved = True
-                shutil.move(str(leaf), str(dest))
-                if moved:
-                    shutil.rmtree(swap)
-            except BaseException:
-                if moved and not dest.exists():
-                    shutil.move(swap, str(dest))  # restore the backup
-                raise
+        write(merged, str(tmp), partition_by=pcols, fmt=fmt)
+        if not pcols:
+            _swap_dir(tmp, target)
+            return
+        for leaf in sorted(tmp.glob("/".join("*=*" for _ in pcols))):
+            if leaf.is_dir():
+                dest = target / leaf.relative_to(tmp)
+                dest.parent.mkdir(parents=True, exist_ok=True)
+                _swap_dir(leaf, dest)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _swap_dir(staged: Path, dest: Path) -> None:
+    """Replace directory ``dest`` (which may not exist yet) with
+    ``staged``: back ``dest`` up to ``<dest>.old`` first, then move
+    ``staged`` into place and drop the backup. If the swap-in fails
+    the backup is moved back, so ``dest`` is never left missing. A
+    stale backup from an earlier crash is removed first — ``move``
+    would otherwise nest the live table inside it."""
+    backup = Path(f"{dest}.old")
+    if backup.exists():
+        shutil.rmtree(backup)
+    moved = False
+    try:
+        if dest.exists():
+            shutil.move(str(dest), str(backup))
+            moved = True
+        shutil.move(str(staged), str(dest))
+        if moved:
+            shutil.rmtree(backup)
+    except BaseException:
+        if moved and not dest.exists():
+            shutil.move(str(backup), str(dest))  # restore the backup
+        raise
 
 
 def write_sized(
@@ -357,9 +253,6 @@ def write_sized(
     ``Path.stat``); for object stores, calibrate onto a local scratch
     dir instead."""
     import math
-    import shutil
-    import tempfile
-    from pathlib import Path
 
     from pyspark import StorageLevel
 
@@ -420,10 +313,7 @@ def export_training_shards(
     directories), digests are a hash aggregate. No collect of data
     rows; only the tiny manifest comes to the driver.
     """
-    import json as _json
-    from pathlib import Path as _Path
-
-    from pyspark.sql import functions as F
+    import json
 
     key = F.concat_ws("\x00", *[F.col(c).cast("string") for c in shard_key])
     tagged = df.withColumn(
@@ -468,7 +358,7 @@ def export_training_shards(
         "columns": sorted(df.columns),
         "shards_per_split": shards_per_split,
     }
-    (_Path(path) / "_manifest.json").write_text(_json.dumps(manifest, indent=1))
+    (Path(path) / "_manifest.json").write_text(json.dumps(manifest, indent=1))
     return manifest
 
 

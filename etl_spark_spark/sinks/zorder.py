@@ -8,6 +8,11 @@ disjoint per-file ranges — the standard lakehouse `OPTIMIZE ZORDER BY`
 layout (Delta/Hudi), reconstructed for plain parquet + the
 ``sources.stats_index`` manifest.
 
+This is the engine's only z-order writer (``sinks.write_zordered`` is
+this function). :func:`zorder_key` validates before any job runs: 2-4
+numeric/timestamp/boolean columns, and a key of fewer than 63 bits so
+the interleave cannot overflow a long.
+
 Scale shape: one tiny 2-row aggregate for per-column bounds
 (broadcast), a map-side bit-interleave expression (whole-stage
 codegen, no UDF), then the same single range exchange + local sort

@@ -13,7 +13,10 @@ Covers the reference's scan surface (SURVEY.md §2.1):
   giant path list on the driver. We offer both: ``read_date_range`` emits a
   range predicate (pushdown-friendly — a ``year(c)==y`` style filter would
   NOT prune, see SURVEY.md §4), and ``date_range_paths`` keeps explicit
-  enumeration for non-partitioned layouts.
+  enumeration for non-partitioned layouts. ``read_date_range_indexed``
+  is the same window read through the file-stats index
+  (``sources.stats_index``): it opens only the files whose min/max
+  overlap the window, via the index-pruned open ``indexed_read`` uses.
 """
 
 from __future__ import annotations
@@ -110,21 +113,17 @@ def read_date_range_indexed(
     [start, end + 1 day] — a superset of the half-open window, so the
     residual filter restores exactness; NULL-stat files are kept.
     Returns a ``stats_index.PrunedScan`` (df, n_files_read,
-    n_files_total). Pass a persisted ``index`` to skip the stats scan:
-    the call then runs two jobs, the one-action prune
-    (``stats_index.prune``) and the parquet reader's schema inference.
+    n_files_total). The prune-and-open step is the same one
+    ``stats_index.indexed_read`` uses; only the residual differs. Pass
+    a persisted ``index`` to skip the stats scan: the call then runs
+    two jobs, the one-action prune (``stats_index.prune``) and the
+    parquet reader's schema inference.
     """
-    from .stats_index import PrunedScan, build_stats_index, prune
+    from .stats_index import _open_pruned
 
-    idx = index if index is not None else build_stats_index(
-        spark, path, [date_col]
-    )
     hi = (end + dt.timedelta(days=1)).isoformat()
-    files, total = prune(idx, {date_col: (start.isoformat(), hi)})
-    if not files:
-        return PrunedScan(spark.read.parquet(path).limit(0), 0, total)
-    df = read_date_range(spark.read.parquet(*files), date_col, start, end)
-    return PrunedScan(df, len(files), total)
+    scan = _open_pruned(spark, path, {date_col: (start.isoformat(), hi)}, index)
+    return scan._replace(df=read_date_range(scan.df, date_col, start, end))
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

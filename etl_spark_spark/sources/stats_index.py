@@ -11,11 +11,13 @@ directories. Two pieces:
   100k files is 100k tiny rows.
 - :func:`prune` consults the index and returns ONLY the files whose
   [min, max] range overlaps the requested intervals, plus the total
-  file count, from one driver action; :func:`pruned_parquet_read`,
-  :func:`indexed_read` and ``sources.parquet.read_date_range_indexed``
-  all read through it. The surviving file list is collected to the
-  driver — bounded by file count (the same list Spark's own FileIndex
-  holds), never by data.
+  file count, from one driver action. :func:`_open_pruned` is the one
+  "prune, then open the kept files" step; :func:`indexed_read` (closed
+  intervals on any columns) and
+  ``sources.parquet.read_date_range_indexed`` (a half-open date window)
+  both open through it and add their own residual filter. The
+  surviving file list is collected to the driver — bounded by file
+  count (the same list Spark's own FileIndex holds), never by data.
 
 Works best on range-sorted / Hive-partitioned layouts (see
 ``sinks.write.write_range_sorted``): sorted layout → disjoint per-file
@@ -70,36 +72,6 @@ def prune(index: DataFrame, ranges: dict[str, tuple]) -> tuple[list[str], int]:
     return [r["file"] for r in rows if r["keep"]], len(rows)
 
 
-def prune_files(index: DataFrame, column: str, lo, hi) -> list[str]:
-    """File paths whose [min, max] overlaps [lo, hi] (NULL-stat files
-    are conservatively kept)."""
-    return prune(index, {column: (lo, hi)})[0]
-
-
-def pruned_parquet_read(
-    spark: SparkSession,
-    path: str,
-    column: str,
-    lo,
-    hi,
-    index: DataFrame | None = None,
-) -> tuple[DataFrame, int, int]:
-    """Read only the files that can contain ``column`` values in
-    [lo, hi]. Returns (df, n_files_read, n_files_total).
-
-    Pass a persisted ``index`` (from :func:`build_stats_index`, e.g.
-    refreshed per ingestion batch) to skip the stats scan; without one
-    the index is built on the fly, which still pays off when the same
-    index serves many point/range reads.
-    """
-    idx = index if index is not None else build_stats_index(spark, path, [column])
-    files, total = prune(idx, {column: (lo, hi)})
-    if not files:
-        empty = spark.read.parquet(path).limit(0)
-        return empty, 0, total
-    return spark.read.parquet(*files), len(files), total
-
-
 class PrunedScan(NamedTuple):
     """Result of :func:`indexed_read`: the DataFrame already carries
     the residual row filters (exact semantics, not a superset); the
@@ -139,16 +111,31 @@ def indexed_read(
     """
     if not ranges:
         raise ValueError("at least one column range required")
+    scan = _open_pruned(spark, path, ranges, index)
+    df = scan.df
+    for c, (lo, hi) in ranges.items():  # residual: exact, pushes down
+        df = df.filter((F.col(c) >= lo) & (F.col(c) <= hi))
+    if columns:
+        df = df.select(*columns)
+    return scan._replace(df=df)
+
+
+def _open_pruned(
+    spark: SparkSession,
+    path: str,
+    ranges: dict[str, tuple],
+    index: DataFrame | None = None,
+) -> PrunedScan:
+    """The one index-pruned open behind :func:`indexed_read` and
+    ``sources.parquet.read_date_range_indexed``: use ``index`` (or
+    build one over the ``ranges`` columns), :func:`prune` it, and open
+    only the kept files — or, when none survive, an empty read that
+    keeps the table's schema. The returned DataFrame carries NO
+    residual filter; each caller applies its own interval semantics."""
     idx = index if index is not None else build_stats_index(
         spark, path, list(ranges)
     )
     files, total = prune(idx, ranges)
     if not files:
-        df = spark.read.parquet(path).limit(0)
-    else:
-        df = spark.read.parquet(*files)
-    for c, (lo, hi) in ranges.items():  # residual: exact, pushes down
-        df = df.filter((F.col(c) >= lo) & (F.col(c) <= hi))
-    if columns:
-        df = df.select(*columns)
-    return PrunedScan(df, len(files), total)
+        return PrunedScan(spark.read.parquet(path).limit(0), 0, total)
+    return PrunedScan(spark.read.parquet(*files), len(files), total)

@@ -1,20 +1,23 @@
 """Per-query bottleneck profiler (round-12 optimization instrumentation).
 
-For each named query: run it once warm (after a cold pass) with the noop
-sink under an event log + setJobDescription label, then parse the event
-log into a per-query breakdown:
+For each named query: run one cold pass, then ``--warm N`` warm passes
+(default 1), with the noop sink under an event log + setJobDescription
+label, then parse the event log into a per-query breakdown. Every
+column is PER WARM PASS: counters and times are summed over the N warm
+passes and divided by N, so runs with different ``--warm`` values
+compare directly.
 
-  wall_s          wall-clock of the warm pass
-  n_jobs/stages/tasks  scheduling footprint
-  task_time_s     sum of task executorRunTime (the parallel work)
-  ideal_s         task_time_s / cores (perfect-parallelism floor)
-  gc_s            sum of JVM GC time inside tasks
-  fetch_wait_s    shuffle fetch wait
-  shuffle_mb      shuffle read bytes
-  python_s        sum of PythonUDF eval time if exposed (0 otherwise)
-  sched_gap_s     wall_s - ideal_s (scheduling + skew + driver gaps)
+  wall      best single warm pass, wall-clock
+  jobs/stgs/tasks  scheduling footprint
+  task_s    sum of task executorRunTime (the parallel work)
+  ideal     task_s / cores (perfect-parallelism floor)
+  gap       wall - ideal (scheduling + skew + driver gaps)
+  gc        sum of JVM GC time inside tasks
+  fetchw    shuffle fetch wait
+  shuf_mb   shuffle read bytes, MB
+  maxtask   longest single task over all warm passes
 
-Usage: python scripts/profile_queries.py q1 q2 ...  [--sf DIR]
+Usage: python scripts/profile_queries.py q1 q2 ...  [--sf DIR] [--warm N]
 """
 
 from __future__ import annotations
@@ -147,20 +150,21 @@ def main() -> None:
                 a["input_mb"] += im.get("Bytes Read", 0) / 1e6
 
     hdr = (
-        f"{'query':34s} {'wall':>6s} {'jobs':>4s} {'stgs':>4s} {'tasks':>6s} "
+        f"{'query':34s} {'wall':>6s} {'jobs':>5s} {'stgs':>5s} {'tasks':>7s} "
         f"{'task_s':>7s} {'ideal':>6s} {'gap':>6s} {'gc':>5s} {'fetchw':>6s} "
         f"{'shuf_mb':>8s} {'maxtask':>7s}"
     )
+    print(f"per warm pass, {args.warm} pass(es); wall = best pass")
     print(hdr)
     for n in args.queries:
-        a = agg[n]
+        a = {k: v / args.warm for k, v in agg[n].items() if k != "max_task"}
         w = walls[n]
         ideal = a["task_time"] / cores
         print(
-            f"{n:34s} {w:6.2f} {a['n_jobs']:4d} {a['n_stages']:4d} "
-            f"{a['n_tasks']:6d} {a['task_time']:7.1f} {ideal:6.2f} "
+            f"{n:34s} {w:6.2f} {a['n_jobs']:5.1f} {a['n_stages']:5.1f} "
+            f"{a['n_tasks']:7.1f} {a['task_time']:7.1f} {ideal:6.2f} "
             f"{w - ideal:6.2f} {a['gc']:5.1f} {a['fetch_wait']:6.1f} "
-            f"{a['shuffle_read']:8.1f} {a['max_task']:7.2f}"
+            f"{a['shuffle_read']:8.1f} {agg[n]['max_task']:7.2f}"
         )
 
 

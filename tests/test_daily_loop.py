@@ -8,7 +8,8 @@ of its already-tested parts:
    the z-ordered feed) — the VERDICT-r5 done-criterion for the loop;
 2. the MERGE sequence yields exactly window-2 rows + anti-joined
    window-1 rows, with one committed version per window (time travel
-   back to the bootstrap works).
+   back to the bootstrap works);
+3. rerunning a window is idempotent and etiqueta stays unique.
 """
 
 from __future__ import annotations
@@ -66,3 +67,26 @@ def test_merge_semantics_and_time_travel(spark, sf_dir, tmp_path):
     v0 = read_versioned(spark, target, versions[0])
     assert v0.count() == w1.count()
     assert v0.filter(F.col("src_window") != "w1").count() == 0
+
+
+def test_superdesconto_job_merges(spark, sf_dir, tmp_path):
+    """The daily MERGE across reruns: re-running the same window is
+    idempotent (MERGE, not append), a later window replaces the labels
+    it overlaps and adds new ones, and etiqueta stays unique."""
+    feed = str(tmp_path / "pos_feed")
+    target = str(tmp_path / "best_sales")
+    stage_feed(spark, sf_dir, feed, num_files=16)
+    snap, _ = run_daily_loop(spark, sf_dir, feed, target, windows=[W1, W1, W2])
+
+    v1, v2, _ = committed_versions(target)
+    first = read_versioned(spark, target, v1)
+    rerun = read_versioned(spark, target, v2)
+    n1 = first.count()
+    assert n1 > 0
+    assert rerun.count() == n1
+    assert first.exceptAll(rerun).isEmpty() and rerun.exceptAll(first).isEmpty()
+
+    n3 = best_sale_pipeline(spark, sf_dir, W2[0], W2[1]).count()
+    assert snap.select("etiqueta").distinct().count() == snap.count()
+    assert snap.count() >= max(n1, n3)
+    assert snap.filter(F.col("src_window") == "w2").count() == n3

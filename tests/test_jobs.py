@@ -1,33 +1,13 @@
-"""End-to-end job tests: the reference's two pipelines run compute →
-Spark-native sink with scheduling semantics (window, gate, backfill,
-merge idempotency)."""
+"""End-to-end job tests: the ressarcimento backfill runs compute →
+Spark-native sink with its scheduling semantics (gate, backfill
+modes), and the example driver runs both pipelines. The daily
+superdesconto MERGE is tested in test_daily_loop.py."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-from etl_spark_spark.pipelines.jobs import (
-    run_ressarcimento_backfill,
-    run_superdesconto_job,
-)
-
-
-def test_superdesconto_job_merges(spark, sf_dir, tmp_path):
-    target = str(tmp_path / "best_sales")
-    # fixture shipdates span 1995-2001; pick a window over 1998-06
-    n1 = run_superdesconto_job(spark, sf_dir, target, today=dt.date(1998, 6, 30))
-    assert n1 > 0
-    t1 = spark.read.parquet(target)
-    assert t1.count() == n1
-    # re-running the same window must be idempotent (MERGE, not append)
-    n2 = run_superdesconto_job(spark, sf_dir, target, today=dt.date(1998, 6, 30))
-    assert n2 == n1
-    assert spark.read.parquet(target).count() == n1
-    # a later window adds new labels and replaces overlapping ones
-    n3 = run_superdesconto_job(spark, sf_dir, target, today=dt.date(1998, 7, 31))
-    total = spark.read.parquet(target)
-    assert total.select("etiqueta").distinct().count() == total.count()
-    assert total.count() >= max(n1, n3)
+from etl_spark_spark.pipelines.jobs import run_ressarcimento_backfill
 
 
 def test_ressarcimento_backfill_gate_and_modes(spark, sf_dir, tmp_path):

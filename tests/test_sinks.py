@@ -57,30 +57,49 @@ def test_upsert_recovers_from_stale_backup(spark, tmp_path):
 
 
 def test_upsert_restores_backup_on_failure(spark, tmp_path, monkeypatch):
-    """If the swap fails midway, the original table is restored."""
+    """If the swap fails midway, the original table is restored — for
+    the whole table and, with partition_by, for the touched partition
+    whose swap failed. No backup or staging directory is left behind."""
+    import os
     import shutil as _shutil
 
-    path = str(tmp_path / "t")
-    write(spark.createDataFrame([(1, "a")], ["k", "v"]), path)
+    import pytest as _pytest
 
     real_move = _shutil.move
     calls = {"n": 0}
 
     def flaky_move(src, dst):
         calls["n"] += 1
-        if calls["n"] == 2:  # fail on tmp -> target
+        if calls["n"] == 2:  # fail on staged -> target (after the backup)
             raise OSError("disk full")
         return real_move(src, dst)
 
-    # upsert imports shutil function-locally; patching the module
-    # attribute reaches it
+    # the swap calls shutil.move through the module attribute
     monkeypatch.setattr("shutil.move", flaky_move)
-    import pytest as _pytest
 
-    with _pytest.raises(OSError):
-        upsert(spark, spark.createDataFrame([(2, "b")], ["k", "v"]), path, ["k"])
-    got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
-    assert got == {(1, "a")}, "original table must survive a failed swap"
+    for name, partition_by in [("t", None), ("tp", ["p"])]:
+        path = str(tmp_path / name)
+        base = spark.createDataFrame([("a", 1, "a"), ("b", 3, "b")], ["p", "k", "v"])
+        write(base, path, partition_by=partition_by)
+        calls["n"] = 0
+        with _pytest.raises(OSError):
+            upsert(
+                spark,
+                spark.createDataFrame([("a", 2, "new")], ["p", "k", "v"]),
+                path,
+                ["k"],
+                partition_by=partition_by,
+            )
+        got = {(r.p, r.k, r.v) for r in spark.read.parquet(path).collect()}
+        assert got == {("a", 1, "a"), ("b", 3, "b")}, (
+            "original table must survive a failed swap"
+        )
+        leftovers = [
+            d for d in os.listdir(tmp_path)
+            if d.startswith("upsert_") or d.endswith(".old")
+        ]
+        assert leftovers == []
+        assert not os.path.exists(path + "/p=a.old")
 
 
 def test_upsert_partition_scoped_rewrites_only_touched(spark, tmp_path):
@@ -572,6 +591,47 @@ def test_apply_snapshot_delta_follower_converges(spark, tmp_path):
     }
     assert got == want
     assert (None, "n1") in got and (4, "d") not in got
+
+
+def test_apply_snapshot_delta_retries_on_top_of_concurrent_commit(
+    spark, tmp_path, monkeypatch
+):
+    """A commit that lands between the delta apply's read and its CAS
+    makes the CAS fail; the apply re-reads and lands on top of that
+    commit, so both changes survive and nothing is lost."""
+    from etl_spark_spark.sinks import versioned as vmod
+
+    schema = "k long, v string"
+    follower = tmp_path / "follower"
+    vmod.write_version(
+        spark, spark.createDataFrame([(1, "a"), (2, "b")], schema), follower
+    )
+    delta = spark.createDataFrame(
+        [(1, None, "delete"), (2, "B", "update"), (3, "c", "insert")],
+        schema + ", change_type string",
+    )
+    real_read = vmod.read_versioned
+    reads = []
+
+    def read_then_commit(spark_, path, version=None, fmt="parquet"):
+        out = real_read(spark_, path, version, fmt)
+        reads.append(version)
+        if len(reads) == 1:  # another writer commits after our read
+            vmod.write_version(
+                spark,
+                spark.createDataFrame([(1, "a"), (2, "b"), (7, "x")], schema),
+                follower,
+            )
+        return out
+
+    monkeypatch.setattr(vmod, "read_versioned", read_then_commit)
+    v = vmod.apply_snapshot_delta(spark, delta, follower, ["k"])
+    monkeypatch.undo()
+
+    assert reads == [1, 2]  # the retry re-read the concurrent commit
+    assert v == 3 and vmod.committed_versions(follower) == [1, 2, 3]
+    got = {(r.k, r.v) for r in vmod.read_versioned(spark, follower).collect()}
+    assert got == {(2, "B"), (3, "c"), (7, "x")}
 
 
 def test_incremental_agg_maintenance_matches_recompute(spark, tmp_path):

@@ -7,10 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_spark_spark.sinks.write import write_range_sorted
-from etl_spark_spark.sources.stats_index import (
-    build_stats_index,
-    pruned_parquet_read,
-)
+from etl_spark_spark.sources.stats_index import build_stats_index, indexed_read
 
 
 def _fixture(spark, path: str) -> None:
@@ -26,8 +23,7 @@ def test_pruned_read_equals_full_filter_and_skips_files(spark, tmp_path):
     path = str(tmp_path / "t")
     _fixture(spark, path)
     lo, hi = 2_000, 2_999
-    got, n_read, n_total = pruned_parquet_read(spark, path, "id", lo, hi)
-    got_rows = got.filter(F.col("id").between(lo, hi))  # residual filter
+    got_rows, n_read, n_total = indexed_read(spark, path, {"id": (lo, hi)})
     want = (
         spark.read.parquet(path).filter(F.col("id").between(lo, hi))
     )
@@ -44,7 +40,7 @@ def test_pruned_read_equals_full_filter_and_skips_files(spark, tmp_path):
 def test_pruned_read_empty_range(spark, tmp_path):
     path = str(tmp_path / "t")
     _fixture(spark, path)
-    got, n_read, n_total = pruned_parquet_read(spark, path, "id", 50_000, 60_000)
+    got, n_read, n_total = indexed_read(spark, path, {"id": (50_000, 60_000)})
     assert n_read == 0 and got.count() == 0
     assert [f.name for f in got.schema.fields] == ["id", "k", "v"]
 
@@ -55,16 +51,16 @@ def test_reusable_index_and_conservative_nulls(spark, tmp_path):
     idx = build_stats_index(spark, path, ["id"]).localCheckpoint()
     # same index reused across reads: no extra stats scans needed
     for lo, hi, n in [(0, 99, 100), (9_900, 9_999, 100), (0, 9_999, 10_000)]:
-        df, n_read, n_total = pruned_parquet_read(
-            spark, path, "id", lo, hi, index=idx
+        df, n_read, n_total = indexed_read(
+            spark, path, {"id": (lo, hi)}, index=idx
         )
-        assert df.filter(F.col("id").between(lo, hi)).count() == n
+        assert df.count() == n
     # a file with NULL stats is kept, never skipped
     null_idx = idx.withColumn("min_id", F.lit(None).cast("long")).withColumn(
         "max_id", F.lit(None).cast("long")
     )
-    _, n_read, n_total = pruned_parquet_read(
-        spark, path, "id", 0, 10, index=null_idx
+    _, n_read, n_total = indexed_read(
+        spark, path, {"id": (0, 10)}, index=null_idx
     )
     assert n_read == n_total
 
@@ -76,10 +72,7 @@ def test_zorder_layout_prunes_on_both_columns(spark, tmp_path):
     spans the full y range). Also pins correctness: pruning + residual
     filter returns exactly the full-scan answer on both layouts."""
     from etl_spark_spark.sinks.zorder import write_zordered
-    from etl_spark_spark.sources.stats_index import (
-        build_stats_index,
-        prune_files,
-    )
+    from etl_spark_spark.sources.stats_index import prune
 
     df = spark.range(64_000).select(
         F.pmod(F.xxhash64("id"), F.lit(1024)).alias("x"),
@@ -96,8 +89,8 @@ def test_zorder_layout_prunes_on_both_columns(spark, tmp_path):
     assert n_files == 16 and ridx.count() == 16
 
     lo, hi = 0, 127  # a 1/8 slice of either dimension
-    zx, zy = prune_files(zidx, "x", lo, hi), prune_files(zidx, "y", lo, hi)
-    rx, ry = prune_files(ridx, "x", lo, hi), prune_files(ridx, "y", lo, hi)
+    zx, zy = (prune(zidx, {c: (lo, hi)})[0] for c in ("x", "y"))
+    rx, ry = (prune(ridx, {c: (lo, hi)})[0] for c in ("x", "y"))
     # z-order discriminates on BOTH columns
     assert len(zx) <= n_files // 2, f"zorder x kept {len(zx)}/{n_files}"
     assert len(zy) <= n_files // 2, f"zorder y kept {len(zy)}/{n_files}"
@@ -119,17 +112,34 @@ def test_zorder_layout_prunes_on_both_columns(spark, tmp_path):
 
 def test_zorder_rejects_non_numeric_columns(spark, tmp_path):
     """A string column would quantize to NULL for every row (non-ANSI
-    cast), silently collapsing the Morton key — zorder_key must refuse
-    it up front instead."""
+    cast), silently collapsing the Morton key, and five columns leave
+    too few bits of a long per column (at 16 bits each the interleave
+    overflows) — zorder_key must refuse both up front, before any Spark
+    job runs, through every name the writer is exported under."""
     import pytest
 
-    from etl_spark_spark.sinks.zorder import write_zordered
+    from etl_spark_spark import sinks
+    from etl_spark_spark.sinks import zorder
 
+    sc = spark.sparkContext
     df = spark.range(10).select(
-        F.col("id"), F.concat(F.lit("r"), F.col("id")).alias("name")
+        F.col("id"),
+        F.concat(F.lit("r"), F.col("id")).alias("name"),
+        *[(F.col("id") * i).alias(f"c{i}") for i in range(1, 5)],
     )
-    with pytest.raises(ValueError, match="non-numeric"):
-        write_zordered(df, str(tmp_path / "z"), ["name", "id"])
+    for writer in (zorder.write_zordered, sinks.write_zordered):
+        for cols, match in [
+            (["name", "id"], "non-numeric"),
+            (["id", "c1", "c2", "c3", "c4"], "2-4 columns"),
+        ]:
+            group = f"zorder-guard-{len(cols)}"
+            sc.setJobGroup(group, "zorder guard")
+            try:
+                with pytest.raises(ValueError, match=match):
+                    writer(df, str(tmp_path / "z"), cols)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_indexed_read_skips_files_and_applies_residual(spark, tmp_path):

@@ -892,12 +892,8 @@ def q_purchase_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         dist.withColumn("__rm", F.col("d") + F.col("c")),
         F.col("t"),
         ["t"],
-        [("__cumrm", "__rm", "sum")],
-    )
-    totals = dist.agg(F.sum(F.col("d") + F.col("c")).alias("__n"))
-    cum = cum.crossJoin(F.broadcast(totals)).withColumn(
-        "n_risk", F.col("__n") - (F.col("__cumrm") - F.col("__rm"))
-    )
+        [("__cumrm", "__rm", "sum", "__n")],
+    ).withColumn("n_risk", F.col("__n") - (F.col("__cumrm") - F.col("__rm")))
     # d == n_risk drives survival to EXACTLY zero (ln(0) is undefined):
     # carry it as an absorbing flag via a prefix sum of indicators
     lnf = F.when(
@@ -910,9 +906,10 @@ def q_purchase_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero = (F.col("d") == F.col("n_risk")).cast("long")
     cum = bucketed_scan(
         cum.withColumn("__lnf", lnf).withColumn("__z", zero),
-        F.col("t"), ["t"], [("__cumln", "__lnf", "sum")],
+        F.col("t"),
+        ["t"],
+        [("__cumln", "__lnf", "sum"), ("__cumz", "__z", "sum")],
     )
-    cum = bucketed_scan(cum, F.col("t"), ["t"], [("__cumz", "__z", "sum")])
     surv = F.when(
         F.col("__cumz") > 0, F.lit(0).cast("long")
     ).otherwise(F.round(F.exp("__cumln") * 1e6).cast("long"))

@@ -3496,8 +3496,8 @@ def q_ab_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log-rank test comparing the A/B time-to-first-purchase survival
     curves (the hypothesis test that pairs with purchase_survival_km;
     same deterministic md5 variant split as the other A/B shapes). Per
-    distinct day: integer death/at-risk counts via two distributed
-    prefix sums; the statistic folds hypergeometric expectations and
+    distinct day: integer death/at-risk counts via one two-measure
+    distributed prefix sum that also carries the totals; the statistic folds hypergeometric expectations and
     variances — micro-scaled because the final sums are short
     order-dependent float folds."""
     from etl_spark_spark.operators.windows import bucketed_scan
@@ -3531,12 +3531,13 @@ def q_ab_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("is_a").alias("rm_a"),
         F.count("*").alias("rm"),
     )
-    cum = bucketed_scan(dist, F.col("t"), ["t"], [("__ca", "rm_a", "sum")])
-    cum = bucketed_scan(cum, F.col("t"), ["t"], [("__c", "rm", "sum")])
-    totals = dist.agg(
-        F.sum("rm_a").alias("__na"), F.sum("rm").alias("__n")
+    cum = bucketed_scan(
+        dist,
+        F.col("t"),
+        ["t"],
+        [("__ca", "rm_a", "sum", "__na"), ("__c", "rm", "sum", "__n")],
     )
-    k = cum.crossJoin(F.broadcast(totals)).select(
+    k = cum.select(
         "t",
         "d_a",
         "d",

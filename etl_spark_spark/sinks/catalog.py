@@ -163,7 +163,6 @@ def merge_into(
     when_matched: str = "update",
     insert_unmatched: bool = True,
     backend: str | None = None,
-    fmt: str = "parquet",
 ) -> str:
     """MERGE ``source_df`` into ``target`` with standard clause
     semantics, through whichever backend the session supports.
@@ -191,7 +190,6 @@ def merge_into(
             keys,
             when_matched=when_matched,
             insert_unmatched=insert_unmatched,
-            fmt=fmt,
         )
         return chosen
     view = f"__merge_src_{uuid.uuid4().hex}"
@@ -228,7 +226,6 @@ def read_merged(
     spark: SparkSession,
     target: str,
     backend: str | None = None,
-    fmt: str = "parquet",
 ) -> DataFrame:
     """Read the merge target back through the same backend routing
     (catalog table for delta/iceberg, committed snapshot for the
@@ -237,5 +234,5 @@ def read_merged(
     if chosen == VERSIONED:
         from .versioned import read_versioned
 
-        return read_versioned(spark, target, fmt=fmt)
+        return read_versioned(spark, target)
     return spark.table(target)

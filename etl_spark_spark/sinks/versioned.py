@@ -10,37 +10,30 @@ expressed with filesystem primitives —
 - a writer stages data fully into a UNIQUE staging directory
   (``_v/.staging-{uuid}/``) that no reader ever resolves;
 - commit is ONE atomic put-if-absent of the version entry
-  ``_v/v{N:08d}``, in one of two interchangeable layouts:
-
-  * ``symlink`` — the entry is a symlink to the staging directory
-    (POSIX filesystems);
-  * ``marker``  — the entry is a small MANIFEST FILE whose content is
-    the staging directory name, published with hard-link-from-temp
-    (write the content to a hidden temp file, ``os.link`` it to the
-    entry name): the link is atomic put-if-absent AND the content is
-    complete before the name exists, so no reader can observe a
-    half-written pointer. This is the object-store shape — stores
-    without symlinks express the same commit as a conditional PUT
-    (S3 ``If-None-Match``, GCS ``ifGenerationMatch=0``) of the
-    manifest object; only :func:`_commit_entry` would change.
-
-  Either way creation fails with EEXIST if the slot is taken, so two
-  writers racing for the same version number get exactly one winner —
-  the same compare-and-swap a real catalog performs on its commit
-  log. Because data is complete before the entry exists, a version
-  entry either IS a full snapshot or does not exist; there is no
-  half-committed state to misread. The default layout is ``auto``:
-  probe symlink support once per table root and fall back to markers
-  where symlinks are unsupported; the two layouts coexist in one
-  table (readers resolve each entry by its own kind);
+  ``_v/v{N:08d}``: a small MANIFEST FILE whose content is the staging
+  directory name, published with hard-link-from-temp (write the
+  content to a hidden temp file, ``os.link`` it to the entry name).
+  The link fails with EEXIST if the slot is taken, so two writers
+  racing for the same version number get exactly one winner — the
+  same compare-and-swap a real catalog performs on its commit log —
+  and the content is complete before the name exists, so no reader
+  can observe a half-written pointer. This is the object-store shape:
+  a store without hard links expresses the same commit as a
+  conditional PUT (S3 ``If-None-Match``, GCS ``ifGenerationMatch=0``)
+  of the manifest object; only :func:`_commit_entry` would change.
+  Hard links also work where symlinks need privileges (Windows/NTFS).
+  Because data is complete before the entry exists, a version entry
+  either IS a full snapshot or does not exist; there is no
+  half-committed state to misread;
+- committed = "the version entry is a manifest file or a symlink".
+  Symlink entries (pointing at their staging directory) are what
+  earlier writers of this store published; readers still resolve them,
+  so such tables stay readable, time-travelable, mergeable and
+  vacuumable, but nothing writes them any more. A real directory at a
+  version slot is always crash residue: never readable as a snapshot,
+  whatever commits land around it, and swept by ``vacuum_versions``;
 - a crash before the commit entry leaves an unreferenced staging
   directory (invisible to readers; ``vacuum_versions`` sweeps it);
-- committed = "the version entry exists as a symlink". The ``_current``
-  manifest is kept as a monotonically-advancing hint (and for
-  compatibility with tables written by the pre-CAS layout, whose
-  version entries are real directories: those count as committed only
-  up to the manifest — an orphaned real directory is never readable as
-  a snapshot, even after later commits publish past it);
 - old versions stay readable (``read_versioned(path, version=...)``)
   until vacuumed — time travel for debugging/reproducibility, the
   property training pipelines need most from a table format. A reader
@@ -83,8 +76,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 _VDIR = "_v"
-_MANIFEST = "_current"
 _ANY = "any"  # sentinel: no CAS, blind snapshot write
+_MAX_RETRIES = 5  # optimistic-commit attempts before giving up
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -96,79 +89,48 @@ def _version_dir(path: str | Path, version: int) -> Path:
     return Path(path) / _VDIR / f"v{version:08d}"
 
 
-_LAYOUT_CACHE: dict[str, str] = {}
-
-
-def _pick_layout(root: Path, layout: str) -> str:
-    """Resolve ``layout='auto'`` by probing symlink support once per
-    table root (object-store FUSE mounts and some network filesystems
-    reject symlink creation — the marker protocol covers them).
-
-    The marker fallback's atomicity rests on ``os.link``, and
-    filesystems without symlinks frequently lack hard links too — so
-    the fallback is probed as well, BEFORE any staging data is written:
-    a store supporting neither fails fast here with a pointer at the
-    conditional-PUT note (module docstring) instead of surfacing a raw
-    OSError after a full staged write (ADVICE r7)."""
-    if layout in ("symlink", "marker"):
-        return layout
-    if layout != "auto":
-        raise ValueError(f"layout must be auto|symlink|marker, got {layout!r}")
-    key = str(root)
-    cached = _LAYOUT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    probe = root / _VDIR / f".probe-{uuid.uuid4().hex}"
+def _check_hard_links(root: Path) -> None:
+    """Fail fast, BEFORE any staging data is written, when the table
+    root cannot hard-link (some object-store FUSE mounts and network
+    filesystems): the commit's atomicity rests on ``os.link``, and
+    without it the writer would otherwise surface a raw OSError only
+    after a full staged write."""
+    src = root / _VDIR / f".probe-{uuid.uuid4().hex}"
+    dst = root / _VDIR / f".probe-{uuid.uuid4().hex}"
     try:
-        os.symlink(".", probe)
-        os.unlink(probe)
-        picked = "symlink"
-    except OSError:
-        src = root / _VDIR / f".probe-{uuid.uuid4().hex}"
-        dst = root / _VDIR / f".probe-{uuid.uuid4().hex}"
-        try:
-            src.write_text("probe\n")
-            os.link(src, dst)
-            os.unlink(dst)
-            picked = "marker"
-        except OSError as e:
-            raise OSError(
-                f"table root {root} supports neither symlinks nor hard "
-                "links, so no atomic put-if-absent commit is available "
-                "on this filesystem. On a real object store, express "
-                "the marker commit as a conditional PUT (S3 "
-                "If-None-Match / GCS ifGenerationMatch=0) of the "
-                "version manifest — see the module docstring."
-            ) from e
-        finally:
-            src.unlink(missing_ok=True)
-    _LAYOUT_CACHE[key] = picked
-    return picked
+        src.write_text("probe\n")
+        os.link(src, dst)
+        os.unlink(dst)
+    except OSError as e:
+        raise OSError(
+            f"table root {root} does not support hard links, so no "
+            "atomic put-if-absent commit is available on this "
+            "filesystem. On a real object store, express the commit as "
+            "a conditional PUT (S3 If-None-Match / GCS "
+            "ifGenerationMatch=0) of the version manifest — see the "
+            "module docstring."
+        ) from e
+    finally:
+        src.unlink(missing_ok=True)
 
 
-def _commit_entry(
-    root: Path, version: int, staging_name: str, layout: str
-) -> None:
+def _commit_entry(root: Path, version: int, staging_name: str) -> None:
     """Publish ``version`` -> ``staging_name`` with ONE atomic
     put-if-absent; raises FileExistsError when the slot is taken
-    (the CAS losing side). ``marker`` writes the pointer content to a
-    hidden temp file first and hard-links it into place, so the entry
-    name never exists with incomplete content."""
-    entry = _version_dir(root, version)
-    if layout == "symlink":
-        os.symlink(staging_name, entry)
-        return
+    (the CAS losing side). The pointer content goes to a hidden temp
+    file first and is hard-linked into place, so the entry name never
+    exists with incomplete content."""
     tmp = root / _VDIR / f".cmt-{uuid.uuid4().hex}"
     tmp.write_text(staging_name + "\n")
     try:
-        os.link(tmp, entry)
+        os.link(tmp, _version_dir(root, version))
     finally:
         os.unlink(tmp)
 
 
 def _entry_target_name(entry: Path) -> str | None:
     """The staging-directory name a committed entry points at, or None
-    for a legacy real-directory entry (which IS its own data dir)."""
+    when ``entry`` is no commit entry (crash residue or missing)."""
     if entry.is_symlink():
         return os.readlink(entry)
     if entry.is_file():
@@ -177,54 +139,13 @@ def _entry_target_name(entry: Path) -> str | None:
 
 
 def _snapshot_data_dir(path: str | Path, version: int) -> Path:
-    """The directory holding a committed version's data files,
-    whichever entry layout committed it."""
-    entry = _version_dir(path, version)
-    target = _entry_target_name(entry)
-    if target is None:
-        return entry
-    return Path(path) / _VDIR / target
-
-
-def _manifest_version(path: str | Path) -> int | None:
-    m = Path(path) / _MANIFEST
-    if not m.exists():
-        return None
-    return int(m.read_text().strip())
-
-
-def _advance_manifest(root: Path, version: int) -> None:
-    """Move the hint manifest forward (never backward — a slow racing
-    writer must not regress it past a newer commit)."""
-    cur = _manifest_version(root)
-    if cur is not None and cur >= version:
-        return
-    tmp = root / f"{_MANIFEST}.tmp{uuid.uuid4().hex[:8]}"
-    tmp.write_text(f"{version}\n")
-    os.replace(tmp, root / _MANIFEST)
+    """The directory holding a committed version's data files."""
+    return Path(path) / _VDIR / _entry_target_name(_version_dir(path, version))
 
 
 def _is_committed(path: str | Path, version: int) -> bool:
     p = _version_dir(path, version)
-    if p.is_symlink() or p.is_file():
-        return True  # CAS protocol: entry existence == committed
-    if p.is_dir():
-        # pre-CAS layout: real directory, committed only up to the
-        # manifest — and never at/after the first symlink commit
-        # (legacy commits all predate the CAS protocol), so a
-        # crash-orphaned directory stays orphaned even after later
-        # commits advance the manifest past its number
-        m = _manifest_version(path)
-        if m is None or version > m:
-            return False
-        links = [
-            v
-            for v in list_versions(path)
-            if _version_dir(path, v).is_symlink()
-            or _version_dir(path, v).is_file()
-        ]
-        return not links or version < links[0]
-    return False
+    return p.is_symlink() or p.is_file()
 
 
 def list_versions(path: str | Path) -> list[int]:
@@ -254,18 +175,13 @@ def write_version(
     spark: SparkSession,
     df: DataFrame,
     path: str | Path,
-    fmt: str = "parquet",
     expected_current: int | None | str = _ANY,
-    layout: str = "auto",
 ) -> int:
     """Commit ``df`` as the table's next version. Data lands fully in a
-    unique staging directory BEFORE the atomic commit entry publishes
-    it; a crash before the commit leaves readers untouched.
-
-    ``layout`` picks the commit-entry protocol: ``'symlink'`` (POSIX),
-    ``'marker'`` (put-if-absent manifest file — the object-store-safe
-    shape), or ``'auto'`` (probe symlink support per table root, fall
-    back to markers). Layouts may be mixed within one table.
+    unique staging directory BEFORE the atomic commit entry (a
+    put-if-absent manifest file naming that directory) publishes it; a
+    crash before the commit leaves readers untouched. A table root that
+    cannot hard-link raises OSError before any data is staged.
 
     ``expected_current`` selects the write mode:
 
@@ -279,9 +195,9 @@ def write_version(
     """
     root = Path(path)
     (root / _VDIR).mkdir(parents=True, exist_ok=True)
-    layout = _pick_layout(root, layout)
+    _check_hard_links(root)
     staging = root / _VDIR / f".staging-{uuid.uuid4().hex}"
-    df.write.format(fmt).mode("errorifexists").save(str(staging))
+    df.write.mode("errorifexists").parquet(str(staging))
 
     cas = expected_current != _ANY
     for _ in range(1000):  # blind mode may race past many taken slots
@@ -299,7 +215,7 @@ def write_version(
         try:
             # atomic put-if-absent: relative pointer keeps the table
             # relocatable
-            _commit_entry(root, target, staging.name, layout)
+            _commit_entry(root, target, staging.name)
         except FileExistsError:
             if cas:
                 shutil.rmtree(staging)
@@ -321,7 +237,6 @@ def write_version(
                     f"concurrent commit detected (saw {newest}, "
                     f"expected {expected_current})"
                 )
-        _advance_manifest(root, target)
         return target
     raise ConcurrentWriteError("could not claim a version slot")
 
@@ -330,7 +245,6 @@ def read_versioned(
     spark: SparkSession,
     path: str | Path,
     version: int | None = None,
-    fmt: str = "parquet",
 ) -> DataFrame:
     """Read the committed snapshot (or a pinned historical ``version``).
     Raises FileNotFoundError on an empty table or when ``version``
@@ -344,7 +258,7 @@ def read_versioned(
             f"version {v} under {path} is not a committed snapshot "
             "(orphaned or never written)"
         )
-    return spark.read.format(fmt).load(str(_snapshot_data_dir(path, v)))
+    return spark.read.parquet(str(_snapshot_data_dir(path, v)))
 
 
 def merge_into_versioned(
@@ -354,8 +268,6 @@ def merge_into_versioned(
     keys: Sequence[str],
     when_matched: str = "update",
     insert_unmatched: bool = True,
-    fmt: str = "parquet",
-    max_retries: int = 5,
 ) -> int:
     """MERGE with the standard clause semantics, committed as a new
     snapshot:
@@ -374,8 +286,8 @@ def merge_into_versioned(
     Concurrency: full optimistic loop — the merge is computed against
     the version observed at read time and committed with a CAS on that
     version; on conflict the cycle re-reads and re-merges (up to
-    ``max_retries``), so interleaved merges serialize without lost
-    updates."""
+    ``_MAX_RETRIES`` times), so interleaved merges serialize without
+    lost updates."""
     if when_matched not in ("update", "delete"):
         raise ValueError(f"when_matched must be update|delete, got {when_matched!r}")
     keys = list(keys)
@@ -391,34 +303,30 @@ def merge_into_versioned(
             )
         return source_df
 
-    return _commit_optimistic(spark, path, fmt, merge_onto, max_retries, "merge")
+    return _commit_optimistic(spark, path, merge_onto, "merge")
 
 
 def _commit_optimistic(
     spark: SparkSession,
     path: str | Path,
-    fmt: str,
     build: Callable[[DataFrame | None], DataFrame],
-    max_retries: int,
     what: str,
 ) -> int:
     """The optimistic-concurrency commit loop: read the current version,
     build the next snapshot from it (``build(None)`` on an empty table),
     and commit with a CAS on the version read. When another writer
     committed in between, re-read and rebuild on top of its commit, up
-    to ``max_retries`` times. Returns the committed version."""
+    to ``_MAX_RETRIES`` times. Returns the committed version."""
     last_err: ConcurrentWriteError | None = None
-    for _ in range(max_retries):
+    for _ in range(_MAX_RETRIES):
         cur = current_version(path)
-        target = None if cur is None else read_versioned(spark, path, cur, fmt)
+        target = None if cur is None else read_versioned(spark, path, cur)
         try:
-            return write_version(
-                spark, build(target), path, fmt, expected_current=cur
-            )
+            return write_version(spark, build(target), path, expected_current=cur)
         except ConcurrentWriteError as e:
             last_err = e  # someone committed under us: re-read, rebuild
     raise ConcurrentWriteError(
-        f"{what} lost the commit race {max_retries} times"
+        f"{what} lost the commit race {_MAX_RETRIES} times"
     ) from last_err
 
 
@@ -488,8 +396,6 @@ def apply_snapshot_delta(
     delta: DataFrame,
     path: str | Path,
     keys: Sequence[str],
-    fmt: str = "parquet",
-    max_retries: int = 5,
 ) -> int:
     """Apply a ``snapshot_diff`` delta to a FOLLOWER table in one
     commit: insert/update rows upsert, delete rows remove their keys.
@@ -515,16 +421,13 @@ def apply_snapshot_delta(
         untouched = t.join(d, cond, "left_anti").select("t.*")
         return untouched.unionByName(upserts, allowMissingColumns=True)
 
-    return _commit_optimistic(
-        spark, path, fmt, apply_onto, max_retries, "delta apply"
-    )
+    return _commit_optimistic(spark, path, apply_onto, "delta apply")
 
 
 def compact_table(
     spark: SparkSession,
     path: str | Path,
     target_file_bytes: int = 128 * 1024 * 1024,
-    fmt: str = "parquet",
     order_by: Sequence[str] | None = None,
 ) -> int:
     """Rewrite the current snapshot's data files into ~``target_file_bytes``
@@ -565,14 +468,14 @@ def compact_table(
         if f.is_file() and not f.name.startswith((".", "_"))
     )
     n_files = max(1, -(-on_disk // target_file_bytes))  # ceil
-    snap = read_versioned(spark, path, cur, fmt)
+    snap = read_versioned(spark, path, cur)
     if order_by:
         snap = snap.repartitionByRange(
             int(n_files), *[F.col(c) for c in order_by]
         ).sortWithinPartitions(*order_by)
     else:
         snap = snap.coalesce(int(n_files))
-    return write_version(spark, snap, path, fmt, expected_current=cur)
+    return write_version(spark, snap, path, expected_current=cur)
 
 
 def vacuum_versions(path: str | Path, keep: int = 1) -> list[int]:
@@ -600,9 +503,8 @@ def vacuum_versions(path: str | Path, keep: int = 1) -> list[int]:
             shutil.rmtree(p)
     # sweep staging dirs no surviving version references
     referenced = {
-        name
+        _entry_target_name(_version_dir(root, v))
         for v in committed_versions(root)
-        if (name := _entry_target_name(_version_dir(root, v))) is not None
     }
     vroot = root / _VDIR
     for d in vroot.iterdir():
@@ -614,8 +516,8 @@ def vacuum_versions(path: str | Path, keep: int = 1) -> list[int]:
             # the LINKED names (v########), never the .cmt-* temp, so
             # sweeping is always safe for completed commits — and
             # vacuum already assumes no writer is in flight. Same for
-            # .probe-* layout-probe leftovers (a crash between the
-            # probe's write_text/os.link and its finally).
+            # .probe-* hard-link-check leftovers (a crash between the
+            # check's write_text/os.link and its finally).
             d.unlink(missing_ok=True)
     return sorted(drop)
 
@@ -626,7 +528,6 @@ def snapshot_diff(
     from_version: int,
     to_version: int,
     keys: Sequence[str],
-    fmt: str = "parquet",
     include_old: bool = False,
 ) -> DataFrame:
     """Change-data-capture between two committed snapshots: one row per
@@ -648,8 +549,8 @@ def snapshot_diff(
     retraction half a consumer needs to maintain derived aggregates
     incrementally (see ``operators.rollup.apply_agg_delta``)."""
     keys = list(keys)
-    old = read_versioned(spark, path, from_version, fmt)
-    new = read_versioned(spark, path, to_version, fmt)
+    old = read_versioned(spark, path, from_version)
+    new = read_versioned(spark, path, to_version)
     old_fields = {f.name: f.dataType for f in old.schema.fields}
     new_fields = {f.name: f.dataType for f in new.schema.fields}
     if old_fields != new_fields:

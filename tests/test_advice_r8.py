@@ -9,8 +9,8 @@
    of a TEMPORAL layout (compacted rows would become unevictable).
 3. (low) The local-filesystem maintenance ops refuse object-store
    state paths loudly instead of half-working.
-4. (low) sinks.versioned: the layout probe also checks hard-link
-   support, and vacuum sweeps orphaned .cmt-* temp files.
+4. (low) sinks.versioned: the writer checks hard-link support before
+   staging, and vacuum sweeps orphaned .cmt-* temp files.
 """
 
 from __future__ import annotations
@@ -187,25 +187,23 @@ def test_maintenance_ops_refuse_object_store_paths(spark, tmp_path):
 def test_layout_probe_fails_fast_without_links(
     spark, tmp_path, monkeypatch
 ):
-    """A filesystem with neither symlinks nor hard links must fail the
-    layout probe BEFORE any staging data is written, with a message
-    pointing at the conditional-PUT shape — not a raw OSError after a
-    full staged write."""
+    """A filesystem without hard links must fail the writer's hard-link
+    check BEFORE any staging data is written, with a message pointing
+    at the conditional-PUT shape — not a raw OSError after a full
+    staged write."""
     import os as _os
 
     from etl_spark_spark.sinks import versioned as V
 
-    monkeypatch.setattr(V, "_LAYOUT_CACHE", {})
-
     def _no(*a, **kw):
         raise OSError(1, "Operation not permitted")
 
-    monkeypatch.setattr(_os, "symlink", _no)
     monkeypatch.setattr(_os, "link", _no)
     root = tmp_path / "tbl"
-    (root / "_v").mkdir(parents=True)
+    df = spark.range(3).withColumnRenamed("id", "k")
     with pytest.raises(OSError, match="conditional PUT"):
-        V._pick_layout(root, "auto")
+        V.write_version(spark, df, root)
+    assert [p.name for p in (root / "_v").iterdir()] == []
 
 
 def test_vacuum_sweeps_orphaned_cmt_temps(spark, tmp_path):
@@ -219,7 +217,7 @@ def test_vacuum_sweeps_orphaned_cmt_temps(spark, tmp_path):
 
     tbl = str(tmp_path / "tbl")
     df = spark.range(5).withColumnRenamed("id", "k")
-    write_version(spark, df, tbl, layout="marker")
+    write_version(spark, df, tbl)
     orphan = tmp_path / "tbl" / "_v" / ".cmt-deadbeef"
     orphan.write_text(".staging-nonexistent\n")
     vacuum_versions(tbl)

@@ -1,7 +1,8 @@
 """Regression pins for the round-8 ADVICE findings (all low).
 
-1. sinks.versioned: vacuum sweeps orphaned .probe-* layout-probe files
-   (a crash between the probe's write_text/os.link and its finally).
+1. sinks.versioned: vacuum sweeps orphaned .probe-* hard-link-check
+   files (a crash between the check's write_text/os.link and its
+   finally).
 2. compact_join_mv_history: an EXPLICITLY requested left/right side on
    a temporal layout raises instead of silently no-oping; the default
    (sides omitted) still skips them automatically.
@@ -55,8 +56,8 @@ def _temporal_state(spark, tmp_path):
 
 
 def test_vacuum_sweeps_orphaned_probe_temps(spark, tmp_path):
-    """A crash inside the layout probe (between write_text/os.link and
-    the finally) leaves .probe-* files in _v/; vacuum sweeps them like
+    """A crash inside the hard-link check (between write_text/os.link
+    and the finally) leaves .probe-* files in _v/; vacuum sweeps them like
     the .cmt-* temps."""
     from etl_spark_spark.sinks.versioned import (
         read_versioned,
@@ -66,7 +67,7 @@ def test_vacuum_sweeps_orphaned_probe_temps(spark, tmp_path):
 
     tbl = str(tmp_path / "tbl")
     df = spark.range(5).withColumnRenamed("id", "k")
-    write_version(spark, df, tbl, layout="marker")
+    write_version(spark, df, tbl)
     orphan = tmp_path / "tbl" / "_v" / ".probe-deadbeef"
     orphan.write_text("probe\n")
     vacuum_versions(tbl)

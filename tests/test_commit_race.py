@@ -1,8 +1,8 @@
 """TRUE multi-process commit race for the versioned store (verdict-r7
 task 2): two real writer PROCESSES — separate Python interpreters,
-separate Spark JVMs — race a CAS ``write_version`` on one table under
-both entry layouts. The in-process simulation (test_commit_protocol.py)
-pins the conflict signal; this pins that the put-if-absent primitive
+separate Spark JVMs — race a CAS ``write_version`` on one table. The
+in-process simulation (test_commit_protocol.py) pins the conflict
+signal; this pins that the put-if-absent primitive
 itself arbitrates correctly when the contenders share nothing but the
 filesystem:
 
@@ -20,8 +20,6 @@ import sys
 import time
 from pathlib import Path
 
-import pytest
-
 from etl_spark_spark.sinks.versioned import (
     committed_versions,
     read_versioned,
@@ -31,7 +29,7 @@ from etl_spark_spark.sinks.versioned import (
 _WRITER = r"""
 import os, sys, time
 sys.path.insert(0, {repo!r})
-root, layout, ready, barrier, out, tag = sys.argv[1:7]
+root, ready, barrier, out, tag = sys.argv[1:6]
 from pyspark.sql import SparkSession
 spark = (
     SparkSession.builder.master("local[2]")
@@ -52,7 +50,7 @@ while not os.path.exists(barrier):
         open(out, "w").write("BARRIER_TIMEOUT\n"); sys.exit(2)
     time.sleep(0.02)
 try:
-    v = write_version(spark, df, root, expected_current=cur, layout=layout)
+    v = write_version(spark, df, root, expected_current=cur)
     open(out, "w").write(f"WIN {{v}}\n")
 except ConcurrentWriteError:
     open(out, "w").write("CONFLICT\n")
@@ -68,14 +66,10 @@ def _wait_for(paths, timeout_sec, what):
         time.sleep(0.1)
 
 
-@pytest.mark.parametrize("layout", ["symlink", "marker"])
-def test_two_process_cas_race_has_one_winner(spark, tmp_path, layout):
-    root = str(tmp_path / f"race_{layout}")
+def test_two_process_cas_race_has_one_winner(spark, tmp_path):
+    root = str(tmp_path / "race")
     v1 = write_version(
-        spark,
-        spark.createDataFrame([(0, "base")], "k int, v string"),
-        root,
-        layout=layout,
+        spark, spark.createDataFrame([(0, "base")], "k int, v string"), root
     )
 
     script = tmp_path / "writer.py"
@@ -89,7 +83,7 @@ def test_two_process_cas_race_has_one_winner(spark, tmp_path, layout):
         outs.append(out)
         procs.append(
             subprocess.Popen(
-                [sys.executable, str(script), root, layout, ready, barrier, out, tag],
+                [sys.executable, str(script), root, ready, barrier, out, tag],
                 stdout=subprocess.DEVNULL,
                 stderr=subprocess.DEVNULL,
             )
@@ -210,7 +204,7 @@ def test_two_process_optimistic_merges_both_land(spark, tmp_path):
 _CRASHER = r"""
 import os, sys
 sys.path.insert(0, {repo!r})
-root, layout = sys.argv[1:3]
+root = sys.argv[1]
 from pyspark.sql import SparkSession
 spark = (
     SparkSession.builder.master("local[2]")
@@ -225,29 +219,24 @@ V.write_version(
     spark,
     spark.createDataFrame([(9, "torn")], "k int, v string"),
     root,
-    layout=layout,
 )
 """.format(repo="/root/repo")
 
 
-@pytest.mark.parametrize("layout", ["symlink", "marker"])
-def test_writer_process_death_mid_commit_leaves_nm1(spark, tmp_path, layout):
+def test_writer_process_death_mid_commit_leaves_nm1(spark, tmp_path):
     """A writer PROCESS dying hard (os._exit — no atexit, no exception
     handling, the SIGKILL shape) after staging but inside the commit
     leaves readers untouched at N-1, and vacuum reclaims the orphan
     staging data. Complements the in-process monkeypatch crash test
     with a real process boundary."""
-    root = str(tmp_path / f"ctbl_{layout}")
+    root = str(tmp_path / "ctbl")
     v1 = write_version(
-        spark,
-        spark.createDataFrame([(0, "base")], "k int, v string"),
-        root,
-        layout=layout,
+        spark, spark.createDataFrame([(0, "base")], "k int, v string"), root
     )
     script = tmp_path / "crasher.py"
     script.write_text(_CRASHER)
     p = subprocess.run(
-        [sys.executable, str(script), root, layout],
+        [sys.executable, str(script), root],
         stdout=subprocess.DEVNULL,
         stderr=subprocess.DEVNULL,
         timeout=180,

@@ -373,7 +373,7 @@ def test_versioned_cas_detects_concurrent_commit(spark, tmp_path):
     (someone committed under it) must get ConcurrentWriteError and
     leave no new version behind; the orphaned crash directory is never
     readable via time travel, even after later commits publish past
-    it."""
+    it or a vacuum removes the commits around it."""
     import pytest
 
     from etl_spark_spark.sinks.versioned import (
@@ -381,6 +381,7 @@ def test_versioned_cas_detects_concurrent_commit(spark, tmp_path):
         committed_versions,
         current_version,
         read_versioned,
+        vacuum_versions,
         write_version,
     )
 
@@ -398,7 +399,7 @@ def test_versioned_cas_detects_concurrent_commit(spark, tmp_path):
             expected_current=1,
         )
     assert current_version(t) == 2 and committed_versions(t) == [1, 2]
-    # crash residue (a real directory, the pre-CAS layout) is orphaned
+    # crash residue (a real directory at a version slot) is orphaned
     spark.createDataFrame([(9, "junk")], "k long, v string").write.parquet(
         str(t / "_v" / "v00000005")
     )
@@ -406,6 +407,14 @@ def test_versioned_cas_detects_concurrent_commit(spark, tmp_path):
     assert committed_versions(t) == [1, 2, 3]
     with pytest.raises(FileNotFoundError, match="not a committed snapshot"):
         read_versioned(spark, t, version=5)
+    # residue left below the newest commit after a vacuum stays orphaned
+    assert vacuum_versions(t, keep=1) == [1, 2, 5]
+    spark.createDataFrame([(8, "junk")], "k long, v string").write.parquet(
+        str(t / "_v" / "v00000002")
+    )
+    assert committed_versions(t) == [3]
+    with pytest.raises(FileNotFoundError, match="not a committed snapshot"):
+        read_versioned(spark, t, version=2)
 
 
 def test_versioned_concurrent_merges_no_lost_update(spark, tmp_path):
@@ -613,8 +622,8 @@ def test_apply_snapshot_delta_retries_on_top_of_concurrent_commit(
     real_read = vmod.read_versioned
     reads = []
 
-    def read_then_commit(spark_, path, version=None, fmt="parquet"):
-        out = real_read(spark_, path, version, fmt)
+    def read_then_commit(spark_, path, version=None):
+        out = real_read(spark_, path, version)
         reads.append(version)
         if len(reads) == 1:  # another writer commits after our read
             vmod.write_version(
@@ -692,7 +701,7 @@ def test_compact_table_shrinks_files_data_identical(spark, tmp_path):
         read_versioned,
         snapshot_diff,
         write_version,
-        _version_dir,
+        _snapshot_data_dir,
     )
 
     t = tmp_path / "tbl"
@@ -703,14 +712,14 @@ def test_compact_table_shrinks_files_data_identical(spark, tmp_path):
     )
     write_version(spark, df.repartition(32), t)
     v1_files = [
-        p for p in _version_dir(t, 1).iterdir() if p.name.endswith(".parquet")
+        p for p in _snapshot_data_dir(t, 1).iterdir() if p.name.endswith(".parquet")
     ]
     assert len(v1_files) > 16
 
     v2 = compact_table(spark, t, target_file_bytes=1 << 30)
     assert v2 == 2 and current_version(t) == 2
     v2_files = [
-        p for p in _version_dir(t, 2).iterdir() if p.name.endswith(".parquet")
+        p for p in _snapshot_data_dir(t, 2).iterdir() if p.name.endswith(".parquet")
     ]
     assert len(v2_files) == 1
     # identical data, and the CDC diff between the versions is empty
@@ -719,7 +728,7 @@ def test_compact_table_shrinks_files_data_identical(spark, tmp_path):
     assert snapshot_diff(spark, t, 1, 2, ["k"]).isEmpty()
     # old version still time-travelable with its old layout
     assert len(v1_files) == len(
-        [p for p in _version_dir(t, 1).iterdir() if p.name.endswith(".parquet")]
+        [p for p in _snapshot_data_dir(t, 1).iterdir() if p.name.endswith(".parquet")]
     )
 
     # stale compaction: a merge commits after the compactor read v2
@@ -735,8 +744,8 @@ def test_compact_table_shrinks_files_data_identical(spark, tmp_path):
     real_read = vmod.read_versioned
     racer = _Racer()
 
-    def read_then_merge(spark_, path, version=None, fmt="parquet"):
-        out = real_read(spark_, path, version, fmt)
+    def read_then_merge(spark_, path, version=None):
+        out = real_read(spark_, path, version)
         if not racer.fired:
             racer.fired = True
             merge_into_versioned(
@@ -850,9 +859,8 @@ def test_compact_table_clustered_layout_discriminates(spark, sf_dir, tmp_path):
     stay bit-identical and the new files carry DISJOINT per-file
     min/max ranges on the cluster key — the property that makes the
     stats-index / row-group skippers actually skip."""
-    from pathlib import Path
-
     from etl_spark_spark.sinks.versioned import (
+        _snapshot_data_dir,
         committed_versions,
         compact_table,
         read_versioned,
@@ -875,8 +883,7 @@ def test_compact_table_clustered_layout_discriminates(spark, sf_dir, tmp_path):
     assert got.exceptAll(cust).count() == 0 and cust.exceptAll(got).count() == 0
 
     def parquet_files(version):
-        vdir = Path(root) / "_v" / f"v{version:08d}"
-        d = vdir.resolve() if vdir.is_symlink() else vdir
+        d = _snapshot_data_dir(root, version)
         return [p for p in d.iterdir() if p.suffix == ".parquet"]
 
     assert len(parquet_files(v0)) == 16

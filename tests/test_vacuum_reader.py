@@ -1,7 +1,7 @@
 """Reader racing vacuum on the versioned store (verdict-r8 task 7):
 a real reader PROCESS (separate interpreter + Spark JVM) resolves a
 pinned old version, then vacuum removes that version underneath it.
-Pins the documented retention contract, under both entry layouts:
+Pins the documented retention contract:
 
 - a version RETAINED by vacuum (within ``keep``, or current) reads
   completely and correctly while vacuum runs — vacuum never touches
@@ -35,7 +35,7 @@ from etl_spark_spark.sinks.versioned import (
 _READER = r"""
 import os, sys, time
 sys.path.insert(0, {repo!r})
-root, layout, version, ready, barrier, out = sys.argv[1:7]
+root, version, ready, barrier, out = sys.argv[1:6]
 from pyspark.sql import SparkSession
 spark = (
     SparkSession.builder.master("local[2]")
@@ -70,26 +70,22 @@ def _wait_for(path, timeout_sec, what):
         time.sleep(0.1)
 
 
-def _spawn_reader(tmp_path, root, layout, version, tag):
+def _spawn_reader(tmp_path, root, version, tag):
     script = tmp_path / f"reader{tag}.py"
     script.write_text(_READER)
     ready = str(tmp_path / f"ready{tag}")
     barrier = str(tmp_path / f"go{tag}")
     out = str(tmp_path / f"out{tag}")
     proc = subprocess.Popen(
-        [sys.executable, str(script), root, layout, str(version), ready,
-         barrier, out],
+        [sys.executable, str(script), root, str(version), ready, barrier, out],
         stdout=subprocess.DEVNULL,
         stderr=subprocess.DEVNULL,
     )
     return proc, ready, barrier, out
 
 
-@pytest.mark.parametrize("layout", ["symlink", "marker"])
-def test_reader_racing_vacuum_honors_retention(
-    spark, tmp_path, layout
-):
-    root = str(tmp_path / f"tbl_{layout}")
+def test_reader_racing_vacuum_honors_retention(spark, tmp_path):
+    root = str(tmp_path / "tbl")
     versions = {}
     for v in range(3):
         rows = [(v * 10 + i, f"v{v}r{i}") for i in range(4)]
@@ -97,14 +93,13 @@ def test_reader_racing_vacuum_honors_retention(
             spark,
             spark.createDataFrame(rows, "k int, v string"),
             root,
-            layout=layout,
         )
         versions[v + 1] = sorted(rows)
     assert committed_versions(root) == [1, 2, 3]
 
     # reader A pins the DOOMED version 1; reader B pins CURRENT (3)
-    pa, ra, ba, oa = _spawn_reader(tmp_path, root, layout, 1, f"a{layout}")
-    pb, rb, bb, ob = _spawn_reader(tmp_path, root, layout, 3, f"b{layout}")
+    pa, ra, ba, oa = _spawn_reader(tmp_path, root, 1, "a")
+    pb, rb, bb, ob = _spawn_reader(tmp_path, root, 3, "b")
     try:
         _wait_for(ra, 180, "reader A resolve")
         _wait_for(rb, 180, "reader B resolve")

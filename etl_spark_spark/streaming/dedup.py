@@ -10,9 +10,11 @@ Exactly-once story (the part a naive foreachBatch gets wrong):
 Structured Streaming replays the last uncommitted batch after a crash,
 so both writes must be replay-idempotent:
 
-- the signature index is partitioned by ``__batch_id`` and written with
-  dynamic partition overwrite — a replayed batch rewrites ITS OWN
-  partition instead of appending duplicates;
+- the signature index is partitioned by ``__batch_id``; each batch
+  overwrites its own ``__batch_id=<id>`` leaf directory directly (the
+  join-MV ``_append_partition``) — a replayed batch rewrites ITS OWN
+  partition whole, deleting a crashed attempt's files, instead of
+  appending duplicates;
 - kept rows go through the keyed ``sinks.upsert`` — replaying a batch
   re-upserts the same ids, a no-op;
 - the index is read filtered to ``__batch_id < batch_id`` (STRICTLY
@@ -29,9 +31,8 @@ At-least-once delivery x idempotent writes = effectively-once output.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
-from .join_mv import _read_history
+from .join_mv import _append_partition, _read_history
 from .stream import drain_available_now
 
 
@@ -78,13 +79,7 @@ def dedup_batch_once(
     # two writes so they can't diverge
     batch_sig = new_index.join(batch_df.select(id_col), id_col, "left_semi")
     kept = kept.localCheckpoint()
-    (
-        batch_sig.withColumn("__batch_id", F.lit(batch_id).cast("long"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id")
-        .parquet(index_path)
-    )
+    _append_partition(batch_sig, batch_id, index_path)
     upsert(spark, kept, kept_path, [id_col])
 
 

@@ -15,14 +15,17 @@ plus the tiny Δ⋈Δ.
 
 Storage/exactly-once (the proven ``streaming/dedup.py`` pattern): all
 three tables — accumulated left, accumulated right, and the view —
-are APPEND-ONLY parquet partitioned by ``__batch_id`` written with
-dynamic partition overwrite. A replayed batch reads history filtered
-to STRICTLY earlier batch ids (reconstructing the exact pre-batch
-state even if its own crashed-attempt partitions exist) and rewrites
-its own partitions byte-identically. At-least-once delivery x
-idempotent partition writes = effectively-once view contents, equal
-to a batch join over everything delivered (pinned by test and by the
-registry oracle).
+are APPEND-ONLY parquet partitioned by ``__batch_id``; each batch
+overwrites its own ``__batch_id=<id>`` leaf directory directly
+(``_append_partition``), so the write plan holds no per-batch literal
+and a steady fold reuses the previous fold's generated classes. A
+replayed batch reads history filtered to STRICTLY earlier batch ids
+(reconstructing the exact pre-batch state even if its own
+crashed-attempt partitions exist) and overwrites its own leaves whole,
+deleting whatever a crashed attempt left in them. At-least-once
+delivery x idempotent partition writes = effectively-once view
+contents, equal to a batch join over everything delivered (pinned by
+test and by the registry oracle).
 
 One fold body, three forms: the path-based forms — insert-only
 :func:`apply_join_batch`, banded :func:`apply_join_batch_temporal`
@@ -49,7 +52,7 @@ from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..concurrency import run_concurrently
@@ -65,20 +68,26 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
-def _has_batch_partitions(spark: SparkSession, path: str) -> bool:
+def _has_batch_partitions(
+    spark: SparkSession, path: str, before: int | None = None
+) -> bool:
     """True iff the table directory contains at least one
-    ``__batch_id=*`` partition — an EXPLICIT emptiness probe (listing,
-    not exception-catching): a side whose every partition was evicted
-    (temporal form) is legitimately empty history, while a torn footer
-    inside an existing partition still propagates from the read."""
+    ``__batch_id=*`` partition (with an id below ``before`` when given)
+    — an EXPLICIT emptiness probe (listing, not exception-catching): a
+    side whose every partition was evicted (temporal form) is
+    legitimately empty history, while a torn footer inside an existing
+    partition still propagates from the read. Partitions at or above
+    ``before`` do not count: a replayed first batch may find only its
+    own crashed attempt's leaf, holding nothing but hidden
+    ``_temporary`` files, which is no history (and no schema to infer)."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     for st in fs.listStatus(hpath):
-        if st.isDirectory() and st.getPath().getName().startswith(
-            "__batch_id="
-        ):
-            return True
+        name = st.getPath().getName()
+        if st.isDirectory() and name.startswith("__batch_id="):
+            if before is None or int(name.split("=", 1)[1]) < before:
+                return True
     return False
 
 
@@ -159,7 +168,7 @@ def _read_history(
         return None
     info = _compact_info(path)
     parts = None
-    if _has_batch_partitions(spark, path):
+    if _has_batch_partitions(spark, path, before):
         parts = spark.read.parquet(path).withColumn(
             "__batch_id", F.col("__batch_id").cast("long")
         )
@@ -293,16 +302,24 @@ def compact_join_mv_history(
 
 
 def _append_partition(df: DataFrame, batch_id: int, path: str) -> None:
-    # dynamic overwrite as a writer option, not a session conf: the
-    # batch rewrites only its own partition and the caller's session
-    # keeps its partitionOverwriteMode
-    (
-        df.withColumn("__batch_id", F.lit(batch_id).cast("long"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id")
-        .parquet(path)
-    )
+    """Write ``df`` as the table's ``__batch_id={batch_id}`` partition
+    by overwriting that leaf directory directly — the Hive layout
+    readers discover as the ``__batch_id`` column. The plan carries no
+    batch-id literal, so every batch reuses the generated classes of
+    the one before (a ``lit(batch_id)`` column is inlined into the
+    generated Java and makes each batch's write stages new classes to
+    compile and JIT), and the overwrite touches only this leaf: no
+    dynamic-overwrite staging, and the session's
+    ``partitionOverwriteMode`` is never consulted.
+
+    Replay: the overwrite first deletes the leaf (including a crashed
+    attempt's files and ``_temporary`` residue) and then commits the
+    new files into it, so a replay rewrites the partition whole. A
+    crash mid-write leaves the leaf missing or holding only hidden
+    ``_temporary`` files until the replay — as a crashed first attempt
+    does. An empty ``df`` leaves the leaf holding one schema-only file
+    (readers see no rows from it); ``_SUCCESS`` lands in the leaf."""
+    df.write.mode("overwrite").parquet(f"{path}/__batch_id={batch_id}")
 
 
 _Join = Callable[[DataFrame, DataFrame], DataFrame]
@@ -350,12 +367,18 @@ def _fold_join_batch(
     # (~100-200 ms of AQE/stage bookkeeping at fixture scale; round-13
     # profile: join_mv_temporal ran 53 jobs carrying 1.0 s of task
     # work under a 3.6 s wall) is paid serially when the driver calls
-    # actions one after another. They are mutually independent: the
-    # view delta reads only the PINNED batch inputs plus history
-    # partitions STRICTLY BELOW this batch id — listed before any
-    # write starts, and excluded by the ``__batch_id < batch_id``
-    # filter even if re-listed — so overlapping them costs max()
-    # instead of sum() and cannot change any row written.
+    # actions one after another. The appends are mutually
+    # independent: each writes its own leaf, and the view delta reads
+    # only the PINNED batch inputs plus history partitions STRICTLY
+    # BELOW this batch id — listed before any write starts, and
+    # excluded by the ``__batch_id < batch_id`` filter even if
+    # re-listed — so overlapping them costs max() instead of sum() and
+    # cannot change any row written. A steady temporal fold of the
+    # test feed runs 11 jobs (pinned by test): one checkpoint per side
+    # with its stats riding it, one schema read per history side, and
+    # the three appends with the view delta's AQE stages. No plan
+    # carries a per-batch literal, so a steady fold compiles no new
+    # classes.
     bl, br = run_concurrently(
         lambda: pin(batch_left, "left"), lambda: pin(batch_right, "right")
     )
@@ -467,8 +490,10 @@ def apply_join_batch_bucketed(
     of a year-deep join view viable at 100 TB.
 
     Same replay story: history reads filter to strictly-earlier batch
-    partitions; a replayed batch dynamic-overwrites its own partitions
-    in both side tables and the view. First batch creates the tables
+    partitions; a replayed batch overwrites its own partitions — in the
+    side tables through ``insertInto`` under dynamic partition
+    overwrite, and in the view by overwriting its ``__batch_id`` leaf
+    directory whole (``_append_partition``). First batch creates the tables
     (``bucketBy`` needs ``saveAsTable`` — bucket metadata cannot live
     on bare paths, which is exactly why the plain form can't have this
     cost profile).
@@ -589,8 +614,8 @@ def apply_join_batch_temporal(
     size tracks the band + delay window, not the stream's lifetime.
 
     Mechanics (same replay-idempotent layout as the equi form —
-    batch-id partitions, dynamic overwrite, strictly-earlier history
-    reads):
+    batch-id partitions, each batch overwriting its own leaf
+    directories whole, strictly-earlier history reads):
 
     - each fold records its batch's max event ts in a tiny driver-side
       manifest (``_ts_stats.json``, atomically replaced) — one number
@@ -625,15 +650,18 @@ def apply_join_batch_temporal(
     def _pin_and_stats(df: DataFrame, side: str) -> DataFrame:
         """Pin the batch and compute BOTH per-batch stats the fold
         needs — the NULL-event-time guard and the eviction manifest's
-        max event time — in ONE aggregate over the pinned rows
-        (round-13: previously a limit-probe job + a checkpoint job + a
-        separate max-collect job per side; the fold family's wall is
-        scheduler-job fixed cost, so every merged job counts)."""
-        pinned = df.localCheckpoint()
-        row = pinned.agg(
+        max event time — as an ``Observation`` riding the pin's own
+        checkpoint job, so a side costs one job, not a checkpoint plus
+        an aggregate over the pinned rows (the fold family's wall is
+        scheduler-job fixed cost, so every merged job counts). The
+        guard raises before any of the batch's appends start."""
+        obs = Observation()
+        pinned = df.observe(
+            obs,
             F.max(F.col(ts[side]).cast("long")).alias("m"),
             F.count(F.when(F.col(ts[side]).isNull(), 1)).alias("n_null"),
-        ).collect()[0]
+        ).localCheckpoint()
+        row = obs.get
         if row["n_null"]:
             raise ValueError(
                 "temporal join-MV rows must carry a non-null "

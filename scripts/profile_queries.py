@@ -16,6 +16,12 @@ compare directly.
   fetchw    shuffle fetch wait
   shuf_mb   shuffle read bytes, MB
   maxtask   longest single task over all warm passes
+  compiles  generated classes Janino compiled (CodegenMetrics
+            compilation count delta); nonzero on a warm pass means the
+            plan is not batch-invariant, e.g. a per-call literal
+            inlined into generated code
+  jit_s     JVM JIT compilation time delta (CompilationMXBean), the
+            cost those fresh classes add on top of Janino
 
 Usage: python scripts/profile_queries.py q1 q2 ...  [--sf DIR] [--warm N]
 """
@@ -63,12 +69,24 @@ def main() -> None:
     def _force(df):
         df.write.format("noop").mode("overwrite").save()
 
+    # driver and executors share one JVM in local mode, so these
+    # counters cover every compile a pass causes
+    jvm = spark._jvm
+    codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+
+    def _compiles() -> int:
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
     walls: dict[str, float] = {}
+    compiles: dict[str, float] = {}
+    jit_s: dict[str, float] = {}
     for name in args.queries:
         fn = qs[name]
         spark.sparkContext.setJobDescription(f"cold:{name}")
         _force(fn(spark, args.sf))
         best = None
+        c0, j0 = _compiles(), jit.getTotalCompilationTime()
         for _ in range(args.warm):
             spark.sparkContext.setJobDescription(f"warm:{name}")
             t0 = time.perf_counter()
@@ -76,6 +94,8 @@ def main() -> None:
             w = time.perf_counter() - t0
             best = w if best is None else min(best, w)
         walls[name] = best
+        compiles[name] = (_compiles() - c0) / args.warm
+        jit_s[name] = (jit.getTotalCompilationTime() - j0) / 1e3 / args.warm
         spark.sparkContext.setJobDescription(None)
 
     # flush event log
@@ -152,7 +172,7 @@ def main() -> None:
     hdr = (
         f"{'query':34s} {'wall':>6s} {'jobs':>5s} {'stgs':>5s} {'tasks':>7s} "
         f"{'task_s':>7s} {'ideal':>6s} {'gap':>6s} {'gc':>5s} {'fetchw':>6s} "
-        f"{'shuf_mb':>8s} {'maxtask':>7s}"
+        f"{'shuf_mb':>8s} {'maxtask':>7s} {'compiles':>8s} {'jit_s':>6s}"
     )
     print(f"per warm pass, {args.warm} pass(es); wall = best pass")
     print(hdr)
@@ -164,7 +184,8 @@ def main() -> None:
             f"{n:34s} {w:6.2f} {a['n_jobs']:5.1f} {a['n_stages']:5.1f} "
             f"{a['n_tasks']:7.1f} {a['task_time']:7.1f} {ideal:6.2f} "
             f"{w - ideal:6.2f} {a['gc']:5.1f} {a['fetch_wait']:6.1f} "
-            f"{a['shuffle_read']:8.1f} {agg[n]['max_task']:7.2f}"
+            f"{a['shuffle_read']:8.1f} {agg[n]['max_task']:7.2f} "
+            f"{compiles[n]:8.1f} {jit_s[n]:6.2f}"
         )
 
 

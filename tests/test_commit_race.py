@@ -26,6 +26,9 @@ from etl_spark_spark.sinks.versioned import (
     write_version,
 )
 
+# the checkout under test: the subprocess scripts import its package
+_REPO = str(Path(__file__).resolve().parent.parent)
+
 _WRITER = r"""
 import os, sys, time
 sys.path.insert(0, {repo!r})
@@ -55,7 +58,7 @@ try:
 except ConcurrentWriteError:
     open(out, "w").write("CONFLICT\n")
 spark.stop()
-""".format(repo="/root/repo")
+""".format(repo=_REPO)
 
 
 def _wait_for(paths, timeout_sec, what):
@@ -143,7 +146,7 @@ while not os.path.exists(barrier):
 v = merge_into_versioned(spark, df, root, ["k"])
 open(out, "w").write(f"DONE {{v}}\n")
 spark.stop()
-""".format(repo="/root/repo")
+""".format(repo=_REPO)
 
 
 def test_two_process_optimistic_merges_both_land(spark, tmp_path):
@@ -220,7 +223,7 @@ V.write_version(
     spark.createDataFrame([(9, "torn")], "k int, v string"),
     root,
 )
-""".format(repo="/root/repo")
+""".format(repo=_REPO)
 
 
 def test_writer_process_death_mid_commit_leaves_nm1(spark, tmp_path):

@@ -94,7 +94,8 @@ def test_join_view_fold_equals_batch_join_and_replay_is_idempotent(
     """Incremental join-view maintenance (streaming/join_mv.py): three
     independently-sliced insert batches reconstruct the one-shot join
     exactly (cross-batch matches included), and replaying a committed
-    batch changes nothing — the dynamic-partition-overwrite fence."""
+    batch changes nothing — each batch overwrites only its own
+    partition."""
     from pyspark.sql import functions as F
 
     from etl_spark_spark.sources import table
@@ -184,7 +185,7 @@ def test_bucketed_join_view_equals_plain_fold(spark, sf_dir, tmp_path):
         assert got.count() == want.count()
         assert got.exceptAll(want.select(*got.columns)).count() == 0
 
-        # replay batch 1: dynamic overwrite keeps everything identical
+        # replay batch 1: its partition overwrites keep everything identical
         apply_join_batch_bucketed(
             li.filter(F.col("l_suppkey") % 3 == 1),
             orders.filter(F.col("o_custkey") % 3 == 1),
@@ -1193,3 +1194,125 @@ def test_drain_timeout_raises_and_stops_query(spark, tmp_path, monkeypatch):
             timeout_sec=1,
         )
     assert spark.streams.active == []
+
+
+def _temporal_batch(spark, b: int, right: bool = True):
+    """Batch ``b`` of a small banded feed: 20 left rows (``lid = 100 *
+    b + k``) stamped within hour ``b`` and, unless ``right`` is False,
+    a right row with ``rid = lid`` for every other key 7 minutes later
+    (in band); an empty right side keeps the schema."""
+    def side(rows, schema, ts):
+        return spark.createDataFrame(rows, schema).withColumn(
+            ts, F.col(ts).cast("timestamp")
+        )
+
+    def at(k: int) -> str:
+        return f"2026-03-01 {b:02d}:{k:02d}:00"
+
+    left = [(k, 100 * b + k, at(k)) for k in range(20)]
+    rows = [(k, 100 * b + k, at(k + 7)) for k in range(0, 20, 2)] if right else []
+    return (
+        side(left, "k long, lid long, lts string", "lts"),
+        side(rows, "k long, rid long, rts string", "rts"),
+    )
+
+
+@pytest.fixture(scope="module")
+def steady_temporal_fold(spark, tmp_path_factory):
+    """Fold batches 0-2 of a temporal join MV, then fold batch 3 under
+    its own job group; returns (Janino compiles, job ids) of fold 3."""
+    import time
+    import uuid
+
+    from etl_spark_spark.streaming.join_mv import apply_join_batch_temporal
+
+    state = str(tmp_path_factory.mktemp("steady") / "tj")
+    for b in range(3):
+        apply_join_batch_temporal(
+            *_temporal_batch(spark, b), b, ["k"], "lts", "rts", 3600, state
+        )
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    sc = spark.sparkContext
+    group = f"steady-fold-{uuid.uuid4().hex}"
+    before = codegen.METRIC_COMPILATION_TIME().getCount()
+    sc.setJobGroup(group, "steady temporal fold")
+    try:
+        apply_join_batch_temporal(
+            *_temporal_batch(spark, 3), 3, ["k"], "lts", "rts", 3600, state
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    compiles = codegen.METRIC_COMPILATION_TIME().getCount() - before
+    time.sleep(1.0)  # job-start events reach the status store asynchronously
+    return compiles, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_steady_temporal_fold_compiles_no_new_classes(steady_temporal_fold):
+    """A fold whose plan shapes the previous folds already ran reuses
+    their generated classes: nothing in the plan varies per batch (no
+    batch-id literal inlined into generated code)."""
+    compiles, _ = steady_temporal_fold
+    assert compiles == 0
+
+
+def test_steady_temporal_fold_job_count(steady_temporal_fold):
+    """A steady temporal fold runs at most 11 jobs: one checkpoint per
+    pinned side (its stats ride that job as an Observation), the two
+    history reads, and the three appends with their AQE stages."""
+    _, jobs = steady_temporal_fold
+    assert 1 <= len(jobs) <= 11, jobs
+
+
+def test_temporal_fold_empty_side_and_replay_over_crash_residue(spark, tmp_path):
+    """A batch with an empty right side leaves an empty partition (one
+    schema-only file, ``_SUCCESS`` in the leaf); replaying a batch
+    whose leaves hold a crashed attempt's ``_temporary`` residue
+    rewrites them whole, and a first batch that finds only its own
+    crashed leaf reads it as no history. The view equals the one-shot
+    banded join, without duplicate rows."""
+    from etl_spark_spark.streaming.join_mv import (
+        apply_join_batch_temporal,
+        read_join_view,
+    )
+
+    def plant_residue(leaf: Path) -> None:
+        attempt = leaf / "_temporary" / "0" / "_temporary" / "attempt_0"
+        attempt.mkdir(parents=True)
+        (attempt / "part-00000.parquet").write_bytes(b"PAR1\x00torn")
+
+    state = tmp_path / "tj"
+    # a crashed first attempt of batch 0 left only hidden residue
+    plant_residue(state / "left" / "__batch_id=0")
+    batches = [_temporal_batch(spark, 0), _temporal_batch(spark, 1, right=False),
+               _temporal_batch(spark, 2)]
+    fold = lambda b: apply_join_batch_temporal(  # noqa: E731
+        *batches[b], b, ["k"], "lts", "rts", 3600, str(state)
+    )
+    fold(0)
+    fold(1)
+    empty = state / "right" / "__batch_id=1"
+    assert len(list(empty.glob("*.parquet"))) == 1
+    assert spark.read.parquet(str(empty)).count() == 0
+    assert (state / "view" / "__batch_id=1" / "_SUCCESS").exists()
+    assert not (state / "view" / "_SUCCESS").exists()
+
+    # replay batch 1 over a crashed attempt's residue in its leaves
+    for side in ("left", "right", "view"):
+        plant_residue(state / side / "__batch_id=1")
+    fold(1)
+    for side in ("left", "right", "view"):
+        assert not (state / side / "__batch_id=1" / "_temporary").exists()
+    fold(2)
+
+    left = batches[0][0].unionByName(batches[1][0]).unionByName(batches[2][0])
+    right = batches[0][1].unionByName(batches[2][1])
+    want = sorted(
+        tuple(r) for r in left.join(right, "k")
+        .filter(F.abs(F.col("lts").cast("long") - F.col("rts").cast("long")) <= 3600)
+        .select("lid", "rid").collect()
+    )
+    got = sorted(
+        tuple(r) for r in read_join_view(spark, str(state)).select("lid", "rid").collect()
+    )
+    # batch-1 left rows pair with batch-0 right rows across batches
+    assert got == want and any(lid // 100 != rid // 100 for lid, rid in want)

@@ -32,6 +32,9 @@ from etl_spark_spark.sinks.versioned import (
     write_version,
 )
 
+# the checkout under test: the subprocess scripts import its package
+_REPO = str(Path(__file__).resolve().parent.parent)
+
 _READER = r"""
 import os, sys, time
 sys.path.insert(0, {repo!r})
@@ -59,7 +62,7 @@ try:
 except Exception as e:
     open(out, "w").write(f"RAISED {{type(e).__name__}}\n")
 spark.stop()
-""".format(repo="/root/repo")
+""".format(repo=_REPO)
 
 
 def _wait_for(path, timeout_sec, what):

@@ -74,8 +74,8 @@ def train_quality_model(
     max_iter: int = 30,
 ):
     """Fit the hashed-n-gram logistic model. Returns a fitted
-    ``PipelineModel`` (featurization + classifier) ready for
-    ``score_quality``. Training cost: one shuffle-free featurization
+    ``PipelineModel`` (featurization + classifier, without its training
+    summary) ready for ``score_quality``. Training cost: one shuffle-free featurization
     pass + L-BFGS iterations, each a treeAggregate over executors."""
     from pyspark.ml import Pipeline
     from pyspark.ml.classification import LogisticRegression
@@ -87,7 +87,16 @@ def train_quality_model(
         featuresCol="features",
     )
     pipe = Pipeline(stages=[*quality_feature_pipeline(n_features), lr])
-    return pipe.fit(_token_arrays(df, text_col))
+    model = pipe.fit(_token_arrays(df, text_col))
+    # The classifier's scoring closure captures the model, and the
+    # model's training summary holds the SparkSession. Once any
+    # ``Observation`` has run in the session (the join-MV pin, the
+    # quality write metrics), the session carries a non-serializable
+    # ObservationManager, and every scoring task then fails with "Task
+    # not serializable". Nothing here reads the summary, so drop it.
+    jvm = df.sparkSession._jvm
+    model.stages[-1]._java_obj.setSummary(jvm.scala.Option.empty())
+    return model
 
 
 def score_quality(model, df: DataFrame, text_col: str) -> DataFrame:

@@ -1316,3 +1316,23 @@ def test_temporal_fold_empty_side_and_replay_over_crash_residue(spark, tmp_path)
     )
     # batch-1 left rows pair with batch-0 right rows across batches
     assert got == want and any(lid // 100 != rid // 100 for lid, rid in want)
+
+
+def test_quality_model_scores_after_a_temporal_fold(spark, steady_temporal_fold):
+    """The temporal pin's ``Observation`` leaves the session holding a
+    non-serializable ObservationManager. The quality model must still
+    score in that session: the fitted model must not carry the session
+    into its scoring tasks (a model that kept its training summary
+    failed them with "Task not serializable")."""
+    from etl_spark_spark.operators.classify import (
+        score_quality,
+        train_quality_model,
+    )
+
+    good = "good clean prose about the river bank"
+    rows = [(i, good, 1.0) for i in range(20)]
+    rows += [(100 + i, f"zqx zqx k{i} zqx", 0.0) for i in range(20)]
+    df = spark.createDataFrame(rows, "id long, text string, y double")
+    model = train_quality_model(df, "text", "y", n_features=256)
+    scored = score_quality(model, df, "text")
+    assert scored.filter(F.col("quality_pred") == F.col("y")).count() == 40

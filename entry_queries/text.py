@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_spark_spark.execution import computed_once, fan_out, run_concurrently
 from etl_spark_spark.functions.money import money_sum, money_sum_sql
 from etl_spark_spark.operators.stats import checked_measure_sql
 from etl_spark_spark.functions.normalize import (
@@ -1795,7 +1796,6 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row window test over the token array, map-only, no shuffle
     (operators/retrieval.py:phrase_occurrences)."""
     from etl_spark_spark.operators.retrieval import phrase_occurrences
-    from etl_spark_spark.operators.skew import computed_once, fan_out
 
     # map-only means the whole query runs in the scan's partitioning —
     # ONE task on a single-row-group file, 4.3 s of tokenize + position
@@ -1827,7 +1827,6 @@ def q_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         phrase_occurrences,
         rrf_fuse,
     )
-    from etl_spark_spark.operators.skew import computed_once, fan_out
     from pyspark.sql import Window
 
     # one shared fan-out feeds both ranking legs (bm25_topk's internal
@@ -2065,7 +2064,6 @@ def q_neardup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         t: plan_banding(t, _EVAL_TARGET_RECALL, _EVAL_MAX_PERMS)
         for t in _EVAL_THRESHOLDS
     }
-    from etl_spark_spark.concurrency import run_concurrently
 
     sh = shingle_set(toks, "doc_id", word_shingles("t", 3))
     reps_sh, members = collapse_identical_sets(sh, "doc_id")

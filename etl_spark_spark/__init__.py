@@ -9,6 +9,8 @@ search, text analysis, streaming windows) designed for 100 TB scale.
 
 Layout:
     session    — SparkSession factory tuned for local testing & cluster scale
+    execution  — execution policy (fan-out, computed-once columns,
+                 concurrent actions)
     sources/   — parquet scans (explicit schema, date-range pruning)
     functions/ — Column-expression builders (normalization, money, nulls, text)
     operators/ — relational operators (dedup, windows, joins, set ops,

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..execution import fan_out
 from ..functions.text import tokens
 
 
@@ -39,8 +40,6 @@ def unigram_surprisal(
 
     Returns ``(id_col, n_tokens, n_terms, mean_surprisal_milli)``.
     """
-    from .skew import fan_out
-
     # tokenize+explode evaluate in the input's partitioning — one task
     # on a single-row-group scan (guide §2.5); no-op at real scale
     docs = fan_out(docs)
@@ -131,7 +130,6 @@ def bigram_surprisal(
     single-token docs (no bigrams) are absent by construction.
     """
     from ..functions.text import tokens, word_shingles
-    from .skew import fan_out
 
     # tokenize+shingle+explode evaluate in the input's partitioning —
     # one task on a single-row-group scan (guide §2.5)
@@ -260,7 +258,6 @@ def dsir_log_weights(
     Returns (id_col, n_bigrams, n_buckets, log_weight_milli).
     """
     from ..functions.text import word_shingles
-    from .skew import fan_out
 
     B = 16 ** n_hex
     # tokenize+shingle+md5 evaluate in the input's partitioning — one
@@ -408,8 +405,6 @@ def kn_bigram_surprisal(
     construction.
     """
     from ..functions.text import tokens, word_shingles
-
-    from .skew import fan_out
 
     def _bigrams(docs: DataFrame) -> DataFrame:
         # tokenize+shingle+explode run in the input's partitioning —

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..execution import fan_out
 from ..functions.text import fingerprint
 
 SIMHASH_BITS = 60  # 15 hex chars of md5 -> fits int64 positive
@@ -51,8 +52,6 @@ def shingle_set(df: DataFrame, id_col: str, shingles_col: Column) -> DataFrame:
     than the session parallelism (measured 0.99 s -> 0.65 s at sf0.1;
     a no-op exactly when the input is already parallel, i.e. at scale).
     The distinct aggregate downstream is partitioning-independent."""
-    from .skew import fan_out
-
     return (
         fan_out(df)
         .select(F.col(id_col), F.explode(shingles_col).alias("shingle"))
@@ -1634,8 +1633,6 @@ def simhash(
     multiplied it).
     Returns (id, simhash int64).
     """
-    from .skew import fan_out
-
     hashed = F.transform(
         tokens_col,
         lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long"),

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..execution import computed_once, fan_out
 from ..functions.text import tokens
 
 
@@ -52,7 +53,6 @@ def bm25_topk(
     """
     if not query_terms:
         raise ValueError("bm25_topk needs at least one query term")
-    from .skew import fan_out
 
     # the tokenized projection is evaluated TWICE (corpus stats agg +
     # the scored side of the broadcast cross join) and both runs sit in
@@ -102,7 +102,6 @@ def bm25_topk(
     for i in range(len(query_terms)):
         h = (F.col(f"__tf_{i}") > 0).cast("int")
         n_hit = h if n_hit is None else n_hit + h
-    from .skew import computed_once
 
     # computed_once: the score predicate would otherwise be substituted
     # down past the projection and re-run the per-term tf/idf trees

@@ -23,6 +23,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..execution import fan_out
 from ..functions.vectors import cosine
 
 
@@ -37,8 +38,6 @@ def cosine_topk(
     Returns (query_id, neighbor_id, cos_sim, rank) — deterministic:
     ties break on neighbor id.
     """
-    from .skew import fan_out
-
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
     )

@@ -80,78 +80,3 @@ def salted_sum(
         *[F.sum(name).alias(name) for name in sums]
     )
 
-
-_FANOUT_DECISIONS: dict[tuple[int, int], bool] = {}
-
-
-def fan_out(df: DataFrame, parts: int | None = None) -> DataFrame:
-    """Scale-adaptive CPU fan-out for heavy per-row work sitting on a
-    low-parallelism scan (optimization guide §2.5 "input skew: one huge
-    unsplittable file ... repartition immediately after the read").
-
-    A single-row-group parquet file is one scan task no matter what
-    ``maxPartitionBytes`` says, so a map-side stage that multiplies work
-    per row (the d²/2 covariance struct explode: measured 9.1 s in ONE
-    task vs 1.0 s fanned out at sf0.1) runs on one core while the rest
-    of the cluster idles. Round-robin repartition is added ONLY when the
-    plan's current parallelism is below the session default — at real
-    scale the scan already has >= cores splits and this is a no-op (no
-    exchange enters the plan), so callers pay the extra shuffle exactly
-    when it buys parallel CPU and never when the input is big.
-
-    Only safe upstream of partition-order-independent computation —
-    which every oracle-gated operator in this engine already guarantees
-    (integer-exact sums, per-group windows). The repartition is Spark's
-    deterministic round-robin (sort-before-repartition stays on), so
-    retries cannot duplicate or lose rows."""
-    sc = df.sparkSession.sparkContext
-    target = parts or sc.defaultParallelism
-    # The partition-count probe (df.rdd.getNumPartitions()) runs the
-    # optimizer + physical planner + RDD translation for the whole
-    # upstream plan on the driver, per call (ADVICE r12) — and warm
-    # re-runs of a query rebuild the IDENTICAL plan, paying it again.
-    # Cache the decision per (analyzed-plan semantic hash, target):
-    # the key costs only analysis (which any use of df pays anyway),
-    # repeated calls become dict hits. Same semantic plan over changed
-    # underlying files could stale-hit, but no fan_out call site reads
-    # a mutated path, and a stale entry can only add or skip one
-    # round-robin exchange — never change a value.
-    key = (df._jdf.queryExecution().analyzed().semanticHash(), int(target))
-    fan = _FANOUT_DECISIONS.get(key)
-    if fan is None:
-        fan = df.rdd.getNumPartitions() < target
-        if len(_FANOUT_DECISIONS) > 4096:  # unbounded-growth backstop
-            _FANOUT_DECISIONS.clear()
-        _FANOUT_DECISIONS[key] = fan
-    return df.repartition(target) if fan else df
-
-
-def computed_once(col: Column) -> Column:
-    """Mark an expensive column expression so filters on it are NOT
-    substituted-and-pushed below the projection (re-running the whole
-    expression tree at the scan).
-
-    Catalyst pushes a filter through deterministic projections by
-    SUBSTITUTING the column definitions into the predicate (the
-    optimization guide §4.4 shows this duplicating Python UDFs; it
-    applies to any expression). For a cheap predicate that is good;
-    when the projected column is a heavy tree (tokenize + positional
-    windows over a document), the pushed copy re-runs the full tree
-    below any exchange — in the scan's partitioning, i.e. on ONE core
-    for a single-row-group file — and the projection above evaluates it
-    AGAIN for the surviving rows (measured: phrase_search paid its
-    2.2 s phrase pass twice).
-
-    The guide's fix is ``asNondeterministic`` on the UDF; the built-in
-    equivalent is a value-identical nondeterministic wrapper:
-    ``element_at(shuffle(array(expr)), 1)`` — shuffling a one-element
-    array is the identity for ANY column type, but ``shuffle`` is
-    flagged nondeterministic, so the optimizer may not duplicate,
-    reorder, or push predicates through it and the column is computed
-    exactly once, exactly where it is written. Two rejected variants:
-    a nondeterministic SIBLING column no longer blocks the push in
-    Spark 4 (predicates are split and pushed selectively), and
-    ``WHEN rand() >= -1 THEN expr`` is constant-folded away by the
-    rand-bounds simplification. Cost: one 1-element array per row —
-    noise next to any expression worth wrapping."""
-    return F.element_at(F.shuffle(F.array(col)), 1)

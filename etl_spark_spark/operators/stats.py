@@ -16,6 +16,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..execution import fan_out
+
 
 def _q_labels(prefix: str, qs: Sequence[float]) -> list[str]:
     """Output-column labels for quantile requests. Whole-percent qs
@@ -589,8 +591,6 @@ def embedding_covariance(
     d ≤ a few hundred; for BERT-scale d use a mapInPandas partial
     per partition (same output contract).
     """
-    from .skew import fan_out
-
     # the d²/2 struct explode multiplies each row ~2000x map-side; on a
     # low-parallelism scan (single-row-group file = ONE task) that pins
     # one core for the whole pass (measured 9.1 s -> 1.0 s at sf0.1).

@@ -10,8 +10,14 @@ for scale:
   dynamic broadcast) — the main lever that keeps one static plan working
   from sf0.001 local tests to 100 TB clusters.
 - Arrow for any pandas boundary (10-100x over pickling).
-- `spark.sql.shuffle.partitions` sized by env; at cluster scale AQE
-  coalesces down from a deliberately-high initial number.
+- `spark.sql.shuffle.partitions` from the ``shuffle_partitions``
+  argument (default 32); AQE coalesces down from a deliberately-high
+  initial number (512).
+
+Every value here is a literal default. A caller changes one through
+``shuffle_partitions=`` or ``extra_conf=``, which is applied last; the
+only environment setting read is ``SPARK_GRAFT_CPUS``, the local core
+count of a deployment.
 """
 
 from __future__ import annotations
@@ -24,7 +30,7 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "etl-spark-spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
@@ -35,8 +41,6 @@ def get_spark(
     from pyspark import SparkConf
 
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
     builder = SparkSession.builder.appName(app_name)
     # only default to local[] when no master was configured (spark-submit
@@ -50,10 +54,7 @@ def get_spark(
     # 100x-data shuffle sorts GBs per task (measured: the prefix-filter
     # candidate join OOM'd the 8 GB local heap at 32 partitions; at 512
     # initial partitions the same stage runs in bounded memory). At
-    # cluster scale raise SPARK_GRAFT_INITIAL_PARTITIONS with the data.
-    initial_partitions = int(
-        os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", "512")
-    )
+    # cluster scale raise it with the data through extra_conf.
     # AQE coalescing targets BYTES, but several engine stages are
     # CPU-dense per byte (the 64-permutation md5 minhash partial
     # aggregate reads a ~3 MB compressed shuffle and burns ~10 s of
@@ -66,7 +67,6 @@ def get_spark(
     # Scale-safe: when shuffles carry real bytes the total/parallelism
     # target dominates and a 64k floor is inert; it only bites on
     # small-bytes/high-CPU stages, where more tasks is exactly right.
-    min_coalesced = os.environ.get("SPARK_GRAFT_MIN_COALESCED_PARTITION", "64k")
     builder = (
         builder.config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -74,12 +74,11 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(max(initial_partitions, shuffle_partitions)),
+            str(max(512, shuffle_partitions)),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            min_coalesced,
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k"
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # round-13 REVERT of the round-12 "long-lived-driver hygiene"
@@ -91,13 +90,9 @@ def get_spark(
         # VERDICT r12's diagnosis that the forced full GCs land
         # stop-the-world pauses inside the bench. GC cadence belongs to
         # the deployment, not the engine default (guide §5); a marathon
-        # host can still opt in via SPARK_GRAFT_PERIODIC_GC /
-        # SPARK_GRAFT_DRIVER_MEM.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "30min"),
-        )
+        # host can still opt in through extra_conf.
+        .config("spark.driver.memory", "8g")
+        .config("spark.cleaner.periodicGC.interval", "30min")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
     )

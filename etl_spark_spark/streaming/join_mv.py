@@ -55,7 +55,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..concurrency import run_concurrently
+from ..execution import run_concurrently
 from .stream import drain_available_now
 
 
@@ -525,7 +525,7 @@ def apply_join_batch_bucketed(
 
         # data columns' DDL; the partition column is declared last so
         # CREATE TABLE + recoverPartitions reproduce this exact layout
-        ddl = batch._jdf.schema().toDDL() + ", `__batch_id` BIGINT"
+        ddl = batch.schema.toDDL() + ", `__batch_id` BIGINT"
         manifest = _bucket_manifest(location_root)
         meta = {"tables": {}}
         if _os.path.exists(manifest):
@@ -625,7 +625,8 @@ def apply_join_batch_temporal(
       depends on eviction; a row evicted early would be a bug, a row
       evicted late is only storage);
     - :func:`evict_join_mv_state` deletes whole batch partitions whose
-      manifest max ts is older than ``watermark - band - delay`` —
+      manifest max ts is older than ``watermark - band - delay``, and
+      a committed batch's empty-side leaf whatever the horizon —
       partition-level deletes, no rewrite, no read amplification.
       Eviction is SAFE with respect to replay because Structured
       Streaming replays only the last uncommitted batch: every batch
@@ -695,7 +696,9 @@ def _record_ts_stats(
     """Per-batch max event time, one tiny JSON atomically replaced —
     the partition-level stat eviction prunes on (a table format would
     keep this in its manifest; replay of a batch overwrites its own
-    entry, matching the partition overwrite)."""
+    entry, matching the partition overwrite). An empty side is recorded
+    as ``None``: its leaf holds no row, so eviction drops it as soon as
+    the batch is committed."""
     import json
     import os
 
@@ -704,14 +707,12 @@ def _record_ts_stats(
     if os.path.exists(p):
         with open(p) as f:
             stats = json.load(f)
-    entry = stats["batches"].setdefault(str(batch_id), {})
-    for side, m in maxima.items():
-        if m is not None:
-            entry[side] = m
-            # the stream's high-water mark is monotone and survives
-            # eviction tombstones (a watermark must never regress)
-            if m > stats.get("max_ts", m - 1):
-                stats["max_ts"] = m
+    stats["batches"][str(batch_id)] = dict(maxima)
+    for m in maxima.values():
+        # the stream's high-water mark is monotone and survives
+        # eviction (a watermark must never regress)
+        if m is not None and m > stats.get("max_ts", m - 1):
+            stats["max_ts"] = m
     _write_json(p, stats)
 
 
@@ -742,7 +743,9 @@ def evict_join_mv_state(
 ) -> list[tuple[str, int]]:
     """Drop accumulated-side batch partitions that can NEVER join a
     future delta: a partition is evictable when its recorded max event
-    time < watermark - band - delay. Whole-directory deletes — no
+    time < watermark - band - delay, or when it holds no row (an empty
+    batch side, recorded as ``None``: dropping it changes no read, so
+    it goes whatever the horizon). Whole-directory deletes — no
     rewrite. The VIEW is untouched (it is output, not join state).
 
     ``committed_below``: only partitions with batch_id strictly below
@@ -755,7 +758,7 @@ def evict_join_mv_state(
     first attempt joined against, silently shrinking the replayed view
     partition (standard stream-stream joins evict on the PREVIOUS
     batch's watermark for exactly this reason; ADVICE r7). The
-    committed watermark stays monotone across eviction tombstones via
+    committed watermark stays monotone across evictions via
     a ``committed_max_ts`` high-water mark in the manifest.
 
     ``committed_below`` is effectively required: omitting it computes
@@ -793,37 +796,41 @@ def evict_join_mv_state(
     with open(p) as f:
         stats = json.load(f)
     if committed_below is None:
-        if "max_ts" not in stats:
-            return []
-        wm = int(stats["max_ts"]) - delay_seconds
+        top = stats.get("max_ts")
     else:
         # committed-only watermark: max recorded event time over
         # batches the checkpoint has committed, carried monotonically
-        # across tombstones so consumed stats never regress it
+        # across evictions so consumed stats never regress it
         cand = [int(stats["committed_max_ts"])] if "committed_max_ts" in stats else []
         for bid_str, entry in stats["batches"].items():
             if int(bid_str) >= committed_below:
                 continue
             cand.extend(m for m in (entry.get("left"), entry.get("right")) if m is not None)
-        if not cand:
-            return []
-        stats["committed_max_ts"] = max(cand)
-        wm = stats["committed_max_ts"] - delay_seconds
-    horizon = wm - band_seconds
+        if cand:
+            stats["committed_max_ts"] = max(cand)
+        top = stats.get("committed_max_ts")
+    horizon = None if top is None else top - delay_seconds - band_seconds
     evicted: list[tuple[str, int]] = []
     for bid_str, entry in sorted(stats["batches"].items(), key=lambda kv: int(kv[0])):
         bid = int(bid_str)
         if committed_below is not None and bid >= committed_below:
             continue
         for side in ("left", "right"):
-            m = entry.get(side)
-            if m is None or m >= horizon:
+            if side not in entry:
+                continue  # consumed by an earlier pass
+            m = entry[side]
+            # None: an empty side, whose leaf holds no row
+            if m is not None and (horizon is None or m >= horizon):
                 continue
             part = f"{state_path}/{side}/__batch_id={bid}"
             if os.path.isdir(part):
                 shutil.rmtree(part)
                 evicted.append((side, bid))
-            entry[side] = None  # tombstone: stat consumed
+            del entry[side]
+        if not entry:
+            # both sides consumed; the watermark survives in max_ts /
+            # committed_max_ts, so the entry can go
+            del stats["batches"][bid_str]
     _write_json(p, stats)
     return evicted
 

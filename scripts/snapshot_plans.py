@@ -49,17 +49,6 @@ def tracked_counts(plan: str) -> dict[str, int]:
 
 def snapshot() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
-    # generate under the SAME pinned environment the test fixture uses
-    # (tests/conftest.py _PLAN_SHAPING_ENV): session-config env vars
-    # change plan shapes and would bake a host's shell state into the
-    # committed snapshot (ADVICE r12)
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests")
-    )
-    from conftest import _PLAN_SHAPING_ENV  # noqa: E402
-
-    for k in _PLAN_SHAPING_ENV:
-        os.environ.pop(k, None)
     spark = get_spark(app_name="snapshot-plans", cpus=8, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     snap = {

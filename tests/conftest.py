@@ -9,28 +9,9 @@ from etl_spark_spark.session import get_spark
 TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
-# Env knobs that change SESSION CONFIG or PLAN SHAPE (AQE coalescing,
-# shuffle partitions, parallelism). The plan-snapshot gate pins exact
-# operator counts, so tests must run under the DEFAULT knob settings
-# whatever the invoking shell exports — otherwise a snapshot generated
-# on one host fails on any host with a knob set (ADVICE r12). cpus=8 below already
-# pins spark.default.parallelism against host core counts.
-_PLAN_SHAPING_ENV = (
-    "SPARK_GRAFT_MIN_COALESCED_PARTITION",
-    "SPARK_GRAFT_INITIAL_PARTITIONS",
-    "SPARK_GRAFT_SHUFFLE",
-    "SPARK_GRAFT_DRIVER_MEM",
-    "SPARK_GRAFT_PERIODIC_GC",
-    "SPARK_GRAFT_CPUS",
-)
-
-
 @pytest.fixture(scope="session")
 def spark():
-    for k in _PLAN_SHAPING_ENV:
-        os.environ.pop(k, None)
-    spark = get_spark(app_name="etl-spark-spark-tests", cpus=8, shuffle_partitions=8)
-    yield spark
+    return get_spark(app_name="etl-spark-spark-tests", cpus=8, shuffle_partitions=8)
 
 
 @pytest.fixture(scope="session")

@@ -69,8 +69,9 @@ def test_evict_then_replay_window_is_lossless(spark, tmp_path):
         return evicted
 
     ev1 = fold_batch_1()
-    # committed watermark comes from batch 0 only -> nothing evictable
-    assert ev1 == []
+    # committed watermark comes from batch 0 only -> no row is
+    # evictable; only batch 0's empty right leaf goes (it holds none)
+    assert ev1 == [("right", 0)]
     first = sorted(
         (r["lid"], r["rid"])
         for r in spark.read.parquet(f"{state}/view").collect()

@@ -275,7 +275,7 @@ def test_no_unbounded_nested_loop_joins_in_any_query(all_query_plans):
 
 
 def test_phrase_expression_computed_once(all_query_plans):
-    """computed_once (operators/skew.py) must keep q_phrase_search's
+    """computed_once (etl_spark_spark/execution.py) must keep q_phrase_search's
     heavy phrase tree from being substituted-and-pushed below its
     projection — the round-12 plan audit caught the optimizer running
     the whole tokenize+positional-window tree TWICE (once in a pushed

@@ -1040,68 +1040,6 @@ def test_rollup_checkpoint_restart_fence_prevents_double_count(
     assert got == want
 
 
-def test_run_concurrently_orders_results_and_propagates_errors(spark):
-    """The round-13 fold overlap (etl_spark_spark.concurrency) must
-    return results in thunk order — the join-MV folds unpack
-    ``bl, br = _concurrently(...)`` positionally — and must join every
-    thread before re-raising the first failure, so a crashed fold
-    leaves no state write silently running behind the caller."""
-    import time
-
-    from etl_spark_spark.concurrency import run_concurrently
-
-    # order is positional, not completion-order (the slow thunk first)
-    def slow():
-        time.sleep(0.2)
-        return "first"
-
-    assert run_concurrently(slow, lambda: "second") == ["first", "second"]
-
-    finished = {"b": False}
-
-    def boom():
-        raise ValueError("injected")
-
-    def other():
-        time.sleep(0.2)
-        finished["b"] = True
-        return "ok"
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="injected"):
-        run_concurrently(boom, other)
-    assert finished["b"], "all threads must be joined before re-raising"
-
-    # and it actually overlaps Spark jobs: two concurrent counts finish
-    # in well under the serial sum on an idle local scheduler
-    df = spark.range(1000)
-    a, b = run_concurrently(df.count, lambda: df.count() + 1)
-    assert (a, b) == (1000, 1001)
-
-
-def test_run_concurrently_raises_lowest_index_error():
-    """With several failing thunks, run_concurrently raises the error of
-    the lowest-index one whatever the completion order (thunk 1 fails
-    first here), and the other failure rides along in its notes instead
-    of being dropped."""
-    import time
-
-    from etl_spark_spark.concurrency import run_concurrently
-
-    def late_boom():
-        time.sleep(0.3)
-        raise ValueError("thunk zero")
-
-    def early_boom():
-        raise KeyError("thunk one")
-
-    with pytest.raises(ValueError, match="thunk zero") as info:
-        run_concurrently(late_boom, early_boom, lambda: "fine")
-    notes = getattr(info.value, "__notes__", [])
-    assert any("thunk 1" in n and "thunk one" in n for n in notes), notes
-
-
 def test_join_folds_leave_session_partition_overwrite_mode(spark, tmp_path):
     """The join-MV folds overwrite only their own batch partitions
     without switching the caller's session to dynamic partition
@@ -1316,6 +1254,41 @@ def test_temporal_fold_empty_side_and_replay_over_crash_residue(spark, tmp_path)
     )
     # batch-1 left rows pair with batch-0 right rows across batches
     assert got == want and any(lid // 100 != rid // 100 for lid, rid in want)
+
+
+def test_eviction_drops_committed_empty_side_leaves(spark, tmp_path):
+    """An empty fold side leaves a schema-only leaf. Eviction drops
+    that leaf once its batch is committed, whatever the horizon (it
+    holds no row), so a stream whose right side is often empty does not
+    keep one leaf per such batch; an uncommitted batch's empty leaf and
+    every leaf holding rows inside the band stay."""
+    import json
+
+    from etl_spark_spark.streaming.join_mv import (
+        apply_join_batch_temporal,
+        evict_join_mv_state,
+        read_join_view,
+    )
+
+    state = tmp_path / "tj"
+    band = 86400
+    batches = [_temporal_batch(spark, b, right=b == 0) for b in range(4)]
+    for b, (left, right) in enumerate(batches):
+        apply_join_batch_temporal(left, right, b, ["k"], "lts", "rts", band, str(state))
+    assert (state / "right" / "__batch_id=1").is_dir()
+
+    # every row is inside the one-day band: only empty leaves may go
+    evicted = evict_join_mv_state(str(state), band, committed_below=3)
+    assert sorted(evicted) == [("right", 1), ("right", 2)]
+    right = sorted(p.name for p in (state / "right").iterdir() if p.name.startswith("__batch_id="))
+    assert right == ["__batch_id=0", "__batch_id=3"]
+    assert len(list((state / "left").glob("__batch_id=*"))) == 4
+    # consumed stats leave the manifest; the uncommitted batch keeps both
+    stats = json.loads((state / "_ts_stats.json").read_text())["batches"]
+    assert [sorted(stats[b]) for b in ("1", "2", "3")] == [["left"], ["left"], ["left", "right"]]
+    # every left row pairs with batch 0's right row of its key
+    assert read_join_view(spark, str(state)).count() == 40
+    assert evict_join_mv_state(str(state), band, committed_below=3) == []
 
 
 def test_quality_model_scores_after_a_temporal_fold(spark, steady_temporal_fold):

@@ -7,96 +7,23 @@ family from SURVEY.md §2; ``oracle_sql()`` gives the DuckDB-equivalent
 ANSI SQL for each. Column names/aliases match pairwise; money sums use
 integer-cents fixed-point (etl_spark_spark.functions.money) so values
 are bit-identical regardless of execution order/parallelism.
+
+Each family module in ``entry_queries/`` is the one place its queries
+are stated. To add a query, define ``q_<name>(spark, sf_dir)`` in a
+family module and add one ``"<name>": <sql>`` entry to that module's
+``ORACLES``; both registries below are derived from the modules.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
+from types import ModuleType
+from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame, SparkSession
 
-from etl_spark_spark.functions.money import money_sum, money_sum_sql
-from etl_spark_spark.operators.stats import checked_measure_sql
-from etl_spark_spark.functions.normalize import (
-    _ACCENTS_DST,
-    _ACCENTS_SRC,
-    cnpj_normalize,
-    etiqueta,
-    strip_normalize,
-    upper_trim,
-)
-from etl_spark_spark.functions.text import (
-    LANG_PROFILES,
-    bpe_token_count,
-    bpe_token_count_sql,
-    dup_fraction,
-    fingerprint,
-    lang_id,
-    lang_scores,
-    punct_count,
-    quality_score,
-    stopword_hits,
-    token_count,
-    tokens,
-    word_shingles,
-)
-from etl_spark_spark.functions.scrub import scrub_pii, scrub_pii_sql_stages
-from etl_spark_spark.operators.dedup import dedup_any, dedup_latest
-from etl_spark_spark.operators.multimodal import (
-    attach_media,
-    extract_features,
-    sample_frames,
-)
-from etl_spark_spark.operators.neardup import (
-    contamination_scores,
-    exact_dedup,
-    near_dup_minhash,
-    ngram_jaccard_pairs,
-    prefix_filtered_jaccard_pairs,
-    shingle_set,
-    simhash,
-    simhash_near_dup,
-)
-from etl_spark_spark.operators.fuzzy import fuzzy_join
-from etl_spark_spark.operators.quality import (
-    expectation_metrics,
-    fk_violation_count,
-    functional_dependencies,
-)
-from etl_spark_spark.operators.sampling import (
-    hash_bucket,
-    hash_split,
-    temperature_sample,
-    stratified_hash_sample,
-)
-from etl_spark_spark.operators.similarity import (
-    cosine_near_dup_pairs,
-    cosine_topk,
-    cosine_topk_ivf,
-    cosine_topk_ivf_pq,
-    cosine_topk_lsh,
-)
-from etl_spark_spark.operators.reconcile import reconcile_full_outer
-from etl_spark_spark.operators.graph import connected_components
-from etl_spark_spark.operators.packing import pack_by_token_budget
-from etl_spark_spark.operators.windows import partial_topk, top_k_per_group
-from etl_spark_spark.functions.vectors import norm
-from etl_spark_spark.pipelines.ressarcimento import allocation_pipeline
+from entry_queries import embedding, events, maintenance, relational, text
 from etl_spark_spark.pipelines.superdesconto import best_sale_pipeline
-from etl_spark_spark.sources import read_events, table, year_range_filter
-from etl_spark_spark.streaming import sessionize_batch, sliding_agg, tumbling_agg
-
-# Query families (round-9 split): each module holds its q_ functions
-# and oracle SQL verbatim; this module composes the registry.
-from entry_queries._shared import *  # noqa: F401,F403,E402
-from entry_queries.relational import *  # noqa: F401,F403,E402
-from entry_queries.events import *  # noqa: F401,F403,E402
-from entry_queries.text import *  # noqa: F401,F403,E402
-from entry_queries.embedding import *  # noqa: F401,F403,E402
-from entry_queries.maintenance import *  # noqa: F401,F403,E402
-
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -108,620 +35,40 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 
+# Registry order: family by family, definition order within a family.
+_FAMILIES = (relational, events, text, embedding, maintenance)
+
+
+def _merge(entries: Callable[[ModuleType], Iterable[tuple[str, Any]]]) -> dict:
+    """Merge the ``(name, value)`` pairs of ``entries(family)`` over the
+    families, refusing a query name that two families define."""
+    merged: dict[str, Any] = {}
+    home: dict[str, str] = {}
+    for family in _FAMILIES:
+        for name, value in entries(family):
+            if name in home:
+                raise ValueError(
+                    f"query {name!r} is defined in both {home[name]} "
+                    f"and {family.__name__}"
+                )
+            home[name] = family.__name__
+            merged[name] = value
+    return merged
+
+
+def _query_fns(family: ModuleType) -> Iterable[tuple[str, Callable]]:
+    """Every ``q_<name>`` function the family defines, as ``(name, fn)``."""
+    for attr, fn in vars(family).items():
+        if attr.startswith("q_") and getattr(fn, "__module__", None) == family.__name__:
+            yield attr[2:], fn
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "superdesconto": q_superdesconto,
-        "allocation": q_allocation,
-        "pricing_summary": q_pricing_summary,
-        "dedup_latest_part": q_dedup_latest_part,
-        "top_orders_per_customer": q_top_orders_per_customer,
-        "customers_without_orders": q_customers_without_orders,
-        "orders_enriched": q_orders_enriched,
-        "normalize_keys": q_normalize_keys,
-        "monthly_orders_1995": q_monthly_orders_1995,
-        "events_by_type": q_events_by_type,
-        "doc_text_stats": q_doc_text_stats,
-        "doc_lang_id": q_doc_lang_id,
-        "doc_exact_dedup": q_doc_exact_dedup,
-        "neardup_minhash": q_neardup_minhash,
-        "neardup_bucket_cap": q_neardup_bucket_cap,
-        "neardup_ngram_jaccard": q_neardup_ngram_jaccard,
-        "neardup_prefix_jaccard": q_neardup_prefix_jaccard,
-        "doc_simhash": q_doc_simhash,
-        "emb_cosine_topk": q_emb_cosine_topk,
-        "emb_cosine_topk_lsh": q_emb_cosine_topk_lsh,
-        "emb_cosine_topk_ivf": q_emb_cosine_topk_ivf,
-        "emb_cosine_topk_ivfpq": q_emb_cosine_topk_ivfpq,
-        "emb_cosine_topk_ivfpq_int8": q_emb_cosine_topk_ivfpq_int8,
-        "events_tumbling": q_events_tumbling,
-        "events_time_rollup": q_events_time_rollup,
-        "events_sessionize": q_events_sessionize,
-        "multimodal_features": q_multimodal_features,
-        "custkeys_both_years": q_custkeys_both_years,
-        "custkeys_only_1995": q_custkeys_only_1995,
-        "rollup_losses": q_rollup_losses,
-        "supplier_share_expr": q_supplier_share_expr,
-        "events_props_map": q_events_props_map,
-        "events_sliding": q_events_sliding,
-        "emb_near_dup": q_emb_near_dup,
-        "semantic_dedup": q_semantic_dedup,
-        "emb_near_dup_lsh": q_emb_near_dup_lsh,
-        "global_top_orders": q_global_top_orders,
-        "doc_fingerprints": q_doc_fingerprints,
-        "shipping_priority": q_shipping_priority,
-        "local_supplier_volume": q_local_supplier_volume,
-        "dedup_any_count": q_dedup_any_count,
-        "nation_reconcile": q_nation_reconcile,
-        "sql_frontend": q_sql_frontend,
-        "user_value_trend": q_user_value_trend,
-        "orders_profile": q_orders_profile,
-        "above_avg_orders": q_above_avg_orders,
-        "emb_stats": q_emb_stats,
-        "price_quantiles": q_price_quantiles,
-        "purchase_last_click": q_purchase_last_click,
-        "neardup_simhash": q_neardup_simhash,
-        "neardup_simhash_exact": q_neardup_simhash_exact,
-        "sketch_stats": q_sketch_stats,
-        "error_context_views": q_error_context_views,
-        "multimodal_frames": q_multimodal_frames,
-        "doc_split_counts": q_doc_split_counts,
-        "doc_stratified_sample": q_doc_stratified_sample,
-        "doc_group_split": q_doc_group_split,
-        "doc_repetition": q_doc_repetition,
-        "doc_pii_scrub": q_doc_pii_scrub,
-        "doc_k_anonymity": q_doc_k_anonymity,
-        "data_quality": q_data_quality,
-        "source_mix_sample": q_source_mix_sample,
-        "doc_shuffle_order": q_doc_shuffle_order,
-        "fuzzy_code_match": q_fuzzy_code_match,
-        "returns_grouping_sets": q_returns_grouping_sets,
-        "market_share": q_market_share,
-        "doc_source_cap": q_doc_source_cap,
-        "vocab_topk": q_vocab_topk,
-        "doc_decontaminate": q_doc_decontaminate,
-        "doc_pack": q_doc_pack,
-        "doc_top_terms": q_doc_top_terms,
-        "customer_spend_deciles": q_customer_spend_deciles,
-        "neardup_clusters": q_neardup_clusters,
-        "small_qty_revenue": q_small_qty_revenue,
-        "emb_label_centroids": q_emb_label_centroids,
-        "price_histogram": q_price_histogram,
-        "event_funnel": q_event_funnel,
-        "user_retention_cohorts": q_user_retention_cohorts,
-        "doc_quality_model": q_doc_quality_model,
-        "doc_incremental_dedup": q_doc_incremental_dedup,
-        "doc_chunks": q_doc_chunks,
-        "doc_weighted_sample": q_doc_weighted_sample,
-        "doc_curation": q_doc_curation,
-        "doc_curation_capped": q_doc_curation_capped,
-        "doc_training_prep": q_doc_training_prep,
-        "customer_order_gaps": q_customer_order_gaps,
-        "customer_year_arrays": q_customer_year_arrays,
-        "order_priority_counts": q_order_priority_counts,
-        "min_cost_supplier": q_min_cost_supplier,
-        "volume_shipping": q_volume_shipping,
-        "product_profit": q_product_profit,
-        "returned_top_customers": q_returned_top_customers,
-        "important_parts": q_important_parts,
-        "custdist": q_custdist,
-        "promo_revenue": q_promo_revenue,
-        "top_supplier": q_top_supplier,
-        "large_orders": q_large_orders,
-        "part_promotion_suppliers": q_part_promotion_suppliers,
-        "orders_pit_dimension": q_orders_pit_dimension,
-        "doc_length_winsor": q_doc_length_winsor,
-        "merge_upsert": q_merge_upsert,
-        "cast_decimal_policy": q_cast_decimal_policy,
-        "production_daily_loop": q_production_daily_loop,
-        "doc_dsir_weights": q_doc_dsir_weights,
-        "emb_covariance": q_emb_covariance,
-        "emb_covariance_blocked": q_emb_covariance_blocked,
-        "doc_epoch_shuffle": q_doc_epoch_shuffle,
-        "doc_training_mix": q_doc_training_mix,
-        "text_formats_roundtrip": q_text_formats_roundtrip,
-        "incremental_join_mv": q_incremental_join_mv,
-        "join_mv_temporal": q_join_mv_temporal,
-        "compacted_snapshot": q_compacted_snapshot,
-        "join_mv_retractions": q_join_mv_retractions,
-        "ks_drift_by_type": q_ks_drift_by_type,
-        "ks_drift_by_type_scalable": q_ks_drift_by_type_scalable,
-        "indexed_zorder_scan": q_indexed_zorder_scan,
-        "emb_hard_negatives": q_emb_hard_negatives,
-        "emb_label_outliers": q_emb_label_outliers,
-        "doc_bigram_surprisal": q_doc_bigram_surprisal,
-        "doc_kn_perplexity": q_doc_kn_perplexity,
-        "bloom_snapshot_dedup": q_bloom_snapshot_dedup,
-        "cms_term_counts": q_cms_term_counts,
-        "emb_jl_projection": q_emb_jl_projection,
-        "doc_ccnet_buckets": q_doc_ccnet_buckets,
-        "doc_decontaminate_bloom": q_doc_decontaminate_bloom,
-        "hll_distinct_tokens": q_hll_distinct_tokens,
-        "part_kcore": q_part_kcore,
-        "hll_stream_fold": q_hll_stream_fold,
-        "hll_source_overlap": q_hll_source_overlap,
-        "psi_drift_ab": q_psi_drift_ab,
-        "part_share_alloc": q_part_share_alloc,
-        "doc_tfidf_similar": q_doc_tfidf_similar,
-        "tfidf_block_recall": q_tfidf_block_recall,
-        "tfidf_blocking_vacuity": q_tfidf_blocking_vacuity,
-        "tfidf_blocking_frac": q_tfidf_blocking_frac,
-        "doc_tfidf_similar_guarded": q_doc_tfidf_similar_guarded,
-        "nation_revenue_trend": q_nation_revenue_trend,
-        "supplier_qty_ewma": q_supplier_qty_ewma,
-        "supplier_qty_ewma_scalable": q_supplier_qty_ewma_scalable,
-        "nation_theil_sen_trend": q_nation_theil_sen_trend,
-        "nation_theil_sen_blocked": q_nation_theil_sen_blocked,
-        "hybrid_search_rrf": q_hybrid_search_rrf,
-        "schema_evolution_scan": q_schema_evolution_scan,
-        "did_purchase_uplift": q_did_purchase_uplift,
-        "cluster_canonicalize": q_cluster_canonicalize,
-        "events_forward_fill": q_events_forward_fill,
-        "split_leakage": q_split_leakage,
-        "trade_pagerank": q_trade_pagerank,
-        "supplier_co_purchase": q_supplier_co_purchase,
-        "supplier_triangles": q_supplier_triangles,
-        "event_transitions": q_event_transitions,
-        "user_activity_streaks": q_user_activity_streaks,
-        "ab_test_welch": q_ab_test_welch,
-        "lang_id_eval": q_lang_id_eval,
-        "multi_touch_attribution": q_multi_touch_attribution,
-        "pareto_parts": q_pareto_parts,
-        "inverted_index": q_inverted_index,
-        "benford_totalprice": q_benford_totalprice,
-        "exact_price_quartiles": q_exact_price_quartiles,
-        "price_quartile_sketch_eval": q_price_quartile_sketch_eval,
-        "quantile_sketch_stream_fold": q_quantile_sketch_stream_fold,
-        "price_quartiles_scalable": q_price_quartiles_scalable,
-        "ks_test_ab": q_ks_test_ab,
-        "events_props_variant": q_events_props_variant,
-        "pyds_source_stats": q_pyds_source_stats,
-        "time_weighted_value": q_time_weighted_value,
-        "monthly_revenue_mom": q_monthly_revenue_mom,
-        "abc_classification": q_abc_classification,
-        "conversion_latency": q_conversion_latency,
-        "part_cooccurrence_cosine": q_part_cooccurrence_cosine,
-        "chi2_type_variant": q_chi2_type_variant,
-        "customer_spend_gini": q_customer_spend_gini,
-        "concurrent_sessions": q_concurrent_sessions,
-        "session_overlap_counts": q_session_overlap_counts,
-        "global_spend_rank": q_global_spend_rank,
-        "replica_drift_audit": q_replica_drift_audit,
-        "customer_order_docs": q_customer_order_docs,
-        "doc_budget_mix": q_doc_budget_mix,
-        "forecast_revenue": q_forecast_revenue,
-        "revenue_cube": q_revenue_cube,
-        "priority_return_pivot": q_priority_return_pivot,
-        "corr_exact": q_corr_exact,
-        "disjunctive_revenue": q_disjunctive_revenue,
-        "exclusive_supplier_orders": q_exclusive_supplier_orders,
-        "part_supplier_counts": q_part_supplier_counts,
-        "rich_idle_customers": q_rich_idle_customers,
-        "user_rolling_value": q_user_rolling_value,
-        "session_paths": q_session_paths,
-        "returns_unpivot": q_returns_unpivot,
-        "sketch_rollup": q_sketch_rollup,
-        "doc_bigram_novelty": q_doc_bigram_novelty,
-        "scd2_customer_history": q_scd2_customer_history,
-        "doc_group_sample": q_doc_group_sample,
-        "daily_dense_orders": q_daily_dense_orders,
-        "price_outliers": q_price_outliers,
-        "price_outliers_scalable": q_price_outliers_scalable,
-        "bm25_search": q_bm25_search,
-        "doc_surprisal": q_doc_surprisal,
-        "duplicate_spans": q_duplicate_spans,
-        "doc_span_scrub": q_doc_span_scrub,
-        "doc_span_scrub_global": q_doc_span_scrub_global,
-        "mann_whitney_ab": q_mann_whitney_ab,
-        "supplier_reach_bfs": q_supplier_reach_bfs,
-        "column_entropy": q_column_entropy,
-        "priority_lines_by_status": q_priority_lines_by_status,
-        "waiting_suppliers": q_waiting_suppliers,
-        "mv_routed_revenue": q_mv_routed_revenue,
-        "cumulative_new_customers": q_cumulative_new_customers,
-        "order_value_position": q_order_value_position,
-        "media_phash_pairs": q_media_phash_pairs,
-        "phrase_search": q_phrase_search,
-        "weighted_price_quartiles": q_weighted_price_quartiles,
-        "weighted_price_quartiles_scalable": q_weighted_price_quartiles_scalable,
-        "dau_mau_stickiness": q_dau_mau_stickiness,
-        "revenue_autocorr": q_revenue_autocorr,
-        "knn_label_accuracy": q_knn_label_accuracy,
-        "revenue_changepoint": q_revenue_changepoint,
-        "bpe_merges": q_bpe_merges,
-        "bpe_token_counts": q_bpe_token_counts,
-        "doc_containment": q_doc_containment,
-        "basket_rules": q_basket_rules,
-        "term_pmi": q_term_pmi,
-        "neardup_eval": q_neardup_eval,
-        "neardup_recall_sampled": q_neardup_recall_sampled,
-        "stock_balance_floor": q_stock_balance_floor,
-        "purchase_survival_km": q_purchase_survival_km,
-        "ab_logrank_test": q_ab_logrank_test,
-        "revenue_bootstrap_ci": q_revenue_bootstrap_ci,
-        "trimmed_mean_price": q_trimmed_mean_price,
-        "doc_gopher_filter": q_doc_gopher_filter,
-        "fd_audit": q_fd_audit,
-        "doc_length_histogram": q_doc_length_histogram,
-        "source_overlap": q_source_overlap,
-    }
-
-
-
-_KS_DRIFT_SHARED_SQL = f"""
-WITH d AS (
-  SELECT event_type,
-         CASE WHEN substring(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8'
-              THEN 'A' ELSE 'B' END AS variant,
-         {checked_measure_sql('CAST(round(value * 100) AS BIGINT)', 'ks_drift_by_group', 'cents')} AS cents
-  FROM events WHERE value IS NOT NULL
-), dist AS (
-  SELECT event_type, cents,
-         count(*) FILTER (variant = 'A') AS ca,
-         count(*) FILTER (variant <> 'A') AS cb
-  FROM d GROUP BY 1, 2
-), cum AS (
-  SELECT event_type, cents,
-         sum(ca) OVER (PARTITION BY event_type ORDER BY cents
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS cuma,
-         sum(cb) OVER (PARTITION BY event_type ORDER BY cents
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS cumb,
-         sum(ca) OVER (PARTITION BY event_type) AS na,
-         sum(cb) OVER (PARTITION BY event_type) AS nb
-  FROM dist
-)
-SELECT event_type,
-       CAST(max(na) AS BIGINT) AS n_a,
-       CAST(max(nb) AS BIGINT) AS n_b,
-       max(abs(CAST(cuma AS DOUBLE) / CAST(na AS DOUBLE)
-               - CAST(cumb AS DOUBLE) / CAST(nb AS DOUBLE))) AS d_stat
-FROM cum GROUP BY 1
-HAVING max(na) > 0 AND max(nb) > 0
-"""
+    return _merge(_query_fns)
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "superdesconto": _SUPERDESCONTO_SQL,
-        "allocation": _ALLOCATION_SQL,
-        "pricing_summary": _PRICING_SUMMARY_SQL,
-        "dedup_latest_part": _DEDUP_LATEST_SQL,
-        "top_orders_per_customer": _TOP_ORDERS_SQL,
-        "customers_without_orders": _CUSTOMERS_WITHOUT_ORDERS_SQL,
-        "orders_enriched": _ORDERS_ENRICHED_SQL,
-        "normalize_keys": _NORMALIZE_KEYS_SQL,
-        "monthly_orders_1995": _MONTHLY_ORDERS_SQL,
-        "events_by_type": _EVENTS_BY_TYPE_SQL,
-        "doc_text_stats": _DOC_TEXT_STATS_SQL,
-        "doc_lang_id": _DOC_LANG_ID_SQL,
-        "doc_exact_dedup": _DOC_EXACT_DEDUP_SQL,
-        "neardup_minhash": _NEARDUP_MINHASH_SQL,
-        "neardup_bucket_cap": _NEARDUP_BUCKET_CAP_SQL,
-        "doc_incremental_dedup": _DOC_INCREMENTAL_DEDUP_SQL,
-        "doc_chunks": _DOC_CHUNKS_SQL,
-        "small_qty_revenue": _SMALL_QTY_REVENUE_SQL,
-        "emb_label_centroids": _EMB_LABEL_CENTROIDS_SQL,
-        "price_histogram": _PRICE_HISTOGRAM_SQL,
-        "event_funnel": _EVENT_FUNNEL_SQL,
-        "user_retention_cohorts": _USER_RETENTION_COHORTS_SQL,
-        "doc_weighted_sample": _DOC_WEIGHTED_SAMPLE_SQL,
-        "neardup_ngram_jaccard": _NEARDUP_NGRAM_SQL,
-        "neardup_prefix_jaccard": _NEARDUP_PREFIX_SQL,
-        "doc_simhash": _DOC_SIMHASH_SQL,
-        "emb_cosine_topk": _EMB_COSINE_SQL,
-        "events_tumbling": _EVENTS_TUMBLING_SQL,
-        "events_time_rollup": _EVENTS_TIME_ROLLUP_SQL,
-        "events_sessionize": _EVENTS_SESSIONIZE_SQL,
-        "custkeys_both_years": _CUSTKEYS_BOTH_SQL,
-        "custkeys_only_1995": _CUSTKEYS_ONLY_1995_SQL,
-        "rollup_losses": _ROLLUP_LOSSES_SQL,
-        "supplier_share_expr": _SUPPLIER_SHARE_EXPR_SQL,
-        "events_props_map": _EVENTS_PROPS_MAP_SQL,
-        "events_sliding": _EVENTS_SLIDING_SQL,
-        "emb_near_dup": _EMB_NEAR_DUP_SQL,
-        "semantic_dedup": _SEMANTIC_DEDUP_SQL,
-        "global_top_orders": _GLOBAL_TOP_ORDERS_SQL,
-        "doc_fingerprints": _DOC_FINGERPRINTS_SQL,
-        "shipping_priority": _SHIPPING_PRIORITY_SQL,
-        "local_supplier_volume": _LOCAL_SUPPLIER_SQL,
-        "dedup_any_count": _DEDUP_ANY_COUNT_SQL,
-        "nation_reconcile": _NATION_RECONCILE_SQL,
-        "sql_frontend": _SQL_FRONTEND_SQL,
-        "orders_profile": _ORDERS_PROFILE_SQL,
-        "above_avg_orders": _ABOVE_AVG_ORDERS_SQL,
-        "emb_stats": _EMB_STATS_SQL,
-        "price_quantiles": _PRICE_QUANTILES_SQL,
-        "purchase_last_click": _PURCHASE_LAST_CLICK_SQL,
-        "neardup_simhash": _NEARDUP_SIMHASH_SQL,
-        "neardup_simhash_exact": _NEARDUP_SIMHASH_EXACT_SQL,
-        "error_context_views": _ERROR_CONTEXT_SQL,
-        "multimodal_features": _MULTIMODAL_FEATURES_SQL,
-        "user_value_trend": _USER_VALUE_TREND_SQL,
-        "multimodal_frames": _MULTIMODAL_FRAMES_SQL,
-        "doc_split_counts": _DOC_SPLIT_COUNTS_SQL,
-        "doc_stratified_sample": _DOC_STRATIFIED_SAMPLE_SQL,
-        "doc_group_split": _DOC_GROUP_SPLIT_SQL,
-        "doc_repetition": _DOC_REPETITION_SQL,
-        "doc_pii_scrub": _DOC_PII_SCRUB_SQL,
-        "doc_k_anonymity": _DOC_K_ANONYMITY_SQL,
-        "data_quality": _DATA_QUALITY_SQL,
-        "source_mix_sample": _SOURCE_MIX_SAMPLE_SQL,
-        "doc_shuffle_order": _DOC_SHUFFLE_ORDER_SQL,
-        "fuzzy_code_match": _FUZZY_CODE_MATCH_SQL,
-        "returns_grouping_sets": _RETURNS_GROUPING_SETS_SQL,
-        "market_share": _MARKET_SHARE_SQL,
-        "doc_source_cap": _DOC_SOURCE_CAP_SQL,
-        "vocab_topk": _VOCAB_TOPK_SQL,
-        "doc_decontaminate": _DOC_DECONTAMINATE_SQL,
-        "doc_pack": _DOC_PACK_SQL,
-        "doc_top_terms": _DOC_TOP_TERMS_SQL,
-        "customer_spend_deciles": _CUSTOMER_SPEND_DECILES_SQL,
-        "neardup_clusters": _NEARDUP_CLUSTERS_SQL,
-        "doc_curation": _DOC_CURATION_SQL,
-        "doc_curation_capped": _DOC_CURATION_CAPPED_SQL,
-        "doc_training_prep": _DOC_TRAINING_PREP_SQL,
-        "customer_order_gaps": _CUSTOMER_ORDER_GAPS_SQL,
-        "customer_year_arrays": _CUSTOMER_YEAR_ARRAYS_SQL,
-        "order_priority_counts": _ORDER_PRIORITY_COUNTS_SQL,
-        "min_cost_supplier": _MIN_COST_SUPPLIER_SQL,
-        "volume_shipping": _VOLUME_SHIPPING_SQL,
-        "product_profit": _PRODUCT_PROFIT_SQL,
-        "returned_top_customers": _RETURNED_TOP_CUSTOMERS_SQL,
-        "important_parts": _IMPORTANT_PARTS_SQL,
-        "custdist": _CUSTDIST_SQL,
-        "promo_revenue": _PROMO_REVENUE_SQL,
-        "top_supplier": _TOP_SUPPLIER_SQL,
-        "large_orders": _LARGE_ORDERS_SQL,
-        "part_promotion_suppliers": _PART_PROMOTION_SUPPLIERS_SQL,
-        "orders_pit_dimension": _ORDERS_PIT_DIMENSION_SQL,
-        "doc_length_winsor": _DOC_LENGTH_WINSOR_SQL,
-        "merge_upsert": _MERGE_UPSERT_SQL,
-        "cast_decimal_policy": _CAST_DECIMAL_POLICY_SQL,
-        # compaction is lossless by contract: same MERGE expansion
-        "compacted_snapshot": _MERGE_UPSERT_SQL,
-        "production_daily_loop": _PRODUCTION_DAILY_LOOP_SQL,
-        "indexed_zorder_scan": _INDEXED_ZORDER_SCAN_SQL,
-        "events_forward_fill": _EVENTS_FORWARD_FILL_SQL,
-        "split_leakage": _SPLIT_LEAKAGE_SQL,
-        "trade_pagerank": _TRADE_PAGERANK_SQL,
-        "supplier_co_purchase": _SUPPLIER_CO_PURCHASE_SQL,
-        "supplier_triangles": _SUPPLIER_TRIANGLES_SQL,
-        "event_transitions": _EVENT_TRANSITIONS_SQL,
-        "user_activity_streaks": _USER_ACTIVITY_STREAKS_SQL,
-        "ab_test_welch": _AB_TEST_WELCH_SQL,
-        "lang_id_eval": _LANG_ID_EVAL_SQL,
-        "multi_touch_attribution": _MULTI_TOUCH_ATTRIBUTION_SQL,
-        "pareto_parts": _PARETO_PARTS_SQL,
-        "inverted_index": _INVERTED_INDEX_SQL,
-        "benford_totalprice": _BENFORD_TOTALPRICE_SQL,
-        "exact_price_quartiles": _EXACT_PRICE_QUARTILES_SQL,
-        "price_quartile_sketch_eval": _price_quartile_sketch_eval_oracle(),
-        # oracle is the ONE-SHOT sketch SQL: hash match proves the
-        # per-batch cnt-fold loses nothing (the hll_stream_fold law)
-        "quantile_sketch_stream_fold": _quantile_sketch_fold_oracle(),
-        # the decomposed form is bit-identical by construction, so it
-        # shares the plain-window oracle VERBATIM — the strongest
-        # cross-form equivalence evidence the harness can record
-        "price_quartiles_scalable": _EXACT_PRICE_QUARTILES_SQL,
-        "ks_test_ab": _KS_TEST_AB_SQL,
-        "events_props_variant": _EVENTS_PROPS_VARIANT_SQL,
-        "pyds_source_stats": _PYDS_SOURCE_STATS_SQL,
-        "time_weighted_value": _TIME_WEIGHTED_VALUE_SQL,
-        "monthly_revenue_mom": _MONTHLY_REVENUE_MOM_SQL,
-        "abc_classification": _ABC_CLASSIFICATION_SQL,
-        "conversion_latency": _CONVERSION_LATENCY_SQL,
-        "part_cooccurrence_cosine": _PART_COOCCURRENCE_COSINE_SQL,
-        "chi2_type_variant": _CHI2_TYPE_VARIANT_SQL,
-        "customer_spend_gini": _CUSTOMER_SPEND_GINI_SQL,
-        "concurrent_sessions": _CONCURRENT_SESSIONS_SQL,
-        "session_overlap_counts": _SESSION_OVERLAP_COUNTS_SQL,
-        "global_spend_rank": _GLOBAL_SPEND_RANK_SQL,
-        "replica_drift_audit": _REPLICA_DRIFT_AUDIT_SQL,
-        "customer_order_docs": _CUSTOMER_ORDER_DOCS_SQL,
-        "doc_budget_mix": _DOC_BUDGET_MIX_SQL,
-        "forecast_revenue": _FORECAST_REVENUE_SQL,
-        "revenue_cube": _REVENUE_CUBE_SQL,
-        "priority_return_pivot": _PRIORITY_RETURN_PIVOT_SQL,
-        "corr_exact": _CORR_EXACT_SQL,
-        # Approximate/sketch/model queries emit derived checks (exact
-        # counts + invariant booleans) so even they get hard verdicts.
-        "emb_cosine_topk_lsh": _ANN_TOPK_CHECK_SQL,
-        "emb_cosine_topk_ivf": _ANN_TOPK_CHECK_SQL,
-        "emb_cosine_topk_ivfpq": _ANN_TOPK_CHECK_SQL,
-        "emb_cosine_topk_ivfpq_int8": _ANN_TOPK_CHECK_SQL,
-        "emb_near_dup_lsh": _EMB_NEAR_DUP_LSH_SQL,
-        "sketch_stats": _SKETCH_STATS_SQL,
-        "doc_quality_model": _DOC_QUALITY_MODEL_SQL,
-        "disjunctive_revenue": _DISJUNCTIVE_REVENUE_SQL,
-        "exclusive_supplier_orders": _EXCLUSIVE_SUPPLIER_ORDERS_SQL,
-        "part_supplier_counts": _PART_SUPPLIER_COUNTS_SQL,
-        "rich_idle_customers": _RICH_IDLE_CUSTOMERS_SQL,
-        "user_rolling_value": _USER_ROLLING_VALUE_SQL,
-        "session_paths": _SESSION_PATHS_SQL,
-        "returns_unpivot": _RETURNS_UNPIVOT_SQL,
-        "sketch_rollup": _SKETCH_ROLLUP_SQL,
-        "doc_bigram_novelty": _DOC_BIGRAM_NOVELTY_SQL,
-        "scd2_customer_history": _SCD2_CUSTOMER_HISTORY_SQL,
-        "doc_group_sample": _DOC_GROUP_SAMPLE_SQL,
-        "daily_dense_orders": _DAILY_DENSE_ORDERS_SQL,
-        "price_outliers": _PRICE_OUTLIERS_SQL,
-        "price_outliers_scalable": _PRICE_OUTLIERS_SQL,
-        "bm25_search": _bm25_oracle(),
-        "doc_surprisal": _surprisal_oracle(),
-        "doc_bigram_surprisal": _bigram_surprisal_oracle(),
-        "doc_kn_perplexity": _kn_perplexity_oracle(),
-        "bloom_snapshot_dedup": _bloom_snapshot_oracle(),
-        "cms_term_counts": _cms_term_counts_oracle(),
-        "emb_jl_projection": _jl_projection_oracle(),
-        "doc_ccnet_buckets": _ccnet_buckets_oracle(),
-        "doc_decontaminate_bloom": _DOC_DECONTAMINATE_SQL,
-        "hll_distinct_tokens": _hll_distinct_oracle(),
-        "part_kcore": _part_kcore_oracle(),
-        "hll_stream_fold": _hll_distinct_oracle(),
-        "hll_source_overlap": _hll_source_overlap_oracle(),
-        "psi_drift_ab": _psi_drift_oracle(),
-        "part_share_alloc": _PART_SHARE_ALLOC_SQL,
-        "doc_tfidf_similar": _doc_tfidf_similar_oracle(),
-        "tfidf_block_recall": _tfidf_block_recall_oracle(),
-        "tfidf_blocking_vacuity": _tfidf_blocking_vacuity_oracle(),
-        "tfidf_blocking_frac": _tfidf_blocking_frac_oracle(),
-        "doc_tfidf_similar_guarded": _doc_tfidf_similar_guarded_oracle(),
-        "nation_revenue_trend": _nation_revenue_trend_oracle(),
-        "supplier_qty_ewma": _supplier_qty_ewma_oracle(),
-        "supplier_qty_ewma_scalable": _supplier_qty_ewma_oracle(),
-        "nation_theil_sen_trend": _nation_theil_sen_oracle(),
-        # identical pair set by construction -> shares the oracle verbatim
-        "nation_theil_sen_blocked": _nation_theil_sen_oracle(),
-        "hybrid_search_rrf": _hybrid_search_rrf_oracle(),
-        "schema_evolution_scan": _SCHEMA_EVOLUTION_SQL,
-        "did_purchase_uplift": _DID_SQL,
-        "doc_dsir_weights": _dsir_weights_oracle(),
-        "emb_covariance": _emb_covariance_oracle(),
-        "emb_covariance_blocked": _emb_covariance_oracle(),
-        "doc_epoch_shuffle": """
-SELECT CAST(row_number() OVER (
-           ORDER BY md5('0#' || CAST(doc_id AS VARCHAR)), doc_id
-       ) AS BIGINT) AS position,
-       doc_id, source
-FROM documents
-""",
-        "ks_drift_by_type_scalable": _KS_DRIFT_SHARED_SQL,
-        "ks_drift_by_type": _KS_DRIFT_SHARED_SQL,
-        "join_mv_retractions": """
-WITH corrected AS (
-  SELECT o_orderkey AS orderkey, o_custkey,
-         CASE WHEN o_custkey % 5 = 0 THEN 'X' ELSE o_orderstatus END
-           AS o_orderstatus
-  FROM orders
-  WHERE o_orderdate >= TIMESTAMP '1995-01-01'
-    AND o_orderdate <  TIMESTAMP '1995-03-01'
-)
-SELECT l.l_orderkey AS orderkey, l.l_linenumber, c.o_custkey,
-       c.o_orderstatus,
-       CAST(round(l.l_extendedprice * 100) AS BIGINT) AS price_cents,
-       CAST(count(*) AS BIGINT) AS mult
-FROM lineitem l JOIN corrected c ON l.l_orderkey = c.orderkey
-GROUP BY 1, 2, 3, 4, 5
-""",
-        "incremental_join_mv": """
-SELECT l_orderkey AS orderkey, l_linenumber, l_suppkey,
-       o_custkey, o_orderstatus,
-       CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)
-         AS revenue_cents
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-WHERE o_orderdate >= TIMESTAMP '1995-01-01'
-  AND o_orderdate <  TIMESTAMP '1995-03-01'
-""",
-        "join_mv_temporal": """
-WITH v AS (
-  SELECT user_id, event_id AS view_id, ts AS view_ts
-  FROM events WHERE event_type = 'view'
-),
-p AS (
-  SELECT user_id, event_id AS purchase_id, ts AS purchase_ts,
-         value AS purchase_value
-  FROM events WHERE event_type = 'purchase'
-)
-SELECT v.user_id, view_id, purchase_id,
-       strftime(view_ts, '%Y-%m-%d %H:%M:%S') AS view_time,
-       strftime(purchase_ts, '%Y-%m-%d %H:%M:%S') AS purchase_time,
-       CAST(round(purchase_value * 100) AS BIGINT) AS purchase_cents
-FROM v JOIN p ON p.user_id = v.user_id
-WHERE abs(epoch_us(view_ts) // 1000000
-          - epoch_us(purchase_ts) // 1000000) <= 3600
-""",
-        "text_formats_roundtrip": """
-SELECT c_mktsegment, o_orderstatus,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0 AS revenue
-FROM orders JOIN customer ON o_custkey = c_custkey
-WHERE o_orderdate >= TIMESTAMP '1995-01-01'
-GROUP BY 1, 2
-""",
-        "doc_training_mix": """
-WITH c AS (
-  SELECT source, lang, source || '|' || lang AS stratum,
-         count(*) AS n_docs
-  FROM documents GROUP BY source, lang
-),
-tot AS (SELECT sum(n_docs) AS w FROM c),
-fl AS (
-  SELECT source, lang, stratum, n_docs,
-         (300 * n_docs) // w AS flr,
-         (300 * n_docs) % w AS rem
-  FROM c, tot
-),
-lo AS (SELECT 300 - sum(flr) AS leftover FROM fl),
-alloc AS (
-  SELECT source, lang,
-         flr + CASE WHEN row_number()
-                        OVER (ORDER BY rem DESC, stratum)
-                    <= (SELECT leftover FROM lo)
-               THEN 1 ELSE 0 END AS alloc
-  FROM fl
-),
-ranked AS (
-  SELECT d.doc_id, d.source, d.lang,
-         row_number() OVER (
-             PARTITION BY d.source, d.lang
-             ORDER BY md5(CAST(d.doc_id AS VARCHAR)), d.doc_id
-         ) AS rn
-  FROM documents d
-),
-picked AS (
-  SELECT r.doc_id, r.source, r.lang
-  FROM ranked r JOIN alloc a USING (source, lang)
-  WHERE r.rn <= a.alloc
-)
-SELECT CAST(row_number() OVER (
-           ORDER BY md5('0#' || CAST(doc_id AS VARCHAR)), doc_id
-       ) AS BIGINT) AS position,
-       doc_id, source, lang
-FROM picked
-""",
-        "emb_hard_negatives": _EMB_HARD_NEGATIVES_SQL,
-        "emb_label_outliers": _EMB_LABEL_OUTLIERS_SQL,
-        "cluster_canonicalize": _CLUSTER_CANONICALIZE_SQL,
-        "duplicate_spans": _DUPLICATE_SPANS_SQL,
-        "doc_span_scrub": _DOC_SPAN_SCRUB_SQL,
-        "doc_span_scrub_global": _DOC_SPAN_SCRUB_GLOBAL_SQL,
-        "mann_whitney_ab": _MANN_WHITNEY_AB_SQL,
-        "supplier_reach_bfs": _SUPPLIER_REACH_BFS_SQL,
-        "column_entropy": _COLUMN_ENTROPY_SQL,
-        "priority_lines_by_status": _PRIORITY_LINES_BY_STATUS_SQL,
-        "waiting_suppliers": _WAITING_SUPPLIERS_SQL,
-        "mv_routed_revenue": _MV_ROUTED_REVENUE_SQL,
-        "cumulative_new_customers": _CUMULATIVE_NEW_CUSTOMERS_SQL,
-        "order_value_position": _ORDER_VALUE_POSITION_SQL,
-        "media_phash_pairs": _MEDIA_PHASH_PAIRS_SQL,
-        "phrase_search": _phrase_search_oracle(),
-        "weighted_price_quartiles": _WEIGHTED_PRICE_QUARTILES_SQL,
-        # bit-identical decomposed form -> shares the oracle verbatim
-        "weighted_price_quartiles_scalable": _WEIGHTED_PRICE_QUARTILES_SQL,
-        "dau_mau_stickiness": _DAU_MAU_STICKINESS_SQL,
-        "revenue_autocorr": _REVENUE_AUTOCORR_SQL,
-        "knn_label_accuracy": _KNN_LABEL_ACCURACY_SQL,
-        "revenue_changepoint": _REVENUE_CHANGEPOINT_SQL,
-        "bpe_merges": _bpe_merges_oracle(),
-        "bpe_token_counts": _bpe_token_counts_oracle(),
-        "doc_containment": _DOC_CONTAINMENT_SQL_TMPL.format(
-            shingles=_SHINGLES, mh=_MH_COLS, bands=_BANDS_SQL
-        ),
-        "basket_rules": _BASKET_RULES_SQL,
-        "term_pmi": _TERM_PMI_SQL,
-        "neardup_eval": _neardup_eval_tuned_sql(),
-        "neardup_recall_sampled": _neardup_recall_sampled_sql(),
-        "stock_balance_floor": _STOCK_BALANCE_FLOOR_SQL,
-        "purchase_survival_km": _PURCHASE_SURVIVAL_KM_SQL,
-        "ab_logrank_test": _AB_LOGRANK_TEST_SQL,
-        "revenue_bootstrap_ci": _revenue_bootstrap_ci_oracle(),
-        "trimmed_mean_price": _TRIMMED_MEAN_PRICE_SQL,
-        "doc_gopher_filter": _DOC_GOPHER_FILTER_SQL,
-        "fd_audit": _FD_AUDIT_SQL,
-        "doc_length_histogram": _DOC_LENGTH_HISTOGRAM_SQL,
-        "source_overlap": _SOURCE_OVERLAP_SQL,
-    }
+    return _merge(lambda family: family.ORACLES.items())
 
 
 # Fixed CORRECTNESS-panel anchors (ORACLE_NOTES.md "panel rotation",

@@ -1,84 +1,4 @@
-"""shared queries split out of __spark_entry__.py (round 9) — see that module's docstring for the driver contract. Mechanically moved, text verbatim."""
-
-from __future__ import annotations
-
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from etl_spark_spark.functions.money import money_sum, money_sum_sql
-from etl_spark_spark.functions.normalize import (
-    _ACCENTS_DST,
-    _ACCENTS_SRC,
-    cnpj_normalize,
-    etiqueta,
-    strip_normalize,
-    upper_trim,
-)
-from etl_spark_spark.functions.text import (
-    LANG_PROFILES,
-    bpe_token_count,
-    bpe_token_count_sql,
-    dup_fraction,
-    fingerprint,
-    lang_id,
-    lang_scores,
-    punct_count,
-    quality_score,
-    stopword_hits,
-    token_count,
-    tokens,
-    word_shingles,
-)
-from etl_spark_spark.functions.scrub import scrub_pii, scrub_pii_sql_stages
-from etl_spark_spark.operators.dedup import dedup_any, dedup_latest
-from etl_spark_spark.operators.multimodal import (
-    attach_media,
-    extract_features,
-    sample_frames,
-)
-from etl_spark_spark.operators.neardup import (
-    contamination_scores,
-    exact_dedup,
-    near_dup_minhash,
-    ngram_jaccard_pairs,
-    prefix_filtered_jaccard_pairs,
-    shingle_set,
-    simhash,
-    simhash_near_dup,
-)
-from etl_spark_spark.operators.fuzzy import fuzzy_join
-from etl_spark_spark.operators.quality import (
-    expectation_metrics,
-    fk_violation_count,
-    functional_dependencies,
-)
-from etl_spark_spark.operators.sampling import (
-    hash_bucket,
-    hash_split,
-    temperature_sample,
-    stratified_hash_sample,
-)
-from etl_spark_spark.operators.similarity import (
-    cosine_near_dup_pairs,
-    cosine_topk,
-    cosine_topk_ivf,
-    cosine_topk_ivf_pq,
-    cosine_topk_lsh,
-)
-from etl_spark_spark.operators.reconcile import reconcile_full_outer
-from etl_spark_spark.operators.graph import connected_components
-from etl_spark_spark.operators.packing import pack_by_token_budget
-from etl_spark_spark.operators.windows import partial_topk, top_k_per_group
-from etl_spark_spark.functions.vectors import norm
-from etl_spark_spark.pipelines.ressarcimento import allocation_pipeline
-from etl_spark_spark.pipelines.superdesconto import best_sale_pipeline
-from etl_spark_spark.sources import read_events, table, year_range_filter
-from etl_spark_spark.streaming import sessionize_batch, sliding_agg, tumbling_agg
-
-
+"""Oracle SQL fragments that more than one query family uses."""
 
 # --------------------------------------------------------------------------
 # oracles (DuckDB ANSI SQL)
@@ -105,10 +25,3 @@ _SIMHASH_BIT_SUMS = ", ".join(
 _SIMHASH_VALUE = " + ".join(
     f"(CASE WHEN b{j} > 0 THEN (1::BIGINT << {j}) ELSE 0 END)" for j in range(60)
 )
-
-
-__all__ = [
-    '_FEED_SQL',
-    '_SIMHASH_BIT_SUMS',
-    '_SIMHASH_VALUE',
-]

@@ -1,66 +1,18 @@
-"""embedding queries split out of __spark_entry__.py (round 9) — see that module's docstring for the driver contract. Mechanically moved, text verbatim."""
+"""The embedding query family. Each ``q_<name>`` function here is registry
+entry ``<name>``, and ``ORACLES`` at the end maps ``<name>`` to its DuckDB
+oracle SQL. See ``__spark_entry__.py`` for the driver contract."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from etl_spark_spark.functions.money import money_sum, money_sum_sql
-from etl_spark_spark.functions.normalize import (
-    _ACCENTS_DST,
-    _ACCENTS_SRC,
-    cnpj_normalize,
-    etiqueta,
-    strip_normalize,
-    upper_trim,
-)
-from etl_spark_spark.functions.text import (
-    LANG_PROFILES,
-    bpe_token_count,
-    bpe_token_count_sql,
-    dup_fraction,
-    fingerprint,
-    lang_id,
-    lang_scores,
-    punct_count,
-    quality_score,
-    stopword_hits,
-    token_count,
-    tokens,
-    word_shingles,
-)
-from etl_spark_spark.functions.scrub import scrub_pii, scrub_pii_sql_stages
-from etl_spark_spark.operators.dedup import dedup_any, dedup_latest
 from etl_spark_spark.operators.multimodal import (
     attach_media,
     extract_features,
     sample_frames,
 )
-from etl_spark_spark.operators.neardup import (
-    contamination_scores,
-    exact_dedup,
-    near_dup_minhash,
-    ngram_jaccard_pairs,
-    prefix_filtered_jaccard_pairs,
-    shingle_set,
-    simhash,
-    simhash_near_dup,
-)
-from etl_spark_spark.operators.fuzzy import fuzzy_join
-from etl_spark_spark.operators.quality import (
-    expectation_metrics,
-    fk_violation_count,
-    functional_dependencies,
-)
-from etl_spark_spark.operators.sampling import (
-    hash_bucket,
-    hash_split,
-    temperature_sample,
-    stratified_hash_sample,
-)
+from etl_spark_spark.operators.neardup import simhash_near_dup
 from etl_spark_spark.operators.similarity import (
     cosine_near_dup_pairs,
     cosine_topk,
@@ -68,18 +20,10 @@ from etl_spark_spark.operators.similarity import (
     cosine_topk_ivf_pq,
     cosine_topk_lsh,
 )
-from etl_spark_spark.operators.reconcile import reconcile_full_outer
-from etl_spark_spark.operators.graph import connected_components
-from etl_spark_spark.operators.packing import pack_by_token_budget
-from etl_spark_spark.operators.windows import partial_topk, top_k_per_group
 from etl_spark_spark.functions.vectors import norm
-from etl_spark_spark.pipelines.ressarcimento import allocation_pipeline
-from etl_spark_spark.pipelines.superdesconto import best_sale_pipeline
-from etl_spark_spark.sources import read_events, table, year_range_filter
-from etl_spark_spark.streaming import sessionize_batch, sliding_agg, tumbling_agg
+from etl_spark_spark.sources import table
 
-from ._shared import *  # noqa: F401,F403
-
+from ._shared import _SIMHASH_BIT_SUMS, _SIMHASH_VALUE
 
 
 def q_emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -831,42 +775,26 @@ FROM pred p JOIN q ON q.query_id = p.query_id
 """
 
 
-__all__ = [
-    'q_emb_cosine_topk',
-    '_ann_topk_check',
-    'q_emb_cosine_topk_lsh',
-    'q_emb_cosine_topk_ivf',
-    'q_emb_cosine_topk_ivfpq',
-    'q_emb_cosine_topk_ivfpq_int8',
-    'q_multimodal_features',
-    '_MULTIMODAL_FEATURES_SQL',
-    'q_emb_stats',
-    'q_emb_near_dup',
-    'q_semantic_dedup',
-    'q_emb_near_dup_lsh',
-    'q_multimodal_frames',
-    'q_emb_label_centroids',
-    'q_emb_hard_negatives',
-    'q_emb_label_outliers',
-    'q_emb_covariance',
-    'q_emb_jl_projection',
-    '_jl_projection_oracle',
-    'q_emb_covariance_blocked',
-    'q_media_phash_pairs',
-    'q_knn_label_accuracy',
-    '_DOT',
-    '_EMB_COSINE_SQL',
-    '_EMB_STATS_SQL',
-    '_UNIT',
-    '_EMB_NEAR_DUP_SQL',
-    '_ANN_TOPK_CHECK_SQL',
-    '_EMB_NEAR_DUP_LSH_SQL',
-    '_SEMANTIC_DEDUP_SQL',
-    '_MULTIMODAL_FRAMES_SQL',
-    '_EMB_LABEL_CENTROIDS_SQL',
-    '_EMB_HARD_NEGATIVES_SQL',
-    '_EMB_LABEL_OUTLIERS_SQL',
-    '_emb_covariance_oracle',
-    '_MEDIA_PHASH_PAIRS_SQL',
-    '_KNN_LABEL_ACCURACY_SQL',
-]
+ORACLES: dict[str, str] = {
+    "emb_label_centroids": _EMB_LABEL_CENTROIDS_SQL,
+    "emb_cosine_topk": _EMB_COSINE_SQL,
+    "emb_near_dup": _EMB_NEAR_DUP_SQL,
+    "semantic_dedup": _SEMANTIC_DEDUP_SQL,
+    "emb_stats": _EMB_STATS_SQL,
+    "multimodal_features": _MULTIMODAL_FEATURES_SQL,
+    "multimodal_frames": _MULTIMODAL_FRAMES_SQL,
+    # Approximate/sketch/model queries emit derived checks (exact
+    # counts + invariant booleans) so even they get hard verdicts.
+    "emb_cosine_topk_lsh": _ANN_TOPK_CHECK_SQL,
+    "emb_cosine_topk_ivf": _ANN_TOPK_CHECK_SQL,
+    "emb_cosine_topk_ivfpq": _ANN_TOPK_CHECK_SQL,
+    "emb_cosine_topk_ivfpq_int8": _ANN_TOPK_CHECK_SQL,
+    "emb_near_dup_lsh": _EMB_NEAR_DUP_LSH_SQL,
+    "emb_jl_projection": _jl_projection_oracle(),
+    "emb_covariance": _emb_covariance_oracle(),
+    "emb_covariance_blocked": _emb_covariance_oracle(),
+    "emb_hard_negatives": _EMB_HARD_NEGATIVES_SQL,
+    "emb_label_outliers": _EMB_LABEL_OUTLIERS_SQL,
+    "media_phash_pairs": _MEDIA_PHASH_PAIRS_SQL,
+    "knn_label_accuracy": _KNN_LABEL_ACCURACY_SQL,
+}

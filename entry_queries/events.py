@@ -1,86 +1,20 @@
-"""events queries split out of __spark_entry__.py (round 9) — see that module's docstring for the driver contract. Mechanically moved, text verbatim."""
+"""The events query family. Each ``q_<name>`` function here is registry
+entry ``<name>``, and ``ORACLES`` at the end maps ``<name>`` to its DuckDB
+oracle SQL. See ``__spark_entry__.py`` for the driver contract."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from etl_spark_spark.functions.money import money_sum, money_sum_sql
 from etl_spark_spark.operators.stats import checked_measure_sql
-from etl_spark_spark.functions.normalize import (
-    _ACCENTS_DST,
-    _ACCENTS_SRC,
-    cnpj_normalize,
-    etiqueta,
-    strip_normalize,
-    upper_trim,
+from etl_spark_spark.sources import read_events, table
+from etl_spark_spark.streaming import (
+    sessionize_batch,
+    sliding_agg,
+    tumbling_agg,
 )
-from etl_spark_spark.functions.text import (
-    LANG_PROFILES,
-    bpe_token_count,
-    bpe_token_count_sql,
-    dup_fraction,
-    fingerprint,
-    lang_id,
-    lang_scores,
-    punct_count,
-    quality_score,
-    stopword_hits,
-    token_count,
-    tokens,
-    word_shingles,
-)
-from etl_spark_spark.functions.scrub import scrub_pii, scrub_pii_sql_stages
-from etl_spark_spark.operators.dedup import dedup_any, dedup_latest
-from etl_spark_spark.operators.multimodal import (
-    attach_media,
-    extract_features,
-    sample_frames,
-)
-from etl_spark_spark.operators.neardup import (
-    contamination_scores,
-    exact_dedup,
-    near_dup_minhash,
-    ngram_jaccard_pairs,
-    prefix_filtered_jaccard_pairs,
-    shingle_set,
-    simhash,
-    simhash_near_dup,
-)
-from etl_spark_spark.operators.fuzzy import fuzzy_join
-from etl_spark_spark.operators.quality import (
-    expectation_metrics,
-    fk_violation_count,
-    functional_dependencies,
-)
-from etl_spark_spark.operators.sampling import (
-    hash_bucket,
-    hash_split,
-    temperature_sample,
-    stratified_hash_sample,
-)
-from etl_spark_spark.operators.similarity import (
-    cosine_near_dup_pairs,
-    cosine_topk,
-    cosine_topk_ivf,
-    cosine_topk_ivf_pq,
-    cosine_topk_lsh,
-)
-from etl_spark_spark.operators.reconcile import reconcile_full_outer
-from etl_spark_spark.operators.graph import connected_components
-from etl_spark_spark.operators.packing import pack_by_token_budget
-from etl_spark_spark.operators.windows import partial_topk, top_k_per_group
-from etl_spark_spark.functions.vectors import norm
-from etl_spark_spark.pipelines.ressarcimento import allocation_pipeline
-from etl_spark_spark.pipelines.superdesconto import best_sale_pipeline
-from etl_spark_spark.sources import read_events, table, year_range_filter
-from etl_spark_spark.streaming import sessionize_batch, sliding_agg, tumbling_agg
-
-from ._shared import *  # noqa: F401,F403
-
 
 
 def q_events_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1420,58 +1354,31 @@ FROM s WHERE d > 0
 """
 
 
-__all__ = [
-    'q_events_by_type',
-    'q_user_value_trend',
-    '_USER_VALUE_TREND_SQL',
-    'q_events_tumbling',
-    'q_events_time_rollup',
-    'q_events_sessionize',
-    'q_error_context_views',
-    'q_sketch_stats',
-    'q_purchase_last_click',
-    'q_events_props_map',
-    'q_events_sliding',
-    'q_sketch_rollup',
-    'q_user_rolling_value',
-    'q_session_paths',
-    'q_event_funnel',
-    'q_user_retention_cohorts',
-    'q_events_forward_fill',
-    'q_concurrent_sessions',
-    'q_event_transitions',
-    'q_user_activity_streaks',
-    'q_multi_touch_attribution',
-    'q_events_props_variant',
-    'q_time_weighted_value',
-    'q_conversion_latency',
-    '_EVENT_TRANSITIONS_SQL',
-    '_USER_ACTIVITY_STREAKS_SQL',
-    '_MULTI_TOUCH_ATTRIBUTION_SQL',
-    'q_dau_mau_stickiness',
-    'q_purchase_survival_km',
-    '_EVENTS_BY_TYPE_SQL',
-    '_EVENTS_TUMBLING_SQL',
-    '_TIME_ROLLUP_GRAIN',
-    '_EVENTS_TIME_ROLLUP_SQL',
-    '_EVENTS_SESSIONIZE_SQL',
-    '_ERROR_CONTEXT_SQL',
-    '_PURCHASE_LAST_CLICK_SQL',
-    '_EVENTS_PROPS_MAP_SQL',
-    '_EVENTS_SLIDING_SQL',
-    '_SKETCH_STATS_SQL',
-    '_SKETCH_ROLLUP_SQL',
-    '_USER_ROLLING_VALUE_SQL',
-    '_SESSION_PATHS_SQL',
-    '_EVENT_FUNNEL_SQL',
-    '_USER_RETENTION_COHORTS_SQL',
-    '_EVENTS_FORWARD_FILL_SQL',
-    '_CONCURRENT_SESSIONS_SQL',
-    'q_session_overlap_counts',
-    '_SESSION_OVERLAP_COUNTS_SQL',
-    '_EVENTS_PROPS_VARIANT_SQL',
-    '_TIME_WEIGHTED_VALUE_SQL',
-    '_CONVERSION_LATENCY_SQL',
-    '_DAU_MAU_STICKINESS_SQL',
-    '_PURCHASE_SURVIVAL_KM_SQL',
-]
+ORACLES: dict[str, str] = {
+    "events_by_type": _EVENTS_BY_TYPE_SQL,
+    "event_funnel": _EVENT_FUNNEL_SQL,
+    "user_retention_cohorts": _USER_RETENTION_COHORTS_SQL,
+    "events_tumbling": _EVENTS_TUMBLING_SQL,
+    "events_time_rollup": _EVENTS_TIME_ROLLUP_SQL,
+    "events_sessionize": _EVENTS_SESSIONIZE_SQL,
+    "events_props_map": _EVENTS_PROPS_MAP_SQL,
+    "events_sliding": _EVENTS_SLIDING_SQL,
+    "purchase_last_click": _PURCHASE_LAST_CLICK_SQL,
+    "error_context_views": _ERROR_CONTEXT_SQL,
+    "user_value_trend": _USER_VALUE_TREND_SQL,
+    "events_forward_fill": _EVENTS_FORWARD_FILL_SQL,
+    "event_transitions": _EVENT_TRANSITIONS_SQL,
+    "user_activity_streaks": _USER_ACTIVITY_STREAKS_SQL,
+    "multi_touch_attribution": _MULTI_TOUCH_ATTRIBUTION_SQL,
+    "events_props_variant": _EVENTS_PROPS_VARIANT_SQL,
+    "time_weighted_value": _TIME_WEIGHTED_VALUE_SQL,
+    "conversion_latency": _CONVERSION_LATENCY_SQL,
+    "concurrent_sessions": _CONCURRENT_SESSIONS_SQL,
+    "session_overlap_counts": _SESSION_OVERLAP_COUNTS_SQL,
+    "sketch_stats": _SKETCH_STATS_SQL,
+    "user_rolling_value": _USER_ROLLING_VALUE_SQL,
+    "session_paths": _SESSION_PATHS_SQL,
+    "sketch_rollup": _SKETCH_ROLLUP_SQL,
+    "dau_mau_stickiness": _DAU_MAU_STICKINESS_SQL,
+    "purchase_survival_km": _PURCHASE_SURVIVAL_KM_SQL,
+}

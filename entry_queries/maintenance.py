@@ -1,85 +1,16 @@
-"""maintenance queries split out of __spark_entry__.py (round 9) — see that module's docstring for the driver contract. Mechanically moved, text verbatim."""
+"""The maintenance query family. Each ``q_<name>`` function here is registry
+entry ``<name>``, and ``ORACLES`` at the end maps ``<name>`` to its DuckDB
+oracle SQL. See ``__spark_entry__.py`` for the driver contract."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_spark_spark.functions.money import money_sum, money_sum_sql
-from etl_spark_spark.functions.normalize import (
-    _ACCENTS_DST,
-    _ACCENTS_SRC,
-    cnpj_normalize,
-    etiqueta,
-    strip_normalize,
-    upper_trim,
-)
-from etl_spark_spark.functions.text import (
-    LANG_PROFILES,
-    bpe_token_count,
-    bpe_token_count_sql,
-    dup_fraction,
-    fingerprint,
-    lang_id,
-    lang_scores,
-    punct_count,
-    quality_score,
-    stopword_hits,
-    token_count,
-    tokens,
-    word_shingles,
-)
-from etl_spark_spark.functions.scrub import scrub_pii, scrub_pii_sql_stages
-from etl_spark_spark.operators.dedup import dedup_any, dedup_latest
-from etl_spark_spark.operators.multimodal import (
-    attach_media,
-    extract_features,
-    sample_frames,
-)
-from etl_spark_spark.operators.neardup import (
-    contamination_scores,
-    exact_dedup,
-    near_dup_minhash,
-    ngram_jaccard_pairs,
-    prefix_filtered_jaccard_pairs,
-    shingle_set,
-    simhash,
-    simhash_near_dup,
-)
-from etl_spark_spark.operators.fuzzy import fuzzy_join
-from etl_spark_spark.operators.quality import (
-    expectation_metrics,
-    fk_violation_count,
-    functional_dependencies,
-)
-from etl_spark_spark.operators.sampling import (
-    hash_bucket,
-    hash_split,
-    temperature_sample,
-    stratified_hash_sample,
-)
-from etl_spark_spark.operators.similarity import (
-    cosine_near_dup_pairs,
-    cosine_topk,
-    cosine_topk_ivf,
-    cosine_topk_ivf_pq,
-    cosine_topk_lsh,
-)
-from etl_spark_spark.operators.reconcile import reconcile_full_outer
-from etl_spark_spark.operators.graph import connected_components
-from etl_spark_spark.operators.packing import pack_by_token_budget
-from etl_spark_spark.operators.windows import partial_topk, top_k_per_group
-from etl_spark_spark.functions.vectors import norm
-from etl_spark_spark.pipelines.ressarcimento import allocation_pipeline
-from etl_spark_spark.pipelines.superdesconto import best_sale_pipeline
-from etl_spark_spark.sources import read_events, table, year_range_filter
-from etl_spark_spark.streaming import sessionize_batch, sliding_agg, tumbling_agg
+from etl_spark_spark.sources import read_events, table
 
-from ._shared import *  # noqa: F401,F403
-
+from ._shared import _FEED_SQL
 
 
 def q_scd2_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1074,31 +1005,67 @@ FROM src GROUP BY 1, 2
 """
 
 
-__all__ = [
-    'q_schema_evolution_scan',
-    '_SCHEMA_EVOLUTION_SQL',
-    'q_scd2_customer_history',
-    'q_orders_pit_dimension',
-    '_SCRATCH_DIRS',
-    '_scratch_dir',
-    'q_merge_upsert',
-    'q_cast_decimal_policy',
-    'q_indexed_zorder_scan',
-    'q_production_daily_loop',
-    'q_join_mv_retractions',
-    'q_compacted_snapshot',
-    'q_incremental_join_mv',
-    'q_join_mv_temporal',
-    'q_text_formats_roundtrip',
-    'q_replica_drift_audit',
-    'q_mv_routed_revenue',
-    '_SCD2_CUSTOMER_HISTORY_SQL',
-    '_ORDERS_PIT_DIMENSION_SQL',
-    '_CAST_DECIMAL_POLICY_SQL',
-    '_MERGE_UPSERT_SQL',
-    '_INDEXED_ZORDER_SCAN_SQL',
-    '_windowed_best_sql',
-    '_PRODUCTION_DAILY_LOOP_SQL',
-    '_REPLICA_DRIFT_AUDIT_SQL',
-    '_MV_ROUTED_REVENUE_SQL',
-]
+ORACLES: dict[str, str] = {
+    "orders_pit_dimension": _ORDERS_PIT_DIMENSION_SQL,
+    "merge_upsert": _MERGE_UPSERT_SQL,
+    "cast_decimal_policy": _CAST_DECIMAL_POLICY_SQL,
+    # compaction is lossless by contract: same MERGE expansion
+    "compacted_snapshot": _MERGE_UPSERT_SQL,
+    "production_daily_loop": _PRODUCTION_DAILY_LOOP_SQL,
+    "indexed_zorder_scan": _INDEXED_ZORDER_SCAN_SQL,
+    "replica_drift_audit": _REPLICA_DRIFT_AUDIT_SQL,
+    "scd2_customer_history": _SCD2_CUSTOMER_HISTORY_SQL,
+    "schema_evolution_scan": _SCHEMA_EVOLUTION_SQL,
+    "join_mv_retractions": """
+WITH corrected AS (
+  SELECT o_orderkey AS orderkey, o_custkey,
+         CASE WHEN o_custkey % 5 = 0 THEN 'X' ELSE o_orderstatus END
+           AS o_orderstatus
+  FROM orders
+  WHERE o_orderdate >= TIMESTAMP '1995-01-01'
+    AND o_orderdate <  TIMESTAMP '1995-03-01'
+)
+SELECT l.l_orderkey AS orderkey, l.l_linenumber, c.o_custkey,
+       c.o_orderstatus,
+       CAST(round(l.l_extendedprice * 100) AS BIGINT) AS price_cents,
+       CAST(count(*) AS BIGINT) AS mult
+FROM lineitem l JOIN corrected c ON l.l_orderkey = c.orderkey
+GROUP BY 1, 2, 3, 4, 5
+""",
+    "incremental_join_mv": """
+SELECT l_orderkey AS orderkey, l_linenumber, l_suppkey,
+       o_custkey, o_orderstatus,
+       CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)
+         AS revenue_cents
+FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+WHERE o_orderdate >= TIMESTAMP '1995-01-01'
+  AND o_orderdate <  TIMESTAMP '1995-03-01'
+""",
+    "join_mv_temporal": """
+WITH v AS (
+  SELECT user_id, event_id AS view_id, ts AS view_ts
+  FROM events WHERE event_type = 'view'
+),
+p AS (
+  SELECT user_id, event_id AS purchase_id, ts AS purchase_ts,
+         value AS purchase_value
+  FROM events WHERE event_type = 'purchase'
+)
+SELECT v.user_id, view_id, purchase_id,
+       strftime(view_ts, '%Y-%m-%d %H:%M:%S') AS view_time,
+       strftime(purchase_ts, '%Y-%m-%d %H:%M:%S') AS purchase_time,
+       CAST(round(purchase_value * 100) AS BIGINT) AS purchase_cents
+FROM v JOIN p ON p.user_id = v.user_id
+WHERE abs(epoch_us(view_ts) // 1000000
+          - epoch_us(purchase_ts) // 1000000) <= 3600
+""",
+    "text_formats_roundtrip": """
+SELECT c_mktsegment, o_orderstatus,
+       CAST(count(*) AS BIGINT) AS n_orders,
+       sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0 AS revenue
+FROM orders JOIN customer ON o_custkey = c_custkey
+WHERE o_orderdate >= TIMESTAMP '1995-01-01'
+GROUP BY 1, 2
+""",
+    "mv_routed_revenue": _MV_ROUTED_REVENUE_SQL,
+}

@@ -1,8 +1,8 @@
-"""relational queries split out of __spark_entry__.py (round 9) — see that module's docstring for the driver contract. Mechanically moved, text verbatim."""
+"""The relational query family. Each ``q_<name>`` function here is registry
+entry ``<name>``, and ``ORACLES`` at the end maps ``<name>`` to its DuckDB
+oracle SQL. See ``__spark_entry__.py`` for the driver contract."""
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -18,69 +18,19 @@ from etl_spark_spark.functions.normalize import (
     strip_normalize,
     upper_trim,
 )
-from etl_spark_spark.functions.text import (
-    LANG_PROFILES,
-    bpe_token_count,
-    bpe_token_count_sql,
-    dup_fraction,
-    fingerprint,
-    lang_id,
-    lang_scores,
-    punct_count,
-    quality_score,
-    stopword_hits,
-    token_count,
-    tokens,
-    word_shingles,
-)
-from etl_spark_spark.functions.scrub import scrub_pii, scrub_pii_sql_stages
 from etl_spark_spark.operators.dedup import dedup_any, dedup_latest
-from etl_spark_spark.operators.multimodal import (
-    attach_media,
-    extract_features,
-    sample_frames,
-)
-from etl_spark_spark.operators.neardup import (
-    contamination_scores,
-    exact_dedup,
-    near_dup_minhash,
-    ngram_jaccard_pairs,
-    prefix_filtered_jaccard_pairs,
-    shingle_set,
-    simhash,
-    simhash_near_dup,
-)
-from etl_spark_spark.operators.fuzzy import fuzzy_join
 from etl_spark_spark.operators.quality import (
     expectation_metrics,
     fk_violation_count,
     functional_dependencies,
 )
-from etl_spark_spark.operators.sampling import (
-    hash_bucket,
-    hash_split,
-    temperature_sample,
-    stratified_hash_sample,
-)
-from etl_spark_spark.operators.similarity import (
-    cosine_near_dup_pairs,
-    cosine_topk,
-    cosine_topk_ivf,
-    cosine_topk_ivf_pq,
-    cosine_topk_lsh,
-)
 from etl_spark_spark.operators.reconcile import reconcile_full_outer
-from etl_spark_spark.operators.graph import connected_components
-from etl_spark_spark.operators.packing import pack_by_token_budget
-from etl_spark_spark.operators.windows import partial_topk, top_k_per_group
-from etl_spark_spark.functions.vectors import norm
+from etl_spark_spark.operators.windows import top_k_per_group
 from etl_spark_spark.pipelines.ressarcimento import allocation_pipeline
 from etl_spark_spark.pipelines.superdesconto import best_sale_pipeline
 from etl_spark_spark.sources import read_events, table, year_range_filter
-from etl_spark_spark.streaming import sessionize_batch, sliding_agg, tumbling_agg
 
-from ._shared import *  # noqa: F401,F403
-
+from ._shared import _FEED_SQL
 
 
 # --------------------------------------------------------------------------
@@ -5239,201 +5189,145 @@ _FD_AUDIT_SQL = " UNION ALL ".join(
 )
 
 
-__all__ = [
-    'q_pricing_summary',
-    'q_dedup_latest_part',
-    'q_top_orders_per_customer',
-    'q_customers_without_orders',
-    'q_orders_enriched',
-    'q_normalize_keys',
-    'q_monthly_orders_1995',
-    'q_shipping_priority',
-    'q_local_supplier_volume',
-    'q_price_quantiles',
-    'q_above_avg_orders',
-    'q_orders_profile',
-    'q_nation_reconcile',
-    'q_sql_frontend',
-    'q_dedup_any_count',
-    'q_global_top_orders',
-    'q_custkeys_both_years',
-    'q_custkeys_only_1995',
-    'q_rollup_losses',
-    'q_supplier_share_expr',
-    'q_order_priority_counts',
-    'q_min_cost_supplier',
-    'q_revenue_cube',
-    'q_priority_return_pivot',
-    'q_daily_dense_orders',
-    'q_price_outliers',
-    'q_returns_unpivot',
-    'q_corr_exact',
-    'q_customer_order_gaps',
-    'q_customer_year_arrays',
-    'q_returns_grouping_sets',
-    'q_market_share',
-    'q_data_quality',
-    'q_customer_spend_deciles',
-    'q_disjunctive_revenue',
-    'q_exclusive_supplier_orders',
-    'q_part_supplier_counts',
-    'q_rich_idle_customers',
-    'q_small_qty_revenue',
-    'q_price_histogram',
-    'q_volume_shipping',
-    'q_product_profit',
-    'q_returned_top_customers',
-    'q_important_parts',
-    'q_custdist',
-    'q_promo_revenue',
-    'q_top_supplier',
-    'q_large_orders',
-    'q_part_promotion_suppliers',
-    'q_ks_drift_by_type',
-    'q_trade_pagerank',
-    'q_part_kcore',
-    '_part_kcore_oracle',
-    'q_psi_drift_ab',
-    '_psi_drift_oracle',
-    'q_part_share_alloc',
-    '_PART_SHARE_ALLOC_SQL',
-    'q_nation_revenue_trend',
-    '_nation_revenue_trend_oracle',
-    'q_supplier_qty_ewma',
-    '_supplier_qty_ewma_oracle',
-    'q_supplier_qty_ewma_scalable',
-    'q_nation_theil_sen_trend',
-    'q_nation_theil_sen_blocked',
-    '_nation_theil_sen_oracle',
-    'q_did_purchase_uplift',
-    '_DID_SQL',
-    'q_supplier_co_purchase',
-    'q_supplier_triangles',
-    'q_global_spend_rank',
-    'q_customer_order_docs',
-    'q_forecast_revenue',
-    'q_superdesconto',
-    'q_allocation',
-    'q_ab_test_welch',
-    'q_pareto_parts',
-    'q_benford_totalprice',
-    'q_exact_price_quartiles',
-    'q_price_quartile_sketch_eval',
-    'q_quantile_sketch_stream_fold',
-    '_quantile_sketch_fold_oracle',
-    '_price_quartile_sketch_eval_oracle',
-    'q_price_quartiles_scalable',
-    'q_price_outliers_scalable',
-    'q_ks_test_ab',
-    'q_pyds_source_stats',
-    'q_monthly_revenue_mom',
-    'q_abc_classification',
-    'q_part_cooccurrence_cosine',
-    'q_chi2_type_variant',
-    'q_customer_spend_gini',
-    '_SUPPLIER_TRIANGLES_SQL',
-    '_AB_TEST_WELCH_SQL',
-    'q_mann_whitney_ab',
-    'q_supplier_reach_bfs',
-    'q_priority_lines_by_status',
-    'q_waiting_suppliers',
-    'q_cumulative_new_customers',
-    'q_order_value_position',
-    'q_weighted_price_quartiles',
-    'q_weighted_price_quartiles_scalable',
-    'q_ks_drift_by_type_scalable',
-    'q_revenue_autocorr',
-    'q_revenue_changepoint',
-    'q_basket_rules',
-    'q_stock_balance_floor',
-    'q_ab_logrank_test',
-    'q_revenue_bootstrap_ci',
-    'q_trimmed_mean_price',
-    'q_fd_audit',
-    '_SUPERDESCONTO_SQL',
-    '_ALLOCATION_SQL',
-    '_PRICING_SUMMARY_SQL',
-    '_DEDUP_LATEST_SQL',
-    '_TOP_ORDERS_SQL',
-    '_CUSTOMERS_WITHOUT_ORDERS_SQL',
-    '_ORDERS_ENRICHED_SQL',
-    '_NORMALIZE_KEYS_SQL',
-    '_MONTHLY_ORDERS_SQL',
-    '_SHIPPING_PRIORITY_SQL',
-    '_LOCAL_SUPPLIER_SQL',
-    '_PRICE_QUANTILES_SQL',
-    '_ABOVE_AVG_ORDERS_SQL',
-    '_ORDERS_PROFILE_SQL',
-    '_NATION_RECONCILE_SQL',
-    '_SQL_FRONTEND_SQL',
-    '_DEDUP_ANY_COUNT_SQL',
-    '_GLOBAL_TOP_ORDERS_SQL',
-    '_Y95',
-    '_Y96',
-    '_CUSTKEYS_BOTH_SQL',
-    '_CUSTKEYS_ONLY_1995_SQL',
-    '_ROLLUP_LOSSES_SQL',
-    '_SUPPLIER_SHARE_EXPR_SQL',
-    '_DAILY_DENSE_ORDERS_SQL',
-    '_PRICE_OUTLIERS_SQL',
-    '_RETURNS_UNPIVOT_SQL',
-    '_DISJUNCTIVE_REVENUE_SQL',
-    '_EXCLUSIVE_SUPPLIER_ORDERS_SQL',
-    '_PART_SUPPLIER_COUNTS_SQL',
-    '_RICH_IDLE_CUSTOMERS_SQL',
-    '_CUSTOMER_ORDER_GAPS_SQL',
-    '_CUSTOMER_YEAR_ARRAYS_SQL',
-    '_SMALL_QTY_REVENUE_SQL',
-    '_PRICE_HISTOGRAM_SQL',
-    '_RETURNS_GROUPING_SETS_SQL',
-    '_MARKET_SHARE_SQL',
-    '_DATA_QUALITY_SQL',
-    '_CUSTOMER_SPEND_DECILES_SQL',
-    '_ORDER_PRIORITY_COUNTS_SQL',
-    '_MIN_COST_SUPPLIER_SQL',
-    '_VOLUME_SHIPPING_SQL',
-    '_PRODUCT_PROFIT_SQL',
-    '_RETURNED_TOP_CUSTOMERS_SQL',
-    '_IMPORTANT_PARTS_SQL',
-    '_CUSTDIST_SQL',
-    '_PROMO_REVENUE_SQL',
-    '_TOP_SUPPLIER_SQL',
-    '_LARGE_ORDERS_SQL',
-    '_PART_PROMOTION_SUPPLIERS_SQL',
-    '_pagerank_oracle_sql',
-    '_TRADE_PAGERANK_SQL',
-    '_SUPPLIER_CO_PURCHASE_SQL',
-    '_GLOBAL_SPEND_RANK_SQL',
-    '_CUSTOMER_ORDER_DOCS_SQL',
-    '_FORECAST_REVENUE_SQL',
-    '_REVENUE_CUBE_SQL',
-    '_PRIORITY_RETURN_PIVOT_SQL',
-    '_CORR_EXACT_SQL',
-    '_PARETO_PARTS_SQL',
-    '_benford_expected_sql',
-    '_BENFORD_TOTALPRICE_SQL',
-    '_EXACT_PRICE_QUARTILES_SQL',
-    '_KS_TEST_AB_SQL',
-    '_PYDS_SOURCE_STATS_SQL',
-    '_MONTHLY_REVENUE_MOM_SQL',
-    '_ABC_CLASSIFICATION_SQL',
-    '_PART_COOCCURRENCE_COSINE_SQL',
-    '_CHI2_TYPE_VARIANT_SQL',
-    '_CUSTOMER_SPEND_GINI_SQL',
-    '_MANN_WHITNEY_AB_SQL',
-    '_SUPPLIER_REACH_BFS_SQL',
-    '_PRIORITY_LINES_BY_STATUS_SQL',
-    '_WAITING_SUPPLIERS_SQL',
-    '_CUMULATIVE_NEW_CUSTOMERS_SQL',
-    '_ORDER_VALUE_POSITION_SQL',
-    '_WEIGHTED_PRICE_QUARTILES_SQL',
-    '_REVENUE_AUTOCORR_SQL',
-    '_REVENUE_CHANGEPOINT_SQL',
-    '_BASKET_RULES_SQL',
-    '_STOCK_BALANCE_FLOOR_SQL',
-    '_AB_LOGRANK_TEST_SQL',
-    '_revenue_bootstrap_ci_oracle',
-    '_TRIMMED_MEAN_PRICE_SQL',
-    '_fd_branch_sql',
-    '_FD_AUDIT_SQL',
-]
+_KS_DRIFT_SHARED_SQL = f"""
+WITH d AS (
+  SELECT event_type,
+         CASE WHEN substring(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8'
+              THEN 'A' ELSE 'B' END AS variant,
+         {checked_measure_sql('CAST(round(value * 100) AS BIGINT)', 'ks_drift_by_group', 'cents')} AS cents
+  FROM events WHERE value IS NOT NULL
+), dist AS (
+  SELECT event_type, cents,
+         count(*) FILTER (variant = 'A') AS ca,
+         count(*) FILTER (variant <> 'A') AS cb
+  FROM d GROUP BY 1, 2
+), cum AS (
+  SELECT event_type, cents,
+         sum(ca) OVER (PARTITION BY event_type ORDER BY cents
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS cuma,
+         sum(cb) OVER (PARTITION BY event_type ORDER BY cents
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS cumb,
+         sum(ca) OVER (PARTITION BY event_type) AS na,
+         sum(cb) OVER (PARTITION BY event_type) AS nb
+  FROM dist
+)
+SELECT event_type,
+       CAST(max(na) AS BIGINT) AS n_a,
+       CAST(max(nb) AS BIGINT) AS n_b,
+       max(abs(CAST(cuma AS DOUBLE) / CAST(na AS DOUBLE)
+               - CAST(cumb AS DOUBLE) / CAST(nb AS DOUBLE))) AS d_stat
+FROM cum GROUP BY 1
+HAVING max(na) > 0 AND max(nb) > 0
+"""
+
+
+ORACLES: dict[str, str] = {
+    "superdesconto": _SUPERDESCONTO_SQL,
+    "allocation": _ALLOCATION_SQL,
+    "pricing_summary": _PRICING_SUMMARY_SQL,
+    "dedup_latest_part": _DEDUP_LATEST_SQL,
+    "top_orders_per_customer": _TOP_ORDERS_SQL,
+    "customers_without_orders": _CUSTOMERS_WITHOUT_ORDERS_SQL,
+    "orders_enriched": _ORDERS_ENRICHED_SQL,
+    "normalize_keys": _NORMALIZE_KEYS_SQL,
+    "monthly_orders_1995": _MONTHLY_ORDERS_SQL,
+    "small_qty_revenue": _SMALL_QTY_REVENUE_SQL,
+    "price_histogram": _PRICE_HISTOGRAM_SQL,
+    "custkeys_both_years": _CUSTKEYS_BOTH_SQL,
+    "custkeys_only_1995": _CUSTKEYS_ONLY_1995_SQL,
+    "rollup_losses": _ROLLUP_LOSSES_SQL,
+    "supplier_share_expr": _SUPPLIER_SHARE_EXPR_SQL,
+    "global_top_orders": _GLOBAL_TOP_ORDERS_SQL,
+    "shipping_priority": _SHIPPING_PRIORITY_SQL,
+    "local_supplier_volume": _LOCAL_SUPPLIER_SQL,
+    "dedup_any_count": _DEDUP_ANY_COUNT_SQL,
+    "nation_reconcile": _NATION_RECONCILE_SQL,
+    "sql_frontend": _SQL_FRONTEND_SQL,
+    "orders_profile": _ORDERS_PROFILE_SQL,
+    "above_avg_orders": _ABOVE_AVG_ORDERS_SQL,
+    "price_quantiles": _PRICE_QUANTILES_SQL,
+    "data_quality": _DATA_QUALITY_SQL,
+    "returns_grouping_sets": _RETURNS_GROUPING_SETS_SQL,
+    "market_share": _MARKET_SHARE_SQL,
+    "customer_spend_deciles": _CUSTOMER_SPEND_DECILES_SQL,
+    "customer_order_gaps": _CUSTOMER_ORDER_GAPS_SQL,
+    "customer_year_arrays": _CUSTOMER_YEAR_ARRAYS_SQL,
+    "order_priority_counts": _ORDER_PRIORITY_COUNTS_SQL,
+    "min_cost_supplier": _MIN_COST_SUPPLIER_SQL,
+    "volume_shipping": _VOLUME_SHIPPING_SQL,
+    "product_profit": _PRODUCT_PROFIT_SQL,
+    "returned_top_customers": _RETURNED_TOP_CUSTOMERS_SQL,
+    "important_parts": _IMPORTANT_PARTS_SQL,
+    "custdist": _CUSTDIST_SQL,
+    "promo_revenue": _PROMO_REVENUE_SQL,
+    "top_supplier": _TOP_SUPPLIER_SQL,
+    "large_orders": _LARGE_ORDERS_SQL,
+    "part_promotion_suppliers": _PART_PROMOTION_SUPPLIERS_SQL,
+    "trade_pagerank": _TRADE_PAGERANK_SQL,
+    "supplier_co_purchase": _SUPPLIER_CO_PURCHASE_SQL,
+    "supplier_triangles": _SUPPLIER_TRIANGLES_SQL,
+    "ab_test_welch": _AB_TEST_WELCH_SQL,
+    "pareto_parts": _PARETO_PARTS_SQL,
+    "benford_totalprice": _BENFORD_TOTALPRICE_SQL,
+    "exact_price_quartiles": _EXACT_PRICE_QUARTILES_SQL,
+    "price_quartile_sketch_eval": _price_quartile_sketch_eval_oracle(),
+    # oracle is the ONE-SHOT sketch SQL: hash match proves the
+    # per-batch cnt-fold loses nothing (the hll_stream_fold law)
+    "quantile_sketch_stream_fold": _quantile_sketch_fold_oracle(),
+    # the decomposed form is bit-identical by construction, so it
+    # shares the plain-window oracle VERBATIM — the strongest
+    # cross-form equivalence evidence the harness can record
+    "price_quartiles_scalable": _EXACT_PRICE_QUARTILES_SQL,
+    "ks_test_ab": _KS_TEST_AB_SQL,
+    "pyds_source_stats": _PYDS_SOURCE_STATS_SQL,
+    "monthly_revenue_mom": _MONTHLY_REVENUE_MOM_SQL,
+    "abc_classification": _ABC_CLASSIFICATION_SQL,
+    "part_cooccurrence_cosine": _PART_COOCCURRENCE_COSINE_SQL,
+    "chi2_type_variant": _CHI2_TYPE_VARIANT_SQL,
+    "customer_spend_gini": _CUSTOMER_SPEND_GINI_SQL,
+    "global_spend_rank": _GLOBAL_SPEND_RANK_SQL,
+    "customer_order_docs": _CUSTOMER_ORDER_DOCS_SQL,
+    "forecast_revenue": _FORECAST_REVENUE_SQL,
+    "revenue_cube": _REVENUE_CUBE_SQL,
+    "priority_return_pivot": _PRIORITY_RETURN_PIVOT_SQL,
+    "corr_exact": _CORR_EXACT_SQL,
+    "disjunctive_revenue": _DISJUNCTIVE_REVENUE_SQL,
+    "exclusive_supplier_orders": _EXCLUSIVE_SUPPLIER_ORDERS_SQL,
+    "part_supplier_counts": _PART_SUPPLIER_COUNTS_SQL,
+    "rich_idle_customers": _RICH_IDLE_CUSTOMERS_SQL,
+    "returns_unpivot": _RETURNS_UNPIVOT_SQL,
+    "daily_dense_orders": _DAILY_DENSE_ORDERS_SQL,
+    "price_outliers": _PRICE_OUTLIERS_SQL,
+    "price_outliers_scalable": _PRICE_OUTLIERS_SQL,
+    "part_kcore": _part_kcore_oracle(),
+    "psi_drift_ab": _psi_drift_oracle(),
+    "part_share_alloc": _PART_SHARE_ALLOC_SQL,
+    "nation_revenue_trend": _nation_revenue_trend_oracle(),
+    "supplier_qty_ewma": _supplier_qty_ewma_oracle(),
+    "supplier_qty_ewma_scalable": _supplier_qty_ewma_oracle(),
+    "nation_theil_sen_trend": _nation_theil_sen_oracle(),
+    # identical pair set by construction -> shares the oracle verbatim
+    "nation_theil_sen_blocked": _nation_theil_sen_oracle(),
+    "did_purchase_uplift": _DID_SQL,
+    "ks_drift_by_type_scalable": _KS_DRIFT_SHARED_SQL,
+    "ks_drift_by_type": _KS_DRIFT_SHARED_SQL,
+    "mann_whitney_ab": _MANN_WHITNEY_AB_SQL,
+    "supplier_reach_bfs": _SUPPLIER_REACH_BFS_SQL,
+    "priority_lines_by_status": _PRIORITY_LINES_BY_STATUS_SQL,
+    "waiting_suppliers": _WAITING_SUPPLIERS_SQL,
+    "cumulative_new_customers": _CUMULATIVE_NEW_CUSTOMERS_SQL,
+    "order_value_position": _ORDER_VALUE_POSITION_SQL,
+    "weighted_price_quartiles": _WEIGHTED_PRICE_QUARTILES_SQL,
+    # bit-identical decomposed form -> shares the oracle verbatim
+    "weighted_price_quartiles_scalable": _WEIGHTED_PRICE_QUARTILES_SQL,
+    "revenue_autocorr": _REVENUE_AUTOCORR_SQL,
+    "revenue_changepoint": _REVENUE_CHANGEPOINT_SQL,
+    "basket_rules": _BASKET_RULES_SQL,
+    "stock_balance_floor": _STOCK_BALANCE_FLOOR_SQL,
+    "ab_logrank_test": _AB_LOGRANK_TEST_SQL,
+    "revenue_bootstrap_ci": _revenue_bootstrap_ci_oracle(),
+    "trimmed_mean_price": _TRIMMED_MEAN_PRICE_SQL,
+    "fd_audit": _FD_AUDIT_SQL,
+}

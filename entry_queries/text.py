@@ -1,24 +1,14 @@
-"""text queries split out of __spark_entry__.py (round 9) — see that module's docstring for the driver contract. Mechanically moved, text verbatim."""
+"""The text query family. Each ``q_<name>`` function here is registry
+entry ``<name>``, and ``ORACLES`` at the end maps ``<name>`` to its DuckDB
+oracle SQL. See ``__spark_entry__.py`` for the driver contract."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from etl_spark_spark.execution import computed_once, fan_out, run_concurrently
-from etl_spark_spark.functions.money import money_sum, money_sum_sql
 from etl_spark_spark.operators.stats import checked_measure_sql
-from etl_spark_spark.functions.normalize import (
-    _ACCENTS_DST,
-    _ACCENTS_SRC,
-    cnpj_normalize,
-    etiqueta,
-    strip_normalize,
-    upper_trim,
-)
 from etl_spark_spark.functions.text import (
     LANG_PROFILES,
     bpe_token_count,
@@ -35,12 +25,6 @@ from etl_spark_spark.functions.text import (
     word_shingles,
 )
 from etl_spark_spark.functions.scrub import scrub_pii, scrub_pii_sql_stages
-from etl_spark_spark.operators.dedup import dedup_any, dedup_latest
-from etl_spark_spark.operators.multimodal import (
-    attach_media,
-    extract_features,
-    sample_frames,
-)
 from etl_spark_spark.operators.neardup import (
     contamination_scores,
     exact_dedup,
@@ -52,36 +36,18 @@ from etl_spark_spark.operators.neardup import (
     simhash_near_dup,
 )
 from etl_spark_spark.operators.fuzzy import fuzzy_join
-from etl_spark_spark.operators.quality import (
-    expectation_metrics,
-    fk_violation_count,
-    functional_dependencies,
-)
 from etl_spark_spark.operators.sampling import (
     hash_bucket,
     hash_split,
     temperature_sample,
     stratified_hash_sample,
 )
-from etl_spark_spark.operators.similarity import (
-    cosine_near_dup_pairs,
-    cosine_topk,
-    cosine_topk_ivf,
-    cosine_topk_ivf_pq,
-    cosine_topk_lsh,
-)
-from etl_spark_spark.operators.reconcile import reconcile_full_outer
 from etl_spark_spark.operators.graph import connected_components
 from etl_spark_spark.operators.packing import pack_by_token_budget
 from etl_spark_spark.operators.windows import partial_topk, top_k_per_group
-from etl_spark_spark.functions.vectors import norm
-from etl_spark_spark.pipelines.ressarcimento import allocation_pipeline
-from etl_spark_spark.pipelines.superdesconto import best_sale_pipeline
-from etl_spark_spark.sources import read_events, table, year_range_filter
-from etl_spark_spark.streaming import sessionize_batch, sliding_agg, tumbling_agg
+from etl_spark_spark.sources import table
 
-from ._shared import *  # noqa: F401,F403
-
+from ._shared import _SIMHASH_BIT_SUMS, _SIMHASH_VALUE
 
 
 # ---- extension operators: text analysis / dedup / similarity / events ----
@@ -4004,171 +3970,128 @@ FROM (
 """
 
 
-__all__ = [
-    'q_doc_text_stats',
-    'q_doc_lang_id',
-    'q_doc_exact_dedup',
-    'q_neardup_minhash',
-    'q_neardup_bucket_cap',
-    'q_neardup_ngram_jaccard',
-    'q_neardup_prefix_jaccard',
-    'q_doc_simhash',
-    'q_neardup_simhash',
-    'q_neardup_simhash_exact',
-    'q_doc_fingerprints',
-    'q_doc_group_sample',
-    'q_doc_bigram_novelty',
-    'q_doc_split_counts',
-    'q_doc_stratified_sample',
-    'q_doc_group_split',
-    'q_doc_repetition',
-    'q_doc_pii_scrub',
-    'q_source_mix_sample',
-    'q_doc_shuffle_order',
-    'q_fuzzy_code_match',
-    'q_doc_source_cap',
-    'q_vocab_topk',
-    'q_doc_decontaminate',
-    'q_doc_decontaminate_bloom',
-    'q_doc_pack',
-    'q_doc_top_terms',
-    'q_neardup_clusters',
-    'q_doc_quality_model',
-    'q_doc_incremental_dedup',
-    'q_doc_chunks',
-    'q_doc_weighted_sample',
-    'q_doc_curation',
-    'q_doc_curation_capped',
-    'q_doc_training_prep',
-    'q_doc_length_winsor',
-    'q_doc_bigram_surprisal',
-    'q_doc_kn_perplexity',
-    '_kn_perplexity_oracle',
-    'q_bloom_snapshot_dedup',
-    '_bloom_snapshot_oracle',
-    'q_cms_term_counts',
-    '_cms_term_counts_oracle',
-    'q_doc_ccnet_buckets',
-    '_ccnet_buckets_oracle',
-    'q_hll_distinct_tokens',
-    '_hll_distinct_oracle',
-    'q_hll_stream_fold',
-    'q_doc_k_anonymity',
-    '_DOC_K_ANONYMITY_SQL',
-    '_hll_assemble',
-    'q_hll_source_overlap',
-    '_hll_source_overlap_oracle',
-    'q_doc_training_mix',
-    'q_doc_epoch_shuffle',
-    'q_doc_dsir_weights',
-    'q_cluster_canonicalize',
-    'q_split_leakage',
-    'q_doc_budget_mix',
-    'q_lang_id_eval',
-    'q_inverted_index',
-    'q_bm25_search',
-    'q_hybrid_search_rrf',
-    '_hybrid_search_rrf_oracle',
-    'q_doc_tfidf_similar',
-    '_doc_tfidf_similar_oracle',
-    'q_tfidf_block_recall',
-    '_tfidf_block_recall_oracle',
-    'q_tfidf_blocking_vacuity',
-    '_tfidf_blocking_vacuity_oracle',
-    'q_tfidf_blocking_frac',
-    '_tfidf_blocking_frac_oracle',
-    'q_doc_tfidf_similar_guarded',
-    '_doc_tfidf_similar_guarded_oracle',
-    '_BM25_TERMS',
-    'q_doc_surprisal',
-    'q_duplicate_spans',
-    'q_column_entropy',
-    'q_phrase_search',
-    'q_bpe_merges',
-    'q_bpe_token_counts',
-    'q_doc_containment',
-    'q_term_pmi',
-    '_EVAL_THRESHOLDS',
-    '_EVAL_TARGET_RECALL',
-    '_EVAL_MAX_PERMS',
-    'q_neardup_eval',
-    'q_neardup_recall_sampled',
-    'q_doc_gopher_filter',
-    'q_doc_length_histogram',
-    'q_source_overlap',
-    '_TOKS',
-    '_EN_PAT',
-    '_DOC_TEXT_STATS_SQL',
-    '_LANGS',
-    '_LANG_PATS',
-    '_lang_case_sql',
-    '_DOC_LANG_ID_SQL',
-    '_LANG_ID_EVAL_SQL',
-    '_DOC_EXACT_DEDUP_SQL',
-    '_SHINGLES',
-    '_MH_COLS',
-    '_BANDS_SQL',
-    '_NEARDUP_MINHASH_SQL',
-    '_NEARDUP_BUCKET_CAP_SQL',
-    '_CLUSTER_CANONICALIZE_SQL',
-    '_SPLIT_LEAKAGE_SQL',
-    '_DOC_INCREMENTAL_DEDUP_SQL',
-    '_NEARDUP_NGRAM_SQL',
-    '_NEARDUP_PREFIX_SQL',
-    '_DOC_SIMHASH_SQL',
-    '_NEARDUP_SIMHASH_SQL',
-    '_NEARDUP_SIMHASH_EXACT_SQL',
-    '_DOC_FINGERPRINTS_SQL',
-    '_DOC_GROUP_SAMPLE_SQL',
-    '_DOC_BIGRAM_NOVELTY_SQL',
-    '_BUCKET1',
-    '_BUCKET2',
-    '_DOC_SPLIT_COUNTS_SQL',
-    '_DOC_STRATIFIED_SAMPLE_SQL',
-    '_DOC_GROUP_SPLIT_SQL',
-    '_DOC_REPETITION_SQL',
-    '_DOC_PII_SCRUB_SQL',
-    '_SOURCE_MIX_SAMPLE_SQL',
-    '_DOC_CHUNKS_SQL',
-    '_DOC_WEIGHTED_SAMPLE_SQL',
-    '_DOC_SHUFFLE_ORDER_SQL',
-    '_FUZZY_CODE_MATCH_SQL',
-    '_DOC_SOURCE_CAP_SQL',
-    '_VOCAB_TOPK_SQL',
-    '_DOC_DECONTAMINATE_SQL',
-    '_DOC_PACK_SQL',
-    '_DOC_TOP_TERMS_SQL',
-    '_NEARDUP_CLUSTERS_SQL',
-    '_CURATION_BASE_CTES',
-    '_CURATION_CTES',
-    '_DOC_CURATION_SQL',
-    '_DOC_CURATION_CAPPED_SQL',
-    '_DOC_QUALITY_MODEL_SQL',
-    '_DOC_TRAINING_PREP_SQL',
-    '_DOC_LENGTH_WINSOR_SQL',
-    '_DOC_BUDGET_MIX_SQL',
-    '_INVERTED_INDEX_SQL',
-    '_bm25_oracle',
-    '_surprisal_oracle',
-    '_dsir_weights_oracle',
-    '_bigram_surprisal_oracle',
-    '_DUPLICATE_SPANS_SQL',
-    '_entropy_col_sql',
-    '_COLUMN_ENTROPY_SQL',
-    '_phrase_search_oracle',
-    '_bpe_merges_oracle',
-    '_bpe_token_counts_oracle',
-    '_DOC_CONTAINMENT_SQL_TMPL',
-    '_TERM_PMI_SQL',
-    '_mh_cols_sql',
-    '_bands_sql_for',
-    '_neardup_eval_tuned_sql',
-    '_neardup_recall_sampled_sql',
-    '_DOC_GOPHER_FILTER_SQL',
-    '_DOC_LENGTH_HISTOGRAM_SQL',
-    '_SOURCE_OVERLAP_SQL',
-    'q_doc_span_scrub',
-    '_DOC_SPAN_SCRUB_SQL',
-    'q_doc_span_scrub_global',
-    '_DOC_SPAN_SCRUB_GLOBAL_SQL',
-]
+ORACLES: dict[str, str] = {
+    "doc_text_stats": _DOC_TEXT_STATS_SQL,
+    "doc_lang_id": _DOC_LANG_ID_SQL,
+    "doc_exact_dedup": _DOC_EXACT_DEDUP_SQL,
+    "neardup_minhash": _NEARDUP_MINHASH_SQL,
+    "neardup_bucket_cap": _NEARDUP_BUCKET_CAP_SQL,
+    "doc_incremental_dedup": _DOC_INCREMENTAL_DEDUP_SQL,
+    "doc_chunks": _DOC_CHUNKS_SQL,
+    "doc_weighted_sample": _DOC_WEIGHTED_SAMPLE_SQL,
+    "neardup_ngram_jaccard": _NEARDUP_NGRAM_SQL,
+    "neardup_prefix_jaccard": _NEARDUP_PREFIX_SQL,
+    "doc_simhash": _DOC_SIMHASH_SQL,
+    "doc_fingerprints": _DOC_FINGERPRINTS_SQL,
+    "neardup_simhash": _NEARDUP_SIMHASH_SQL,
+    "neardup_simhash_exact": _NEARDUP_SIMHASH_EXACT_SQL,
+    "doc_split_counts": _DOC_SPLIT_COUNTS_SQL,
+    "doc_stratified_sample": _DOC_STRATIFIED_SAMPLE_SQL,
+    "doc_group_split": _DOC_GROUP_SPLIT_SQL,
+    "doc_repetition": _DOC_REPETITION_SQL,
+    "doc_pii_scrub": _DOC_PII_SCRUB_SQL,
+    "doc_k_anonymity": _DOC_K_ANONYMITY_SQL,
+    "source_mix_sample": _SOURCE_MIX_SAMPLE_SQL,
+    "doc_shuffle_order": _DOC_SHUFFLE_ORDER_SQL,
+    "fuzzy_code_match": _FUZZY_CODE_MATCH_SQL,
+    "doc_source_cap": _DOC_SOURCE_CAP_SQL,
+    "vocab_topk": _VOCAB_TOPK_SQL,
+    "doc_decontaminate": _DOC_DECONTAMINATE_SQL,
+    "doc_pack": _DOC_PACK_SQL,
+    "doc_top_terms": _DOC_TOP_TERMS_SQL,
+    "neardup_clusters": _NEARDUP_CLUSTERS_SQL,
+    "doc_curation": _DOC_CURATION_SQL,
+    "doc_curation_capped": _DOC_CURATION_CAPPED_SQL,
+    "doc_training_prep": _DOC_TRAINING_PREP_SQL,
+    "doc_length_winsor": _DOC_LENGTH_WINSOR_SQL,
+    "split_leakage": _SPLIT_LEAKAGE_SQL,
+    "lang_id_eval": _LANG_ID_EVAL_SQL,
+    "inverted_index": _INVERTED_INDEX_SQL,
+    "doc_budget_mix": _DOC_BUDGET_MIX_SQL,
+    "doc_quality_model": _DOC_QUALITY_MODEL_SQL,
+    "doc_bigram_novelty": _DOC_BIGRAM_NOVELTY_SQL,
+    "doc_group_sample": _DOC_GROUP_SAMPLE_SQL,
+    "bm25_search": _bm25_oracle(),
+    "doc_surprisal": _surprisal_oracle(),
+    "doc_bigram_surprisal": _bigram_surprisal_oracle(),
+    "doc_kn_perplexity": _kn_perplexity_oracle(),
+    "bloom_snapshot_dedup": _bloom_snapshot_oracle(),
+    "cms_term_counts": _cms_term_counts_oracle(),
+    "doc_ccnet_buckets": _ccnet_buckets_oracle(),
+    "doc_decontaminate_bloom": _DOC_DECONTAMINATE_SQL,
+    "hll_distinct_tokens": _hll_distinct_oracle(),
+    "hll_stream_fold": _hll_distinct_oracle(),
+    "hll_source_overlap": _hll_source_overlap_oracle(),
+    "doc_tfidf_similar": _doc_tfidf_similar_oracle(),
+    "tfidf_block_recall": _tfidf_block_recall_oracle(),
+    "tfidf_blocking_vacuity": _tfidf_blocking_vacuity_oracle(),
+    "tfidf_blocking_frac": _tfidf_blocking_frac_oracle(),
+    "doc_tfidf_similar_guarded": _doc_tfidf_similar_guarded_oracle(),
+    "hybrid_search_rrf": _hybrid_search_rrf_oracle(),
+    "doc_dsir_weights": _dsir_weights_oracle(),
+    "doc_epoch_shuffle": """
+SELECT CAST(row_number() OVER (
+           ORDER BY md5('0#' || CAST(doc_id AS VARCHAR)), doc_id
+       ) AS BIGINT) AS position,
+       doc_id, source
+FROM documents
+""",
+    "doc_training_mix": """
+WITH c AS (
+  SELECT source, lang, source || '|' || lang AS stratum,
+         count(*) AS n_docs
+  FROM documents GROUP BY source, lang
+),
+tot AS (SELECT sum(n_docs) AS w FROM c),
+fl AS (
+  SELECT source, lang, stratum, n_docs,
+         (300 * n_docs) // w AS flr,
+         (300 * n_docs) % w AS rem
+  FROM c, tot
+),
+lo AS (SELECT 300 - sum(flr) AS leftover FROM fl),
+alloc AS (
+  SELECT source, lang,
+         flr + CASE WHEN row_number()
+                        OVER (ORDER BY rem DESC, stratum)
+                    <= (SELECT leftover FROM lo)
+               THEN 1 ELSE 0 END AS alloc
+  FROM fl
+),
+ranked AS (
+  SELECT d.doc_id, d.source, d.lang,
+         row_number() OVER (
+             PARTITION BY d.source, d.lang
+             ORDER BY md5(CAST(d.doc_id AS VARCHAR)), d.doc_id
+         ) AS rn
+  FROM documents d
+),
+picked AS (
+  SELECT r.doc_id, r.source, r.lang
+  FROM ranked r JOIN alloc a USING (source, lang)
+  WHERE r.rn <= a.alloc
+)
+SELECT CAST(row_number() OVER (
+           ORDER BY md5('0#' || CAST(doc_id AS VARCHAR)), doc_id
+       ) AS BIGINT) AS position,
+       doc_id, source, lang
+FROM picked
+""",
+    "cluster_canonicalize": _CLUSTER_CANONICALIZE_SQL,
+    "duplicate_spans": _DUPLICATE_SPANS_SQL,
+    "doc_span_scrub": _DOC_SPAN_SCRUB_SQL,
+    "doc_span_scrub_global": _DOC_SPAN_SCRUB_GLOBAL_SQL,
+    "column_entropy": _COLUMN_ENTROPY_SQL,
+    "phrase_search": _phrase_search_oracle(),
+    "bpe_merges": _bpe_merges_oracle(),
+    "bpe_token_counts": _bpe_token_counts_oracle(),
+    "doc_containment": _DOC_CONTAINMENT_SQL_TMPL.format(
+        shingles=_SHINGLES, mh=_MH_COLS, bands=_BANDS_SQL
+    ),
+    "term_pmi": _TERM_PMI_SQL,
+    "neardup_eval": _neardup_eval_tuned_sql(),
+    "neardup_recall_sampled": _neardup_recall_sampled_sql(),
+    "doc_gopher_filter": _DOC_GOPHER_FILTER_SQL,
+    "doc_length_histogram": _DOC_LENGTH_HISTOGRAM_SQL,
+    "source_overlap": _SOURCE_OVERLAP_SQL,
+}

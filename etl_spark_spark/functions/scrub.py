@@ -22,7 +22,7 @@ shuffles; scrubbing 100 TB is a pure map with perfect linear scaling.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["PII_PATTERNS", "scrub_pii", "scrub_pii_sql_stages"]

@@ -19,7 +19,12 @@ are fenced by batch id:
   legitimately rewrites the same directory with the same content
   (reading from the last COMMITTED predecessor, not the torn one);
 - readers (:func:`read_stream_rollup`) only ever see the latest
-  committed snapshot — torn writes are invisible.
+  committed snapshot — torn writes are invisible;
+- once ``agg_v<b>`` commits, every version directory below ``b``'s
+  newest committed predecessor is deleted, so the state holds two
+  snapshots however long the stream runs: ``b`` and the predecessor a
+  concurrent reader may have resolved during the fold. A crash before
+  ``_SUCCESS`` never reaches the delete, and a fenced replay skips it.
 
 At-least-once delivery x idempotent fenced publish = exactly-once
 rollup state, bit-identical to a batch ``agg_snapshot`` over the full
@@ -28,6 +33,7 @@ history (pinned by test).
 
 from __future__ import annotations
 
+import shutil
 from collections.abc import Sequence
 from pathlib import Path
 
@@ -40,14 +46,20 @@ from .stream import drain_available_now
 _PREFIX = "agg_v"
 
 
-def _committed_versions(state: Path) -> list[int]:
+def _version_dirs(state: Path) -> dict[int, Path]:
     if not state.exists():
-        return []
-    out = []
-    for p in state.iterdir():
-        if p.name.startswith(_PREFIX) and (p / "_SUCCESS").exists():
-            out.append(int(p.name[len(_PREFIX):]))
-    return sorted(out)
+        return {}
+    return {
+        int(p.name[len(_PREFIX):]): p
+        for p in state.iterdir()
+        if p.name.startswith(_PREFIX)
+    }
+
+
+def _committed_versions(state: Path) -> list[int]:
+    return sorted(
+        v for v, p in _version_dirs(state).items() if (p / "_SUCCESS").exists()
+    )
 
 
 def apply_stream_batch(
@@ -58,9 +70,9 @@ def apply_stream_batch(
     state_path: str,
 ) -> None:
     """Fold ONE micro-batch into the rollup and publish
-    ``agg_v<batch_id>``. Replay-idempotent via the batch-id fence;
-    safe after crashes (torn directories carry no _SUCCESS and are
-    rewritten).
+    ``agg_v<batch_id>``, then delete the versions below its committed
+    predecessor. Replay-idempotent via the batch-id fence; safe after
+    crashes (torn directories carry no _SUCCESS and are rewritten).
 
     Batch semantics: a plain batch is treated as INSERTS; a batch that
     already carries a ``change_type`` column (insert/update/delete,
@@ -94,6 +106,10 @@ def apply_stream_batch(
     new_agg.write.mode("overwrite").parquet(
         str(state / f"{_PREFIX}{batch_id}")
     )
+    if prev:
+        for v, p in _version_dirs(state).items():
+            if v < max(prev):
+                shutil.rmtree(p)
 
 
 def read_stream_rollup(spark: SparkSession, state_path: str) -> DataFrame:

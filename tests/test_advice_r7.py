@@ -91,15 +91,15 @@ def test_covariance_blocked_overflow_fallback_exact(spark):
 
 
 def test_scratch_reaper_spares_fresh_dirs():
-    import importlib
     import tempfile
 
-    entrymod = importlib.import_module("__spark_entry__")
+    from entry_queries.maintenance import _scratch_dir
+
     # a freshly-touched dir with a dead pid must survive (TTL guard:
     # could be a live sibling in another PID namespace sharing /tmp)
     fresh = tempfile.mkdtemp(prefix="spark_graft_ttltest_p999999_")
     try:
-        entrymod._scratch_dir("ttlprobe")
+        _scratch_dir("ttlprobe")
         assert os.path.isdir(fresh)
     finally:
         import shutil

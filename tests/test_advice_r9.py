@@ -9,7 +9,7 @@
 3. evict_join_mv_state: the replay-unsafe unfenced watermark (no
    committed_below) is now an explicit opt-in
    (allow_uncommitted_watermark=True); the default refuses loudly.
-4. __spark_entry__._scratch_dir reaper: liveness short-circuits on the
+4. entry_queries.maintenance._scratch_dir reaper: liveness short-circuits on the
    first fresh mtime anywhere in the tree — a dead-pid dir with ONE
    fresh nested file is kept, a fully-stale dead-pid dir is reaped.
 """
@@ -119,7 +119,7 @@ def test_scratch_reaper_keeps_tree_with_fresh_nested_file(tmp_path):
     import tempfile
     import time
 
-    import __spark_entry__ as entrymod
+    from entry_queries.maintenance import _scratch_dir
 
     tmp = tempfile.gettempdir()
     old = time.time() - 7200  # TTL is 3600s
@@ -141,7 +141,7 @@ def test_scratch_reaper_keeps_tree_with_fresh_nested_file(tmp_path):
     live = _mk("spark_graft_advicer9live_p4194304_x", fresh_nested=True)
     dead = _mk("spark_graft_advicer9dead_p4194304_x", fresh_nested=False)
     try:
-        entrymod._scratch_dir("advicer9probe")
+        _scratch_dir("advicer9probe")
         assert live.exists(), "fresh nested file must keep the tree"
         assert not dead.exists(), "fully-stale dead-pid tree is reaped"
     finally:

@@ -639,7 +639,7 @@ def test_sketch_stats_error_bounds(spark, sf_dir):
         s = sk[flag]
         assert abs(s.approx_parts - e.parts) <= 0.15 * e.parts
         assert abs(s.approx_p50 - e.p50) <= 0.10 * e.p50
-    for r in entrymod.q_sketch_stats(spark, sf_dir).collect():
+    for r in entrymod.queries()["sketch_stats"](spark, sf_dir).collect():
         assert r.distinct_ok and r.p50_ok
 
 

@@ -9,14 +9,14 @@ from etl_spark_spark.plans import explain_str, pushed_filters, scan_schema_colum
 
 
 def test_range_filter_pushed_to_scan(spark, sf_dir):
-    df = entrymod.q_monthly_orders_1995(spark, sf_dir)
+    df = entrymod.queries()["monthly_orders_1995"](spark, sf_dir)
     pushed = " ".join(pushed_filters(df))
     assert "o_orderdate" in pushed, f"range predicate not pushed: {pushed}"
     assert "GreaterThanOrEqual" in pushed and "LessThan" in pushed
 
 
 def test_superdesconto_scans_pruned(spark, sf_dir):
-    df = entrymod.q_superdesconto(spark, sf_dir)
+    df = entrymod.queries()["superdesconto"](spark, sf_dir)
     scans = scan_schema_columns(df)
     part_scans = [s for s in scans if "p_partkey" in s]
     assert part_scans and all(
@@ -29,7 +29,7 @@ def test_superdesconto_scans_pruned(spark, sf_dir):
 
 
 def test_superdesconto_joins_broadcast(spark, sf_dir):
-    plan = explain_str(entrymod.q_superdesconto(spark, sf_dir))
+    plan = explain_str(entrymod.queries()["superdesconto"](spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 2, "dim joins must broadcast"
     assert "SortMergeJoin" not in plan
 
@@ -41,7 +41,7 @@ def test_superdesconto_top1_partial_aggregates_map_side(spark, sf_dir):
     crosses the shuffle) instead of flooding one reducer the way a
     ranking window would. The zipf-replica numbers live in BASELINE.md
     (scripts/bench_skew.py --etiqueta shape)."""
-    plan = explain_str(entrymod.q_superdesconto(spark, sf_dir))
+    plan = explain_str(entrymod.queries()["superdesconto"](spark, sf_dir))
     assert "partial_max_by" in plan, (
         "top-1 per etiqueta lost its map-side partial aggregation"
     )
@@ -50,7 +50,7 @@ def test_superdesconto_top1_partial_aggregates_map_side(spark, sf_dir):
 
 
 def test_equality_filter_pushed(spark, sf_dir):
-    df = entrymod.q_events_props_map(spark, sf_dir)
+    df = entrymod.queries()["events_props_map"](spark, sf_dir)
     pushed = " ".join(pushed_filters(df))
     assert "event_type" in pushed
 
@@ -68,7 +68,7 @@ def test_emb_near_dup_no_driver_materialization(spark, sf_dir, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "toPandas", _boom)
     monkeypatch.setattr(DataFrame, "collect", _boom)
-    df = entrymod.q_emb_near_dup(spark, sf_dir)  # must stay lazy
+    df = entrymod.queries()["emb_near_dup"](spark, sf_dir)  # must stay lazy
     monkeypatch.undo()
     plan = explain_str(df)
     assert "FlatMapGroupsInPandas" in plan
@@ -79,27 +79,27 @@ def test_min_cost_supplier_prunes_before_window(spark, sf_dir):
     """The part filter must sit BELOW the window (broadcast join feeds
     the window ~10% of lineitem) and the window must partial-prune
     (WindowGroupLimit) before its exchange; no SortMergeJoin."""
-    plan = explain_str(entrymod.q_min_cost_supplier(spark, sf_dir))
+    plan = explain_str(entrymod.queries()["min_cost_supplier"](spark, sf_dir))
     assert "SortMergeJoin" not in plan
     assert "WindowGroupLimit" in plan
     assert plan.count("BroadcastHashJoin") >= 2
-    pushed = " ".join(pushed_filters(entrymod.q_min_cost_supplier(spark, sf_dir)))
+    pushed = " ".join(pushed_filters(entrymod.queries()["min_cost_supplier"](spark, sf_dir)))
     assert "p_size" in pushed
 
 
 def test_order_priority_counts_filters_pushed(spark, sf_dir):
     """Both scans filtered at the source: the timestamp range on orders
     and the returnflag equality on lineitem."""
-    pushed = " ".join(pushed_filters(entrymod.q_order_priority_counts(spark, sf_dir)))
+    pushed = " ".join(pushed_filters(entrymod.queries()["order_priority_counts"](spark, sf_dir)))
     assert "o_orderdate" in pushed and "l_returnflag" in pushed
-    plan = explain_str(entrymod.q_order_priority_counts(spark, sf_dir))
+    plan = explain_str(entrymod.queries()["order_priority_counts"](spark, sf_dir))
     assert "LeftSemi" in plan
 
 
 def test_corr_exact_single_exchange(spark, sf_dir):
     """All five sufficient statistics ride ONE shuffle (partial+final
     hash aggregate); nothing else exchanges."""
-    plan = explain_str(entrymod.q_corr_exact(spark, sf_dir), mode="simple")
+    plan = explain_str(entrymod.queries()["corr_exact"](spark, sf_dir), mode="simple")
     assert plan.count("Exchange") == 1, plan
     assert "HashAggregate" in plan
 
@@ -107,7 +107,7 @@ def test_corr_exact_single_exchange(spark, sf_dir):
 def test_revenue_cube_single_exchange(spark, sf_dir):
     """CUBE = Expand over grouping sets + one partial/final aggregate
     pair — one exchange total."""
-    plan = explain_str(entrymod.q_revenue_cube(spark, sf_dir), mode="simple")
+    plan = explain_str(entrymod.queries()["revenue_cube"](spark, sf_dir), mode="simple")
     assert "Expand" in plan
     assert plan.count("Exchange") == 1, plan
 
@@ -116,7 +116,7 @@ def test_user_value_trend_no_python(spark, sf_dir):
     """The exact OLS trend is expression-only: no Python evaluation
     nodes anywhere in the plan (the applyInPandas twin exists for
     unbounded group sizes, but the query path stays in codegen)."""
-    plan = explain_str(entrymod.q_user_value_trend(spark, sf_dir))
+    plan = explain_str(entrymod.queries()["user_value_trend"](spark, sf_dir))
     assert "InPandas" not in plan and "BatchEvalPython" not in plan
     assert "HashAggregate" in plan
 
@@ -124,14 +124,14 @@ def test_user_value_trend_no_python(spark, sf_dir):
 def test_stratified_sample_is_pure_map(spark, sf_dir):
     """Deterministic sampling adds ZERO shuffles — the filter streams
     through the scan; discarded rows never move."""
-    plan = explain_str(entrymod.q_doc_stratified_sample(spark, sf_dir), mode="simple")
+    plan = explain_str(entrymod.queries()["doc_stratified_sample"](spark, sf_dir), mode="simple")
     assert "Exchange" not in plan, plan
 
 
 def test_vocab_topk_no_global_sort(spark, sf_dir):
     """Top-50 tokens must be TakeOrderedAndProject (per-partition heap
     + driver merge), never a full global Sort of the vocabulary."""
-    plan = explain_str(entrymod.q_vocab_topk(spark, sf_dir))
+    plan = explain_str(entrymod.queries()["vocab_topk"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
     assert "Exchange rangepartitioning" not in plan
 
@@ -139,7 +139,7 @@ def test_vocab_topk_no_global_sort(spark, sf_dir):
 def test_doc_source_cap_no_window(spark, sf_dir):
     """The per-source quota rides the two-phase salted aggregate — no
     ranking window anywhere, so no single-task hot key."""
-    plan = explain_str(entrymod.q_doc_source_cap(spark, sf_dir))
+    plan = explain_str(entrymod.queries()["doc_source_cap"](spark, sf_dir))
     assert "Window" not in plan
     assert "ObjectHashAggregate" in plan or "SortAggregate" in plan
 
@@ -156,7 +156,7 @@ def test_no_row_python_udfs_in_any_query(all_query_plans):
 def test_shuffle_order_no_global_sort(spark, sf_dir):
     """The top-N of the seeded shuffle order must plan as
     TakeOrderedAndProject, never a full global Sort over the corpus."""
-    plan = explain_str(entrymod.q_doc_shuffle_order(spark, sf_dir))
+    plan = explain_str(entrymod.queries()["doc_shuffle_order"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
 
 
@@ -164,7 +164,7 @@ def test_market_share_all_broadcast_and_pushed(spark, sf_dir):
     """Q8-shaped 7-table join: every dimension joins as broadcast (no
     SortMergeJoin at fixture scale), the order-date range reaches the
     orders scan, and the part type filter reaches the part scan."""
-    df = entrymod.q_market_share(spark, sf_dir)
+    df = entrymod.queries()["market_share"](spark, sf_dir)
     plan = explain_str(df)
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 6
@@ -335,7 +335,7 @@ def test_no_percentile_buffers_in_quantile_queries(spark, sf_dir):
     remaining F.percentile sites are deliberate: q_price_quantiles
     documents the approx trade; q_sketch_stats needs the exact
     reference to validate the sketch.)"""
-    for q in (entrymod.q_price_outliers, entrymod.q_doc_length_winsor):
+    for q in (entrymod.queries()["price_outliers"], entrymod.queries()["doc_length_winsor"]):
         plan = explain_str(q(spark, sf_dir))
         assert "percentile" not in plan.lower(), (
             f"{q.__name__} plans a buffering percentile aggregate"
@@ -389,7 +389,7 @@ def test_group_sample_plans_window_group_limit(spark, sf_dir):
     """Per-group exact-k sampling must plan WindowGroupLimit (map-side
     per-group pruning before the exchange) — the measured winner over
     the two-phase aggregate for plain ranked top-k."""
-    plan = explain_str(entrymod.q_doc_group_sample(spark, sf_dir))
+    plan = explain_str(entrymod.queries()["doc_group_sample"](spark, sf_dir))
     assert "WindowGroupLimit" in plan
 
 
@@ -425,7 +425,7 @@ def test_aqe_converts_smj_to_broadcast_at_runtime(spark, sf_dir):
     join once runtime sizes come in under threshold. Asserted on the
     FINAL adaptive plan after execution — the machine-checked form of
     the PLANS.md claim."""
-    df = entrymod.q_allocation(spark, sf_dir)
+    df = entrymod.queries()["allocation"](spark, sf_dir)
     # collect() drives THIS Dataset's cached QueryExecution to its
     # final adaptive plan (count() would plan a separate query)
     df.collect()
@@ -524,7 +524,7 @@ def test_forecast_revenue_all_predicates_pushed(spark, sf_dir):
     """Q6: all three predicates (ship-date range, discount band,
     quantity cap) must reach the parquet scan, and the single global
     aggregate is the only exchange."""
-    df = entrymod.q_forecast_revenue(spark, sf_dir)
+    df = entrymod.queries()["forecast_revenue"](spark, sf_dir)
     pushed = " ".join(pushed_filters(df))
     assert "l_shipdate" in pushed
     assert "l_discount" in pushed

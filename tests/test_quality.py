@@ -64,9 +64,9 @@ def test_fk_orphans_counts_nulls(spark):
 def test_expectations_single_scan(spark, sf_dir):
     """All rules fold into ONE aggregate over ONE scan — no
     rule-per-pass re-reads."""
-    import __spark_entry__ as entrymod
+    from etl_spark_spark.sources import table
 
-    li = entrymod.table(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     plan = expectation_metrics(
         li, {"a": F.col("l_quantity") > 0, "b": F.col("l_discount") >= 0}
     )._jdf.queryExecution().executedPlan().toString()

@@ -222,7 +222,7 @@ def test_stock_balance_floor_matches_sequential_recurrence(spark, sf_dir):
     identity, so this pins it against an INDEPENDENT simulation)."""
     import __spark_entry__ as entrymod
 
-    rows = entrymod.q_stock_balance_floor(spark, sf_dir).collect()
+    rows = entrymod.queries()["stock_balance_floor"](spark, sf_dir).collect()
     by_supp = {}
     for r in rows:
         by_supp.setdefault(r["l_suppkey"], []).append((r["day"], r["net"], r["balance"]))

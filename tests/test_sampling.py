@@ -220,8 +220,8 @@ def test_training_prep_funnel_not_degenerate(spark, sf_dir):
     split must be populated."""
     import __spark_entry__ as entrymod
 
-    curated = entrymod.q_doc_curation(spark, sf_dir).count()
-    prep = entrymod.q_doc_training_prep(spark, sf_dir).toPandas()
+    curated = entrymod.queries()["doc_curation"](spark, sf_dir).count()
+    prep = entrymod.queries()["doc_training_prep"](spark, sf_dir).toPandas()
     assert len(prep) > 0.7 * curated
     assert set(prep["split"]) == {"train", "val", "test"}
     assert (prep.groupby(["split", "source"])["pack_offset"].min() == 0).all()
@@ -232,7 +232,7 @@ def test_group_split_is_leakage_safe(spark, sf_dir):
     split (no near-dup leakage across train/test via shared domains)."""
     import __spark_entry__ as entrymod
 
-    pdf = entrymod.q_doc_group_split(spark, sf_dir).toPandas()
+    pdf = entrymod.queries()["doc_group_split"](spark, sf_dir).toPandas()
     assert (pdf.groupby("source")["split"].nunique() == 1).all()
     assert pdf["n_docs"].sum() == table(spark, sf_dir, "documents").count()
 

@@ -432,6 +432,53 @@ def test_stream_quality_gate_routes_and_audits(spark, tmp_path):
     assert len(spark.read.parquet(met_p).collect()) == 2
 
 
+def test_stream_quality_gate_replay_writes_once(spark, tmp_path, monkeypatch):
+    """foreachBatch is at-least-once: a batch that fails after its good
+    and bad rows are written, before the checkpoint commits, is
+    replayed. The replay must rewrite that batch's rows, not append a
+    second copy."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    import etl_spark_spark.streaming.quality as Q
+    from etl_spark_spark.streaming.stream import read_events_stream
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_event_file(src, "a.parquet", [(1, 10, 5.0), (2, 20, -1.0)], 1_000)
+    _write_event_file(src, "b.parquet", [(3, 30, 2.0), (4, 40, -9.0)], 2_000)
+    good_p, bad_p, met_p = (
+        str(tmp_path / "good"), str(tmp_path / "bad"), str(tmp_path / "metrics"),
+    )
+
+    real_metrics = Q.expectation_metrics
+    calls = {"n": 0}
+
+    def crash_on_second_batch(batch_df, rules):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise RuntimeError("injected crash after the good/bad writes")
+        return real_metrics(batch_df, rules)
+
+    monkeypatch.setattr(Q, "expectation_metrics", crash_on_second_batch)
+
+    def drain(name):
+        Q.run_stream_quality_gate(
+            read_events_stream(spark, str(src), max_files_per_trigger=1),
+            {"value_nonneg": F.col("value") >= 0}, good_p, bad_p, met_p,
+            checkpoint_dir=str(tmp_path / "ckpt"), query_name=name,
+        )
+
+    with pytest.raises((StreamingQueryException, RuntimeError)):
+        drain("t_qgate_crash")
+    drain("t_qgate_replay")
+
+    good = spark.read.parquet(good_p).collect()
+    assert sorted(r.event_id for r in good) == [1, 3]
+    assert len(spark.read.parquet(bad_p).collect()) == 2
+    assert len(spark.read.parquet(met_p).collect()) == 2
+
+
 def test_stream_near_dup_matches_one_shot(spark, sf_dir, tmp_path):
     """availableNow streaming ingestion through run_stream_near_dup
     (one file per micro-batch, mtime-ordered) must keep exactly the

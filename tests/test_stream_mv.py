@@ -88,6 +88,27 @@ def test_replay_is_fenced_and_crash_rewrite_recovers(spark, sf_dir, tmp_path):
     assert _rollup_dict(read_stream_rollup(spark, state)) == want
 
 
+def test_rollup_keeps_two_versions(spark, sf_dir, tmp_path):
+    """Each fold deletes the versions below its committed predecessor:
+    after five batches only agg_v3 and agg_v4 remain, and the rollup
+    still equals the batch snapshot over all five."""
+    from etl_spark_spark.sources import read_events
+
+    ev = read_events(spark, sf_dir, with_ts=False).select(
+        "event_type", "value"
+    )
+    part = F.pmod(F.xxhash64("event_type", "value"), F.lit(5))
+    state = str(tmp_path / "state")
+    for b in range(5):
+        apply_stream_batch(ev.filter(part == b), b, KEYS, MEASURES, state)
+    versions = sorted(
+        p.name for p in Path(state).iterdir() if p.name.startswith("agg_v")
+    )
+    assert versions == ["agg_v3", "agg_v4"]
+    got = _rollup_dict(read_stream_rollup(spark, state))
+    assert got == _rollup_dict(agg_snapshot(ev, KEYS, MEASURES))
+
+
 def test_join_view_fold_equals_batch_join_and_replay_is_idempotent(
     spark, sf_dir, tmp_path
 ):
